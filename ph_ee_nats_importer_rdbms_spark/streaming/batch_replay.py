@@ -179,26 +179,19 @@ def _event_order() -> tuple:
     )
 
 
-def _fold_sorted_groups(
-    df: DataFrame,
-    key_col: str,
-    fold_records,
-    out_schema: T.StructType,
-) -> DataFrame:
-    """Run a per-key Python fold over ``df`` WITHOUT per-group Arrow
-    batches: hash-repartition by ``key_col``, sort each partition by
-    (key, timestamp, position), then one ``mapInPandas`` pass whose
-    batches hold MANY whole key groups (guide §4.2 — measured ~7x over
-    ``groupBy().applyInPandas``, which paid per-tiny-group Arrow + pandas
-    machinery for ~2 ms/group).
+def _same_key(a, b) -> bool:
+    """Key equality that also matches null to null: a null ``long`` key
+    reaches pandas as float64 NaN, and ``NaN == NaN`` is False."""
+    return a == b or (pd.isna(a) and pd.isna(b))
 
-    ``fold_records(key, records)`` sees one key's records in
-    :func:`_event_sort_key` order and returns output dicts. Groups can
+
+def _group_folder(key_col: str, fold_records, cols: list[str]):
+    """The ``mapInPandas`` body of :func:`_fold_sorted_groups`: folds
+    each whole key group of the (key-sorted) batches. Groups can
     straddle Arrow batch boundaries, so each batch's trailing group is
-    carried into the next batch (object-equality on the key handles a
-    null key group, which Spark hashes to one partition like any other
+    carried into the next batch (:func:`_same_key` keeps a null-key
+    group whole: Spark hashes it to one partition like any other
     value)."""
-    cols = [f.name for f in out_schema.fields]
 
     def run(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         def fold(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -224,7 +217,7 @@ def _fold_sorted_groups(
             keys = pdf[key_col].to_numpy(dtype=object).tolist()
             last = keys[-1]
             cut = len(keys)
-            while cut > 0 and keys[cut - 1] == last:
+            while cut > 0 and _same_key(keys[cut - 1], last):
                 cut -= 1
             carry = pdf.iloc[cut:]
             if cut:
@@ -232,13 +225,35 @@ def _fold_sorted_groups(
         if carry is not None and len(carry):
             yield fold(carry)
 
+    return run
+
+
+def _fold_sorted_groups(
+    df: DataFrame,
+    key_col: str,
+    fold_records,
+    out_schema: T.StructType,
+) -> DataFrame:
+    """Run a per-key Python fold over ``df`` WITHOUT per-group Arrow
+    batches: hash-repartition by ``key_col``, sort each partition by
+    (key, timestamp, position), then one ``mapInPandas`` pass whose
+    batches hold MANY whole key groups (guide §4.2 — measured ~7x over
+    ``groupBy().applyInPandas``, which paid per-tiny-group Arrow + pandas
+    machinery for ~2 ms/group).
+
+    ``fold_records(key, records)`` sees one key's records in
+    :func:`_event_sort_key` order and returns output dicts (see
+    :func:`_group_folder`)."""
+    cols = [f.name for f in out_schema.fields]
     # no explicit partition count: spark.sql.shuffle.partitions governs
     # (scale-adaptive — sized by conf/env like every other shuffle, and
     # AQE coalesces the excess on small corpora)
     ordered = df.repartition(F.col(key_col)).sortWithinPartitions(
         F.col(key_col), *_event_order()
     )
-    return ordered.mapInPandas(run, out_schema)
+    return ordered.mapInPandas(
+        _group_folder(key_col, fold_records, cols), out_schema
+    )
 
 
 def _first_truthy_order() -> list:

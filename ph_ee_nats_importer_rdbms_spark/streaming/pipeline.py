@@ -401,7 +401,6 @@ def run_multi_hop(
     state_store: str | None = None,
     events: DataFrame | None = None,
     state_ttl_minutes: float | None = None,
-    engine: str = "applyinpandas",
     hop_timings: dict | None = None,
 ) -> dict[str, str]:
     """Run the 3-hop pipeline over ``source_dir``; returns output paths.
@@ -419,40 +418,10 @@ def run_multi_hop(
     eviction improvement to all three stateful hops (see each stage's
     docstring); None = reference parity (unbounded state).
 
-    ``engine`` selects the stateful-stage implementation:
-    ``"applyinpandas"`` (default — one serialized state blob per key) or
-    ``"tws"`` (transformWithStateInPandas — typed ValueState/MapState/
-    ListState per key, streaming/tws.py; parity pinned per stage by
-    tests/test_tws_resolve.py). TWS needs multiple column families, which
-    only the RocksDB provider supports, so ``state_store=None`` is
-    promoted to ``"rocksdb"`` there; the TTL improvement is not
-    implemented on the TWS stages (pass ``state_ttl_minutes=None``).
-
     ``hop_timings`` (optional dict) accumulates wall seconds per hop
     (``resolve``/``rekey``/``entity``, += so multi-wave callers fold) —
     the ingest throughput bench's per-hop attribution
     (tools/bench_ingest.py)."""
-    if engine not in ("applyinpandas", "tws"):
-        raise ValueError(
-            f"engine must be applyinpandas|tws, got {engine!r}"
-        )
-    if engine == "tws":
-        if state_ttl_minutes is not None:
-            raise ValueError(
-                "state_ttl_minutes is not implemented on the tws engine "
-                "(timers are an applyInPandasWithState feature here)"
-            )
-        if state_store is None:
-            state_store = "rocksdb"
-        from ph_ee_nats_importer_rdbms_spark.streaming import tws as _tws
-
-        resolve_fn = lambda df, _ttl: _tws.resolve_stage_tws(  # noqa: E731
-            df, output_schema=FLAT_SCHEMA
-        )
-        rekey_fn = lambda df, _ttl: _tws.rekey_stage_tws(df)  # noqa: E731
-        entity_fn = lambda df, _ttl: _tws.entity_stage_tws(df)  # noqa: E731
-    else:
-        resolve_fn, rekey_fn, entity_fn = resolve_stage, rekey_stage, entity_stage
     if state_store is not None:
         configure_state_store(spark, state_store)
     paths = {
@@ -486,7 +455,7 @@ def run_multi_hop(
     timed(
         "resolve",
         lambda: start(
-            resolve_fn(source, state_ttl_minutes), "resolved"
+            resolve_stage(source, state_ttl_minutes), "resolved"
         ).awaitTermination(),
     )
 
@@ -494,7 +463,7 @@ def run_multi_hop(
     timed(
         "rekey",
         lambda: start(
-            rekey_fn(
+            rekey_stage(
                 with_routing(resolved, registry, resolve_definitions=False),
                 state_ttl_minutes,
             ),
@@ -506,7 +475,7 @@ def run_multi_hop(
     timed(
         "entity",
         lambda: start(
-            entity_fn(rekeyed, state_ttl_minutes), "changes"
+            entity_stage(rekeyed, state_ttl_minutes), "changes"
         ).awaitTermination(),
     )
     return paths
@@ -560,7 +529,6 @@ def run_deployment(
     state_store: str | None = None,
     distributed: bool = True,
     dialect: str = "mysql",
-    engine: str = "applyinpandas",
 ) -> dict[str, str]:
     """The full deployed topology in one call — what a user of the
     reference runs instead of the Spring Boot importer:
@@ -577,8 +545,7 @@ def run_deployment(
     changes_foreach_batch): the default is the DISTRIBUTED writer — rows
     never traverse the driver — which requires a picklable executor;
     pass ``distributed=False`` for the driver-collect topology (small
-    deployments, py4j ``jvm_executor``). ``engine="tws"`` runs the three
-    stateful hops on transformWithStateInPandas (see run_multi_hop).
+    deployments, py4j ``jvm_executor``).
     Every hop and the sink query are independently checkpointed under
     ``work_dir`` — restart resumes with exactly-once delivery into the
     idempotent MERGE."""
@@ -603,7 +570,6 @@ def run_deployment(
         max_files_per_trigger=max_files_per_trigger,
         state_store=state_store,
         events=events,
-        engine=engine,
     )
 
     changes = spark.readStream.schema(CHANGES_SCHEMA).parquet(paths["changes"])

@@ -3,15 +3,16 @@ import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
+# Set at import time, BEFORE any Spark JVM starts: Python workers inherit
+# PYTHONPATH, and need the repo root on it to import the package whatever
+# the working directory of the test run.
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    [_ROOT] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+)
 
 from ph_ee_nats_importer_rdbms_spark.session import build_session  # noqa: E402
-from tests.protobuf_compat import ensure_protobuf  # noqa: E402
-
-# Must run at import time, BEFORE any Spark JVM starts: the shim path has
-# to reach PYTHONPATH so transformWithStateInPandas python workers can
-# import the state protocol's protobuf runtime (tests/protobuf_compat.py).
-ensure_protobuf()
 
 
 @pytest.fixture(scope="session")

@@ -133,6 +133,34 @@ def test_entity_mapper_interpretation_matches_condition_gates():
     assert "payer_fee" not in st.entity
 
 
+def test_fold_carries_null_key_group_across_arrow_batches():
+    """A null ``long`` key reaches the native replay's mapInPandas fold as
+    float64 NaN. A null-key group split across two Arrow batches must
+    still be folded once, as one group (pure pandas, no Spark)."""
+    import pandas as pd
+
+    from ph_ee_nats_importer_rdbms_spark.streaming.batch_replay import (
+        _group_folder,
+    )
+
+    def fold_records(key, records):
+        return [{"k": key, "n": len(records)}]
+
+    run = _group_folder("k", fold_records, ["k", "n"])
+    nan = float("nan")
+    # Spark sorts nulls first, so the null group leads the partition
+    batches = [
+        pd.DataFrame({"k": [nan, nan], "ts": [1, 2]}),
+        pd.DataFrame({"k": [nan, 5.0], "ts": [3, 4]}),
+    ]
+    got = [
+        (None if pd.isna(k) else k, n)
+        for out in run(iter(batches))
+        for k, n in zip(out["k"], out["n"])
+    ]
+    assert got == [(None, 3), (5.0, 1)]
+
+
 # ---------------------------------------------------------------------------
 # End-to-end multi-hop streaming vs batch pipeline
 # ---------------------------------------------------------------------------

@@ -15,13 +15,13 @@ envelopes/second with per-hop attribution:
 
 Knobs: ``--partitions`` (spark.sql.shuffle.partitions — the state-store
 shard count of the three stateful hops; comma list sweeps it),
-``--transport file|wire``, ``--engine applyinpandas|tws``. Each run
-uses a fresh work dir (state shards are fixed at first checkpoint, so
-a sweep must not reuse checkpoints).
+``--transport file|wire``. Each run uses a fresh work dir (state
+shards are fixed at first checkpoint, so a sweep must not reuse
+checkpoints).
 
 Prints one JSON line per run:
   {"metric": "ingest_env_per_sec", "transport": ..., "partitions": N,
-   "engine": ..., "envelopes": N, "pipeline_sec": s, "eps": N,
+   "envelopes": N, "pipeline_sec": s, "eps": N,
    "hops": {"source": s, "resolve": s, "rekey": s, "entity": s,
             "sink": s}, "sf": ...}
 ``pipeline_sec``/``eps`` cover resolve+rekey+entity+sink (the engine's
@@ -70,7 +70,7 @@ def _sink(spark, changes_path: str, out_root: str) -> float:
     return time.perf_counter() - t0
 
 
-def run_file(spark, sf_dir, work, partitions, engine, chunks) -> dict:
+def run_file(spark, sf_dir, work, partitions, chunks) -> dict:
     flat, n = _flat_corpus(spark, sf_dir)
     src = os.path.join(work, "source")
     t0 = time.perf_counter()
@@ -84,7 +84,6 @@ def run_file(spark, sf_dir, work, partitions, engine, chunks) -> dict:
         os.path.join(work, "work"),
         available_now=True,
         max_files_per_trigger=1,
-        engine=engine,
         hop_timings=hops,
     )
     hops["sink"] = _sink(spark, paths["changes"], os.path.join(work, "tables"))
@@ -92,7 +91,7 @@ def run_file(spark, sf_dir, work, partitions, engine, chunks) -> dict:
     return {"envelopes": n, "hops": hops}
 
 
-def run_wire(spark, sf_dir, work, partitions, engine, waves) -> dict:
+def run_wire(spark, sf_dir, work, partitions, waves) -> dict:
     from tests.nats_mini_server import MiniNatsServer
 
     flat, n = _flat_corpus(spark, sf_dir)
@@ -119,7 +118,6 @@ def run_wire(spark, sf_dir, work, partitions, engine, waves) -> dict:
                 os.path.join(work, "work"),
                 available_now=True,
                 events=events,
-                engine=engine,
                 hop_timings=hops,
             )
             # per-wave drain time: wave 1 is a cold topology, wave 2+ a
@@ -136,21 +134,9 @@ def main() -> int:
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     ap.add_argument("--transport", default="file", choices=["file", "wire"])
     ap.add_argument("--partitions", default="32")
-    ap.add_argument("--engine", default="applyinpandas")
     ap.add_argument("--chunks", type=int, default=replay.REPLAY_CHUNKS)
     ap.add_argument("--waves", type=int, default=replay.WIRE_WAVES)
     args = ap.parse_args()
-
-    if args.engine == "tws":
-        # transformWithStateInPandas workers speak protobuf to the JVM
-        # state server; on this container that runtime comes from the
-        # test shim, which must reach PYTHONPATH before the JVM launches
-        try:
-            from tests.protobuf_compat import ensure_protobuf
-
-            ensure_protobuf()
-        except ImportError:
-            pass  # real protobuf install (or the run fails loudly below)
 
     spark = build_session(
         app_name="ph-ee-spark-ingest-bench",
@@ -161,9 +147,9 @@ def main() -> int:
         work = tempfile.mkdtemp(prefix=f"ingest_{args.transport}_{p}_")
         try:
             if args.transport == "file":
-                r = run_file(spark, args.sf, work, p, args.engine, args.chunks)
+                r = run_file(spark, args.sf, work, p, args.chunks)
             else:
-                r = run_wire(spark, args.sf, work, p, args.engine, args.waves)
+                r = run_wire(spark, args.sf, work, p, args.waves)
         finally:
             shutil.rmtree(work, ignore_errors=True)
         hops = {k: round(v, 2) for k, v in r["hops"].items()}
@@ -176,7 +162,6 @@ def main() -> int:
                     "metric": "ingest_env_per_sec",
                     "transport": args.transport,
                     "partitions": p,
-                    "engine": args.engine,
                     "envelopes": r["envelopes"],
                     "pipeline_sec": pipeline_sec,
                     "eps": round(r["envelopes"] / pipeline_sec),
