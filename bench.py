@@ -49,11 +49,14 @@ _LOCAL_REF = os.path.join(_HERE, "BENCH_LOCAL_LATEST.json")
 
 
 def _previous_round_warm(sf: str) -> dict[str, float]:
-    """Per-query warm timings of the previous sweep at this sf: the
-    self-maintained full-detail reference when present, else whatever
-    name/seconds pairs survive in the newest BENCH_r*.json's truncated
-    tail. Missing or unparseable references mean no adjudication (first
-    round, renamed entries), never a bench failure."""
+    """Per-query warm timings of the previous sweep at this sf and core
+    count: the self-maintained full-detail reference when present, else
+    whatever name/seconds pairs survive in the newest BENCH_r*.json's
+    truncated tail. A reference recorded on another ``cpus`` than this
+    run's ``SPARK_GRAFT_CPUS`` is not comparable (an 8-core warm time is
+    no baseline for a 32-core one). Missing, unparseable or incomparable
+    references mean no adjudication (first round, renamed entries),
+    never a bench failure."""
     import glob
     import re
 
@@ -66,10 +69,19 @@ def _previous_round_warm(sf: str) -> dict[str, float]:
         except (TypeError, ValueError):
             return str(recorded) == str(sf)
 
+    def _cores(recorded) -> str:
+        # unset means build_session's default core count
+        return str(recorded if recorded is not None else "").strip() or "32"
+
+    cpus = _cores(os.environ.get("SPARK_GRAFT_CPUS"))
+
+    def _comparable(rec: dict) -> bool:
+        return _same_sf(rec.get("sf")) and _cores(rec.get("cpus")) == cpus
+
     try:
         with open(_LOCAL_REF) as f:
             ref = json.load(f)
-        if _same_sf(ref.get("sf")):
+        if _comparable(ref):
             return {
                 k: float(v)
                 for k, v in ref.get("queries", {}).items()
@@ -87,7 +99,7 @@ def _previous_round_warm(sf: str) -> dict[str, float]:
     try:
         with open(best) as f:
             rec = json.load(f)
-        if not _same_sf(rec.get("sf")):
+        if not _comparable(rec):
             return {}
         pairs = re.findall(r'"([a-z0-9_]+)":\s*([0-9.]+)', rec.get("tail", ""))
         return {k: float(v) for k, v in pairs}

@@ -15,6 +15,9 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import types as T
+
+from ph_ee_nats_importer_rdbms_spark.sources.files import local_rel
 
 TRANSFER_TYPE = "TRANSFER"
 TRANSACTION_REQUEST_TYPE = "TRANSACTION-REQUEST"
@@ -42,6 +45,14 @@ DEFAULT_PROCESS_REGISTRY: dict[str, tuple[str, str]] = {
 }
 
 
+_REGISTRY_SCHEMA = T.StructType(
+    [
+        T.StructField(name, T.StringType())
+        for name in ("process_id", "process_type", "process_direction")
+    ]
+)
+
+
 @dataclass(frozen=True)
 class BpmnProcess:
     """config/BpmnProcess.java — id + type + direction."""
@@ -67,10 +78,10 @@ def registry_df(
     registry: dict[str, tuple[str, str]] | None = None,
 ) -> DataFrame:
     """The registry as a broadcastable dimension DataFrame
-    (process_id, process_type, process_direction)."""
+    (process_id, process_type, process_direction), planned as a
+    driver-local relation: broadcasting it starts no Python worker job,
+    unlike a Python-RDD-backed ``createDataFrame(list)``."""
     registry = DEFAULT_PROCESS_REGISTRY if registry is None else registry
     rows = [(pid, t, d) for pid, (t, d) in sorted(registry.items())]
-    df = spark.createDataFrame(
-        rows, "process_id string, process_type string, process_direction string"
-    )
+    df = local_rel(spark, rows, _REGISTRY_SCHEMA)
     return F.broadcast(df)

@@ -321,11 +321,12 @@ def _q_tasks_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_transfers_streaming_wire(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The transfers table materialized by the streaming engine fed
-    through the NATS WIRE SOURCE (format("nats") / transport=wire over
-    real TCP against the in-repo protocol double) — extends the oracle
-    gate over the source adapter itself (VERDICT r9 task #7); the file
-    bridge is pinned untouched by tests/test_streaming_replay.py."""
+    """The transfers table materialized by the streaming semantics fed
+    through the NATS wire transport and the landing (sources/nats_source
+    .land, transport=wire over real TCP against the in-repo protocol
+    double) — extends the oracle gate over the source adapter itself
+    (VERDICT r9 task #7); the file bridge is pinned untouched by
+    tests/test_streaming_replay.py."""
     from ph_ee_nats_importer_rdbms_spark.streaming import replay
 
     return _project_transfers(
@@ -1208,8 +1209,8 @@ _QUERY_DEFS: dict[str, tuple[QueryFn, str | None]] = {
         synthetic.VARIABLES_ORACLE,
     ),
     "zeebe_tasks_streaming": (_q_tasks_streaming, synthetic.TASKS_ORACLE),
-    # the NATS wire source as the ingestion edge (r10): same oracle,
-    # events consumed via format("nats")/transport=wire — no file bridge
+    # the NATS wire transport as the ingestion edge (r10): same oracle,
+    # events landed via nats_source.land/transport=wire — no file bridge
     "zeebe_transfers_streaming_wire": (
         _q_transfers_streaming_wire,
         synthetic.TRANSFERS_ORACLE,

@@ -1,19 +1,18 @@
-"""NATS ingestion, bridge flavor (SURVEY §2.1 S1): the ``zeebe-export``
-subject bridged into Structured Streaming through a file drop.
+"""NATS ingestion, bridge flavor (SURVEY §2.1 S1) for core NATS: the
+``zeebe-export`` subject bridged into Structured Streaming through a file
+drop.
 
-Two S1 implementations exist; pick per deployment:
-
-- ``sources/nats_source.py`` — native ``spark.readStream.format("nats")``
-  (Python Data Source API) against NATS **JetStream**, offsets = stream
-  sequences, replayable/exactly-once-capable. Preferred when the subject is
-  on a JetStream-enabled server.
-- this module — a tiny bridge process appends every core-NATS message to
-  rotating JSON-lines files, and the pipeline tails the directory with the
-  file stream source (streaming/pipeline.read_raw_stream). The file hop
-  adds a durable replayable log in front of an otherwise at-most-once feed
-  — strictly more reliable than the reference's direct in-process
-  subscription, which loses messages on crash (NatsConsumer.java:34-35 has
-  no ack/replay).
+The deployment's NATS path is JetStream -> landing -> file source
+(sources/nats_source.py): the driver lands stream-sequence ranges as
+parquet files and the hops read them with the file stream source. This
+module is the fallback for a subject on a server WITHOUT JetStream, where
+no sequence exists to resume from: a tiny bridge process appends every
+core-NATS message to rotating JSON-lines files, and the pipeline tails the
+directory with the file stream source (streaming/pipeline.read_raw_stream).
+The file hop adds a durable replayable log in front of an otherwise
+at-most-once feed — strictly more reliable than the reference's direct
+in-process subscription, which loses messages on crash
+(NatsConsumer.java:34-35 has no ack/replay).
 
 The NATS client library is not installed in this container, so connecting
 is gated behind an import-try; everything else (rotation, flush cadence,

@@ -5,9 +5,10 @@ Each stage keys on a different column, and chaining arbitrary stateful
 operators inside one streaming query is not supported — so the pipeline is
 a standard multi-hop (bronze→silver→gold) DAG: every hop is its own
 checkpointed streaming query writing parquet, giving per-hop exactly-once
-and independent scaling. With ``availableNow`` triggers the same topology
-runs as an incremental batch (used by the tests); in production the hops
-run continuously.
+and independent scaling. Every hop runs with an ``availableNow`` trigger:
+one call drains what has arrived since the last one, then stops. A
+deployment is a loop of :func:`run_deployment` drains; each resumes from
+the hops' checkpoints.
 
 Scale notes: state lives in the Spark state store (RocksDB provider on a
 real cluster — set ``spark.sql.streaming.stateStore.providerClass``), hash
@@ -35,6 +36,7 @@ from ph_ee_nats_importer_rdbms_spark.operators.classify import (
     parse_envelope,
     with_routing,
 )
+from ph_ee_nats_importer_rdbms_spark.sources.nats_source import NATS_SCHEMA, land
 from ph_ee_nats_importer_rdbms_spark.streaming import state as sm
 
 # Hop schemas and the per-group row helpers define replay SEMANTICS, so
@@ -373,22 +375,17 @@ def read_raw_stream(
     )
 
 
-def read_raw_nats_stream(spark: SparkSession, **options: str) -> DataFrame:
-    """Raw Zeebe envelope stream straight off NATS JetStream via the native
-    ``format("nats")`` source (sources/nats_source.py) — no file bridge.
-    Options pass through (``servers``, ``subject``, ``stream``,
-    ``max_rows_per_trigger``, or ``transport=file``+``path`` for captured
-    replays). Interchangeable with read_raw_stream: both yield the parsed
-    flat event relation."""
-    from ph_ee_nats_importer_rdbms_spark.sources.nats_source import (
-        register_nats_source,
+def read_landed_stream(spark: SparkSession, landing_dir: str) -> DataFrame:
+    """Raw Zeebe envelopes landed from NATS JetStream
+    (sources/nats_source.land), as a file stream of the landed parquet
+    files, parsed. Interchangeable with read_raw_stream: both yield the
+    parsed flat event relation. The files not yet consumed form one
+    micro-batch; ``max_rows_per_trigger`` on the landing bounds it."""
+    return (
+        spark.readStream.schema(NATS_SCHEMA)
+        .parquet(landing_dir)
+        .transform(parse_envelope)
     )
-
-    register_nats_source(spark)
-    reader = spark.readStream.format("nats")
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.load().transform(parse_envelope)
 
 
 def run_multi_hop(
@@ -396,7 +393,6 @@ def run_multi_hop(
     source_dir: str,
     work_dir: str,
     registry: DataFrame | None = None,
-    available_now: bool = True,
     max_files_per_trigger: int = 64,
     state_store: str | None = None,
     events: DataFrame | None = None,
@@ -413,7 +409,7 @@ def run_multi_hop(
     ``state_store='rocksdb'`` switches the three stateful hops onto the
     RocksDB provider (see :func:`configure_state_store`); None keeps the
     session's current setting. ``events`` overrides the hop-1 input with an
-    already-built flat event stream (e.g. read_raw_nats_stream) — then
+    already-built flat event stream (e.g. read_landed_stream) — then
     ``source_dir`` is ignored. ``state_ttl_minutes`` applies the documented
     eviction improvement to all three stateful hops (see each stage's
     docstring); None = reference parity (unbounded state).
@@ -429,15 +425,14 @@ def run_multi_hop(
     }
 
     def start(df: DataFrame, name: str):
-        w = (
+        return (
             df.writeStream.format("parquet")
             .option("path", paths[name])
             .option("checkpointLocation", os.path.join(work_dir, f"ckpt_{name}"))
             .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
         )
-        if available_now:
-            w = w.trigger(availableNow=True)
-        return w.start()
 
     def timed(hop: str, run):
         t0 = time.perf_counter()
@@ -524,7 +519,6 @@ def run_deployment(
     source_dir: str | None = None,
     nats_options: dict[str, str] | None = None,
     registry: DataFrame | None = None,
-    available_now: bool = True,
     max_files_per_trigger: int = 64,
     state_store: str | None = None,
     distributed: bool = True,
@@ -533,9 +527,15 @@ def run_deployment(
     """The full deployed topology in one call — what a user of the
     reference runs instead of the Spring Boot importer:
 
-        NATS (native source, or file-drop bridge dir) -> resolve -> route/
-        rekey -> entity state machine -> change log -> per-tenant JDBC
+        NATS JetStream -> landing (sources/nats_source.land) -> file
+        source, or a file-drop bridge dir -> resolve -> route/rekey ->
+        entity state machine -> change log -> per-tenant JDBC
         MERGE/append (sinks/jdbc.changes_foreach_batch).
+
+    One call is one drain: with ``nats_options`` it first lands the
+    stream's new sequences into ``<work_dir>/landing`` on the driver, then
+    every hop and the sink run to the end of their input and stop. A
+    deployment calls this in a loop.
 
     ``resolve_url`` maps tenant -> JDBC url (sinks/jdbc.tenant_url_resolver
     over the master tenant_server_connections table); ``executor`` runs
@@ -546,34 +546,33 @@ def run_deployment(
     never traverse the driver — which requires a picklable executor;
     pass ``distributed=False`` for the driver-collect topology (small
     deployments, py4j ``jvm_executor``).
-    Every hop and the sink query are independently checkpointed under
-    ``work_dir`` — restart resumes with exactly-once delivery into the
-    idempotent MERGE."""
+    The landing files and every hop and the sink query are checkpointed
+    under ``work_dir`` — restart resumes with exactly-once delivery into
+    the idempotent MERGE."""
     from ph_ee_nats_importer_rdbms_spark.sinks.jdbc import changes_foreach_batch
 
     if source_dir is None and nats_options is None:
         raise ValueError(
             "run_deployment needs an ingestion source: pass source_dir "
-            "(file-drop bridge directory) or nats_options (native NATS source)"
+            "(file-drop bridge directory) or nats_options (NATS JetStream)"
         )
-    events = (
-        read_raw_nats_stream(spark, **nats_options)
-        if nats_options is not None
-        else None
-    )
+    events = None
+    if nats_options is not None:
+        landing = os.path.join(work_dir, "landing")
+        land(nats_options, landing)
+        events = read_landed_stream(spark, landing)
     paths = run_multi_hop(
         spark,
         source_dir or "",
         work_dir,
         registry=registry,
-        available_now=available_now,
         max_files_per_trigger=max_files_per_trigger,
         state_store=state_store,
         events=events,
     )
 
     changes = spark.readStream.schema(CHANGES_SCHEMA).parquet(paths["changes"])
-    sink = (
+    (
         changes.writeStream.foreachBatch(
             changes_foreach_batch(
                 resolve_url, executor, distributed=distributed, dialect=dialect
@@ -581,9 +580,8 @@ def run_deployment(
         )
         .option("checkpointLocation", os.path.join(work_dir, "ckpt_jdbc"))
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
     )
-    if available_now:
-        sink = sink.trigger(availableNow=True)
-    q = sink.start()
-    q.awaitTermination()
     return paths

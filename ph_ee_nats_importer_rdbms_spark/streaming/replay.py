@@ -11,8 +11,9 @@ native rekey with Python only on the linked slice, native D1/D2 dedup
 with Python only on the entity-snapshot fold) -> the five tables, typed
 to the batch sink schemas (schemas.py) and staged once per (dataset,
 code) fingerprint. The wire form (:func:`_build_wire`) swaps the
-envelope round trip for a real publish -> ``format("nats")`` ingest
-over the in-repo NATS protocol double, then runs the same fixed point.
+envelope round trip for a real publish over the in-repo NATS protocol
+double and the deployment's landing (sources/nats_source.land), then
+runs the same fixed point.
 
 The 3-hop Structured Streaming topology (streaming/pipeline.run_multi_hop)
 is NOT on the staging path. Its agreement with the native fixed point is
@@ -200,9 +201,7 @@ def _build_streaming(spark: SparkSession, sf_dir: str, root: str) -> None:
     src_dir = os.path.join(root, "source")
     work_dir = os.path.join(root, "work")
     write_ordered_chunks(flat, src_dir)
-    paths = sp.run_multi_hop(
-        spark, src_dir, work_dir, available_now=True, max_files_per_trigger=1
-    )
+    paths = sp.run_multi_hop(spark, src_dir, work_dir, max_files_per_trigger=1)
     tables = sp.materialize_tables(spark, paths["changes"])
     for name in _ENTITY_SCHEMAS:
         tables[name] = _typed_entity(tables[name], _ENTITY_SCHEMAS[name])
@@ -211,11 +210,9 @@ def _build_streaming(spark: SparkSession, sf_dir: str, root: str) -> None:
     shutil.rmtree(work_dir, ignore_errors=True)
 
 
-#: publish/drain waves for the wire replay — each wave restarts the
-#: topology against the broker's new tail, so keyed state provably
-#: carries across runs through the checkpoints (the deployed restart
-#: path). Two waves prove the handoff; the per-wave cost is 3 query
-#: startups, so this stays a staging-time constant.
+#: publish/land waves for the wire replay — each wave lands the broker's
+#: new tail after the sequences the previous wave landed (the deployed
+#: restart path of the landing). Two waves prove the resume.
 WIRE_WAVES = 2
 
 
@@ -244,20 +241,20 @@ def _build_wire(spark: SparkSession, sf_dir: str, root: str) -> None:
     """The replay build with the WIRE TRANSPORT as the ingestion edge
     (VERDICT r9 task #7): raw envelopes are PUBLISHED to a NATS broker
     (the in-repo protocol double — real TCP, real JetStream API shapes;
-    no broker binary exists in this environment) and the ingest hop
-    consumes them via ``format("nats")``/``transport=wire`` — the
-    deployed source adapter (sources/nats_source.py + nats_wire.py), not
-    the file bridge. Delivery happens in ``WIRE_WAVES`` publish→drain
-    waves against one set of checkpoints, exercising the
-    checkpointed-restart resume of the source (each wave's availableNow
-    run starts from the previously committed stream sequence). The
-    stateful hops then run as the native batch fixed point over the
-    ingested corpus (r14 — see :func:`_build`; what THIS gate certifies
-    is the wire adapter on the event path, which is unchanged)."""
+    no broker binary exists in this environment) and drained with the
+    deployment's own ingest step, :func:`sources.nats_source.land` over
+    ``transport=wire`` (nats_source.py + nats_wire.py), not the file
+    bridge. Delivery happens in ``WIRE_WAVES`` publish→land waves into one
+    landing directory: each wave resumes after the highest sequence the
+    previous one landed. The landed parquet files are then parsed and the
+    stateful hops run as the native batch fixed point over the ingested
+    corpus (r14 — see :func:`_build`; what THIS gate certifies is the
+    wire adapter on the event path)."""
     from ph_ee_nats_importer_rdbms_spark.operators.classify import parse_envelope
     from ph_ee_nats_importer_rdbms_spark.plans.queries import flat_events_staged
     from ph_ee_nats_importer_rdbms_spark.sources.nats_source import (
-        register_nats_source,
+        NATS_SCHEMA,
+        land,
     )
     from ph_ee_nats_importer_rdbms_spark.streaming import batch_replay as br
 
@@ -287,40 +284,20 @@ def _build_wire(spark: SparkSession, sf_dir: str, root: str) -> None:
         )
     if len(chunk_files) < WIRE_WAVES:
         # fewer part files than waves silently weakens the multi-wave
-        # checkpointed-restart coverage WIRE_WAVES documents — say so
+        # landing-resume coverage WIRE_WAVES documents — say so
         print(
             f"_build_wire: only {len(chunk_files)} of {WIRE_WAVES} "
-            "publish waves materialized (tiny corpus?) — restart "
+            "publish waves materialized (tiny corpus?) — landing resume "
             "coverage reduced",
             file=sys.stderr,
         )
-    ingested = os.path.join(work_dir, "ingested")
-    register_nats_source(spark)
+    landing = os.path.join(work_dir, "landing")
     with MiniNatsServer() as s:
+        options = {"transport": "wire", "servers": s.url, "stream": s.js.stream}
         for path in chunk_files:
             _publish_file(s.url, s.js.subject, path)
-            events = (
-                spark.readStream.format("nats")
-                .option("transport", "wire")
-                .option("servers", s.url)
-                .option("stream", s.js.stream)
-                .load()
-                .transform(parse_envelope)
-            )
-            q = (
-                events.writeStream.format("parquet")
-                .option("path", ingested)
-                .option(
-                    "checkpointLocation", os.path.join(work_dir, "ckpt_ingest")
-                )
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    from ph_ee_nats_importer_rdbms_spark.streaming.pipeline import FLAT_SCHEMA
-
-    corpus = spark.read.schema(FLAT_SCHEMA).parquet(ingested)
+            land(options, landing)
+    corpus = parse_envelope(spark.read.schema(NATS_SCHEMA).parquet(landing))
     tables = br.replay_tables(spark, corpus)
     _write_tables(tables, os.path.join(root, "tables"))
     shutil.rmtree(src_dir, ignore_errors=True)
@@ -331,10 +308,10 @@ def streaming_table_wire(
     spark: SparkSession, sf_dir: str, name: str
 ) -> DataFrame:
     """A business table built from envelopes ingested through the NATS
-    WIRE SOURCE (no file bridge anywhere on the event path — pinned by
-    test), then folded by ``batch_replay``'s native batch fixed point of
-    the three hops (see :func:`_build_wire`; the streaming topology does
-    not run here). Staged once per (dataset, code) fingerprint in its own
+    wire transport and the landing (no file bridge anywhere on the event
+    path — pinned by test), then folded by ``batch_replay``'s native
+    batch fixed point of the three hops (see :func:`_build_wire`; the
+    streaming topology does not run here). Staged once per (dataset, code) fingerprint in its own
     ``streamwire`` domain, which additionally keys the source adapter
     modules: an edit to nats_source.py/nats_wire.py rebuilds this
     artifact (the adapter is what this gate certifies) without

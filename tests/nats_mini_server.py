@@ -3,8 +3,8 @@
 TEST DOUBLE, not a broker: just enough of the PUBLIC NATS wire protocol
 (docs.nats.io/reference/reference-protocols/nats-protocol) and the
 JetStream JSON API to exercise sources/nats_wire.py and the ``wire``
-transport of the streaming source over real TCP sockets — including from
-the separate Python worker processes Spark runs datasource ``read()`` in.
+transport of the landing (sources/nats_source.land) over real TCP
+sockets.
 
 Implements, faithfully to a real nats-server's observable behavior:
 

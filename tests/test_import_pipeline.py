@@ -303,3 +303,22 @@ def test_tenant_split_on_first_dash(spark):
     # dash; faithful to the reference.
     assert r.process_id == "mpesa_flow"
     assert r.tenant == "paygops-tn03"
+
+
+def test_registry_df_is_a_local_relation(spark):
+    """The registry plans as a driver-local relation, not a Python-RDD
+    scan, so broadcasting it per micro-batch starts no Python job; rows
+    and types are the configured registry's."""
+    from ph_ee_nats_importer_rdbms_spark import config as cfg
+
+    df = cfg.registry_df(spark)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001
+    assert "LogicalRDD" not in plan, plan
+    assert df.dtypes == [
+        ("process_id", "string"),
+        ("process_type", "string"),
+        ("process_direction", "string"),
+    ]
+    assert sorted(tuple(r) for r in df.collect()) == sorted(
+        (pid, t, d) for pid, (t, d) in cfg.DEFAULT_PROCESS_REGISTRY.items()
+    )

@@ -1,9 +1,9 @@
-"""Opt-in live-broker integration test for the native NATS JetStream source.
+"""Opt-in live-broker integration test for the NATS JetStream landing.
 
 The CI container has neither a NATS server nor the ``nats-py`` client, so
-the source's JetStream transport (sources/nats_source.py:92-140) is
-otherwise exercised only through the file transport, which shares all the
-offset/partition/read/commit machinery but not the broker I/O
+the landing's JetStream transport (sources/nats_source._JetStreamTransport)
+is otherwise exercised only through the file transport, which shares the
+range/resume/write machinery of ``land`` but not the broker I/O
 (NatsConsumer.java:34-35 parity). This module closes that gap wherever a
 broker IS available:
 
@@ -66,11 +66,13 @@ def _publish(nats_mod, stream: str, subject: str, payloads: list[str]) -> None:
 
 
 def test_jetstream_offsets_and_restart_replay(spark, tmp_path):
-    """Sequences drive micro-batch offsets; a restart from the checkpoint
-    resumes at the committed sequence and re-delivers nothing."""
+    """Sequences drive the landed ranges; a restart resumes at the last
+    landed sequence, and the file stream's checkpoint re-delivers
+    nothing."""
     nats_mod = _connect_or_skip()
     from ph_ee_nats_importer_rdbms_spark.sources.nats_source import (
-        register_nats_source,
+        NATS_SCHEMA,
+        land,
     )
 
     stream = f"phee_test_{uuid.uuid4().hex[:8]}"
@@ -78,19 +80,22 @@ def test_jetstream_offsets_and_restart_replay(spark, tmp_path):
     first = [json.dumps({"n": i}) for i in range(100)]
     _publish(nats_mod, stream, subject, first)
 
-    register_nats_source(spark)
+    landing = str(tmp_path / "landing")
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
+    options = {
+        "transport": "jetstream",
+        "servers": _SERVERS,
+        "stream": stream,
+        "subject": subject,
+        "partition_target_rows": 16,
+    }
 
     def run_batch():
+        land(options, landing)
         q = (
-            spark.readStream.format("nats")
-            .option("transport", "jetstream")
-            .option("servers", _SERVERS)
-            .option("stream", stream)
-            .option("subject", subject)
-            .option("partition_target_rows", 16)
-            .load()
+            spark.readStream.schema(NATS_SCHEMA)
+            .parquet(landing)
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)

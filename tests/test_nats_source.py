@@ -1,17 +1,17 @@
-"""Native NATS streaming source (sources/nats_source.py): offset math unit
-tests + an end-to-end readStream drive over the file transport."""
+"""NATS JetStream landing (sources/nats_source.land): range chunking,
+resume, admission and crash safety over the file transport, plus an
+end-to-end file stream over the landed files."""
 
 from __future__ import annotations
 
 import json
+import os
 
+import pyarrow.parquet as pq
 import pytest
 
-from ph_ee_nats_importer_rdbms_spark.sources.nats_source import (
-    NatsStreamReader,
-    SeqRange,
-    register_nats_source,
-)
+from ph_ee_nats_importer_rdbms_spark.sources import nats_source
+from ph_ee_nats_importer_rdbms_spark.sources.nats_source import NATS_SCHEMA, land
 
 
 def _write_stream(tmp_path, n: int) -> str:
@@ -24,53 +24,99 @@ def _write_stream(tmp_path, n: int) -> str:
     return str(path)
 
 
-def _reader(path: str, **opts) -> NatsStreamReader:
-    return NatsStreamReader({"transport": "file", "path": path, **opts})
+def _opts(path: str, **opts) -> dict:
+    return {"transport": "file", "path": path, **opts}
+
+
+def _ranges(landing) -> list[tuple[int, int]]:
+    """The (start, end) sequence ranges of the landed files, in order."""
+    return sorted(
+        (int(m.group(1)), int(m.group(2)))
+        for m in map(nats_source._LANDED.match, os.listdir(landing))
+        if m
+    )
+
+
+def _seqs(landing) -> list[int]:
+    """Every landed sequence, file by file in range order."""
+    out: list[int] = []
+    for lo, hi in _ranges(landing):
+        name = f"seq-{lo:020d}-{hi:020d}.parquet"
+        out += pq.read_table(os.path.join(landing, name)).column("seq").to_pylist()
+    return out
 
 
 def test_partitions_slice_range_into_target_rows(tmp_path):
-    r = _reader(_write_stream(tmp_path, 10), partition_target_rows=3)
-    parts = r.partitions({"seq": 0}, {"seq": 10})
-    assert [(p.start, p.end) for p in parts] == [(0, 3), (3, 6), (6, 9), (9, 10)]
-    # empty batch still yields one (empty) partition
-    empty = r.partitions({"seq": 5}, {"seq": 5})
-    assert [(p.start, p.end) for p in empty] == [(5, 5)]
+    landing = tmp_path / "landing"
+    path = _write_stream(tmp_path, 10)
+    assert land(_opts(path, partition_target_rows=3), str(landing)) == (10, 0)
+    assert _ranges(landing) == [(1, 3), (4, 6), (7, 9), (10, 10)]
+    # nothing new: no file, nothing counted
+    assert land(_opts(path, partition_target_rows=3), str(landing)) == (0, 0)
+    assert len(_ranges(landing)) == 4
 
 
 def test_latest_offset_and_read_are_replayable(tmp_path):
     path = _write_stream(tmp_path, 7)
-    r = _reader(path)
-    assert r.initialOffset() == {"seq": 0}
-    assert r.latestOffset() == {"seq": 7}
-    rows = list(r.read(SeqRange(2, 5)))
-    assert [seq for _, _, seq in rows] == [3, 4, 5]
-    # replay of the same range returns identical rows (exactly-once basis)
-    assert list(r.read(SeqRange(2, 5))) == rows
-    assert json.loads(rows[0][0])["position"] == 3
+    first, again = tmp_path / "a", tmp_path / "b"
+    assert land(_opts(path), str(first)) == (7, 0)
+    assert _seqs(first) == list(range(1, 8))
+    # re-landing a range (starting_seq into an empty directory) reads
+    # back identical rows: the replay exactly-once rests on
+    assert land(_opts(path, starting_seq=2, partition_target_rows=3), str(again)) == (5, 0)
+    assert _ranges(again) == [(3, 5), (6, 7)]
+    a = pq.read_table(str(first / f"seq-{1:020d}-{7:020d}.parquet")).to_pylist()
+    b = pq.read_table(str(again / f"seq-{3:020d}-{5:020d}.parquet")).to_pylist()
+    assert b == a[2:5]
+    assert json.loads(b[0]["value"])["position"] == 3
+    assert b[0]["subject"] == "zeebe-export"
 
 
 def test_max_rows_per_trigger_bounds_batches(tmp_path):
-    r = _reader(_write_stream(tmp_path, 10), max_rows_per_trigger=4)
-    assert r.latestOffset() == {"seq": 4}
-    assert r.latestOffset() == {"seq": 8}
-    assert r.latestOffset() == {"seq": 10}
+    landing = str(tmp_path / "landing")
+    opts = _opts(_write_stream(tmp_path, 10), max_rows_per_trigger=4)
+    assert [land(opts, landing) for _ in range(4)] == [(4, 0), (4, 0), (2, 0), (0, 0)]
+    assert _ranges(landing) == [(1, 4), (5, 8), (9, 10)]
 
 
 def test_jetstream_transport_needs_client(tmp_path):
     with pytest.raises(NotImplementedError):
-        NatsStreamReader({"transport": "jetstream"})
+        land({"transport": "jetstream"}, str(tmp_path / "landing"))
+
+
+def test_land_crash_before_rename_relands_each_sequence_once(tmp_path, monkeypatch):
+    """A crash between the ``_tmp`` write and the rename leaves a stray
+    temporary file; the rerun re-lands the missing ranges, so every
+    sequence is landed exactly once and the ranges are contiguous."""
+    landing = tmp_path / "landing"
+    opts = _opts(_write_stream(tmp_path, 10), partition_target_rows=3)
+    rename = os.rename
+    calls = []
+
+    def crash_on_second(src, dst):
+        calls.append(dst)
+        if len(calls) == 2:
+            raise OSError("crash between write and rename")
+        rename(src, dst)
+
+    monkeypatch.setattr(nats_source.os, "rename", crash_on_second)
+    with pytest.raises(OSError, match="crash"):
+        land(opts, str(landing))
+    assert _ranges(landing) == [(1, 3)]
+    assert os.listdir(landing / "_tmp")  # the half-done file is left behind
+
+    monkeypatch.setattr(nats_source.os, "rename", rename)
+    assert land(opts, str(landing)) == (7, 0)
+    assert _ranges(landing) == [(1, 3), (4, 6), (7, 9), (10, 10)]
+    assert _seqs(landing) == list(range(1, 11))
+    assert os.listdir(landing / "_tmp") == []
 
 
 def test_readstream_end_to_end(spark, tmp_path):
     path = _write_stream(tmp_path, 25)
-    register_nats_source(spark)
-    df = (
-        spark.readStream.format("nats")
-        .option("transport", "file")
-        .option("path", path)
-        .option("partition_target_rows", 10)
-        .load()
-    )
+    landing = str(tmp_path / "landing")
+    land(_opts(path, partition_target_rows=10), landing)
+    df = spark.readStream.schema(NATS_SCHEMA).parquet(landing)
     q = (
         df.writeStream.format("memory")
         .queryName("nats_e2e")

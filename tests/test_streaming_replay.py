@@ -190,10 +190,11 @@ def test_wire_entry_consumes_via_wire_source_not_file_bridge(
     spark, sf_dir, tmp_path, monkeypatch
 ):
     """The wire-fed replay (VERDICT r9 task #7): build the wire table
-    store from scratch with BOTH the batch pipeline AND the file stream
-    source rigged to raise — green means every event reached the hops
-    through format("nats")/transport=wire over real TCP, and the result
-    still equals the batch (oracle-gated) transfers table."""
+    store from scratch with BOTH the batch pipeline AND the file-drop
+    bridge's stream reader rigged to raise — green means every event
+    reached the hops through the wire transport's landing over real TCP,
+    and the result still equals the batch (oracle-gated) transfers
+    table."""
     from ph_ee_nats_importer_rdbms_spark.operators import pipeline as batch
     from ph_ee_nats_importer_rdbms_spark.streaming import pipeline as sp
 

@@ -8,6 +8,8 @@ envelopes/second with per-hop attribution:
 
   source   file: ordered chunk write (prep, reported separately)
            wire: TCP publish into the in-repo JetStream double
+  land     wire only: the driver drains the new sequences into the
+           landing directory (sources/nats_source.land)
   resolve  hop 1 — F1-F3 envelope filters + C5 definition buffering
   rekey    hop 2 — F5/F6 routing + C4 call-activity re-key
   entity   hop 3 — D1-D4/C1-C3 keyed entity fold
@@ -22,9 +24,9 @@ checkpoints).
 Prints one JSON line per run:
   {"metric": "ingest_env_per_sec", "transport": ..., "partitions": N,
    "envelopes": N, "pipeline_sec": s, "eps": N,
-   "hops": {"source": s, "resolve": s, "rekey": s, "entity": s,
-            "sink": s}, "sf": ...}
-``pipeline_sec``/``eps`` cover resolve+rekey+entity+sink (the engine's
+   "hops": {"source": s, ["land": s,] "resolve": s, "rekey": s,
+            "entity": s, "sink": s}, "sf": ...}
+``pipeline_sec``/``eps`` cover every hop but the source (the engine's
 steady-state work); the source column shows the feed cost separately
 (file prep is a bench artifact; the wire publish is a real deployment
 hop but paced by the single-socket publisher, not the engine).
@@ -48,6 +50,7 @@ from ph_ee_nats_importer_rdbms_spark.plans.queries import (  # noqa: E402
     flat_events_staged,
 )
 from ph_ee_nats_importer_rdbms_spark.session import build_session  # noqa: E402
+from ph_ee_nats_importer_rdbms_spark.sources.nats_source import land  # noqa: E402
 from ph_ee_nats_importer_rdbms_spark.streaming import (  # noqa: E402
     pipeline as sp,
     replay,
@@ -82,7 +85,6 @@ def run_file(spark, sf_dir, work, partitions, chunks) -> dict:
         spark,
         src,
         os.path.join(work, "work"),
-        available_now=True,
         max_files_per_trigger=1,
         hop_timings=hops,
     )
@@ -100,24 +102,24 @@ def run_wire(spark, sf_dir, work, partitions, waves) -> dict:
     chunk_files = sorted(
         os.path.join(src, f) for f in os.listdir(src) if f.startswith("chunk-")
     )
-    hops: dict = {"source": 0.0}
+    hops: dict = {"source": 0.0, "land": 0.0}
     waves_sec: list[float] = []
     spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
+    landing = os.path.join(work, "landing")
     with MiniNatsServer() as s:
+        options = {"transport": "wire", "servers": s.url, "stream": s.js.stream}
         for path in chunk_files:
             t0 = time.perf_counter()
             replay._publish_file(s.url, s.js.subject, path)
             hops["source"] += time.perf_counter() - t0
-            events = sp.read_raw_nats_stream(
-                spark, transport="wire", servers=s.url, stream=s.js.stream
-            )
             t0 = time.perf_counter()
+            land(options, landing)
+            hops["land"] += time.perf_counter() - t0
             paths = sp.run_multi_hop(
                 spark,
                 "",
                 os.path.join(work, "work"),
-                available_now=True,
-                events=events,
+                events=sp.read_landed_stream(spark, landing),
                 hop_timings=hops,
             )
             # per-wave drain time: wave 1 is a cold topology, wave 2+ a
