@@ -457,23 +457,6 @@ def read_staged(
 _MEMO: dict[tuple[str, str, str, str], DataFrame] = {}
 
 
-def _memo_block_copy() -> bool:
-    """Whether :func:`load_memoized` layers a block-manager copy on the
-    staged parquet (default) or serves the bare scan.
-
-    ``SPARK_GRAFT_STAGE_MEMO=storage`` (r14, VERDICT r13 task #7) is the
-    cluster analog made runnable locally: staged reads go straight to
-    the parquet files and the OS page cache does the caching — the
-    honest A/B for how much of the warm numbers the block-manager copy
-    accounts for (measured at sf0.1: see BENCH_NOTES.md §Round 14)."""
-    flag = (
-        os.environ.get("SPARK_GRAFT_STAGE_MEMO", "blockmanager")
-        .strip()
-        .lower()
-    )
-    return flag not in ("storage", "parquet", "0", "off")
-
-
 def load_memoized(
     spark: SparkSession,
     sf_dir: str,
@@ -481,14 +464,12 @@ def load_memoized(
     build: Callable[[], DataFrame],
     domain: str = "zeebe",
 ) -> DataFrame:
-    """:func:`load_or_build` plus an in-session block-manager copy (or
-    the bare staged scan under ``SPARK_GRAFT_STAGE_MEMO=storage``)."""
+    """:func:`load_or_build` plus an in-session block-manager copy."""
     key = (spark.sparkContext.applicationId, sf_dir, name, domain)
     if key not in _MEMO:
-        df = load_or_build(spark, sf_dir, name, build, domain)
-        if _memo_block_copy():
-            df = df.localCheckpoint(eager=False)
-        _MEMO[key] = df
+        _MEMO[key] = load_or_build(
+            spark, sf_dir, name, build, domain
+        ).localCheckpoint(eager=False)
     return _MEMO[key]
 
 

@@ -28,17 +28,15 @@ and ~2 s of query start on every drain.
 
 Transports (``transport`` option):
 
-- ``jetstream`` (default): real NATS via the nats-py client — import-gated,
-  the container used for tests has no broker or client lib.
-- ``wire``: real NATS via the dependency-free socket client
-  (sources/nats_wire.py) — the same JetStream API calls as ``jetstream``
-  (STREAM.INFO for the latest sequence, batched DIRECT.GET or pipelined
-  STREAM.MSG.GET for ranged reads) with zero third-party imports.
-  Exercised over real TCP in tests against a protocol double
-  (tests/nats_mini_server.py). ``missing=skip`` tolerates
+- ``wire`` (default): real NATS JetStream via the dependency-free socket
+  client (sources/nats_wire.py) — STREAM.INFO for the latest sequence,
+  batched DIRECT.GET or pipelined STREAM.MSG.GET for ranged reads, with
+  zero third-party imports. Exercised over real TCP in tests against a
+  protocol double (tests/nats_mini_server.py) and, opt-in, against a real
+  broker (tests/test_nats_live.py). ``missing=skip`` tolerates
   retention-purged sequences (each skipped message is one ``seq`` gap in
-  the landed files and one count in :func:`land`'s skipped total); the
-  default fails loudly on a purged range.
+  the landed files and one count in :func:`land`'s skipped total);
+  ``missing=fail`` (the default) fails loudly on a purged range.
 - ``file``: a JSON-lines file treated as a pre-captured stream, line i ==
   sequence i+1. Deterministic; drives the same landing in tests.
 
@@ -97,58 +95,6 @@ class _FileTransport:
                 if seq > end:
                     break
                 yield (line.rstrip("\n"), self.subject, seq)
-
-
-class _JetStreamTransport:  # pragma: no cover - needs broker + nats-py
-    """Real JetStream access by stream sequence (random access via
-    ``js.get_msg(stream, seq)`` / ranged pull consumers)."""
-
-    def __init__(self, servers: str, stream: str, subject: str) -> None:
-        try:
-            import nats  # type: ignore[import-not-found]  # noqa: F401
-        except ImportError as e:
-            raise NotImplementedError(
-                "transport=jetstream needs the nats-py client library; "
-                "use transport=file against a captured stream otherwise"
-            ) from e
-        self.servers = servers
-        self.stream = stream
-        self.subject = subject
-
-    def _run(self, coro):
-        import asyncio
-
-        return asyncio.new_event_loop().run_until_complete(coro)
-
-    def latest(self) -> int:
-        import nats
-
-        async def go() -> int:
-            nc = await nats.connect(self.servers)
-            try:
-                info = await nc.jetstream().stream_info(self.stream)
-                return int(info.state.last_seq)
-            finally:
-                await nc.close()
-
-        return self._run(go())
-
-    def fetch(self, start: int, end: int) -> Iterator[tuple[str, str, int]]:
-        import nats
-
-        async def go() -> list[tuple[str, str, int]]:
-            nc = await nats.connect(self.servers)
-            try:
-                js = nc.jetstream()
-                out = []
-                for seq in range(start + 1, end + 1):
-                    msg = await js.get_msg(self.stream, seq)
-                    out.append((msg.data.decode("utf-8"), msg.subject, seq))
-                return out
-            finally:
-                await nc.close()
-
-        return iter(self._run(go()))
 
 
 class _WireTransport:
@@ -248,7 +194,7 @@ class _WireTransport:
 
 
 def _transport(options: dict):
-    kind = options.get("transport", "jetstream")
+    kind = options.get("transport", "wire")
     subject = options.get("subject", DEFAULT_SUBJECT)
     if kind == "file":
         return _FileTransport(options["path"], subject)
@@ -259,12 +205,6 @@ def _transport(options: dict):
             options.get("missing", "fail"),
             int(options.get("pipeline_window", 64)),
             options.get("ranged_get", "auto"),
-        )
-    if kind == "jetstream":
-        return _JetStreamTransport(
-            options.get("servers", DEFAULT_SERVERS),
-            options.get("stream", subject),
-            subject,
         )
     raise ValueError(f"unknown nats transport {kind!r}")
 

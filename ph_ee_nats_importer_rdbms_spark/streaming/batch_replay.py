@@ -10,10 +10,10 @@ Python stateful stage (guide §4: the measured bound was ~11k env/s per
 32-core box; the native hops run at scan speed):
 
 - **resolve (C5)**: per definition key, ``resolved`` is SET-ONCE — the
-  first truthy bpmn in (timestamp, position) order; every falsy-bpmn
-  event is emitted with that value once it is known anywhere in the
-  stream (buffered rows flush the moment resolution arrives), and with
-  no resolution the falsy rows buffer forever (never emitted). Batch
+  first truthy bpmn in (timestamp, position, partition_id) order; every
+  falsy-bpmn event is emitted with that value once it is known anywhere
+  in the stream (buffered rows flush the moment resolution arrives), and
+  with no resolution the falsy rows buffer forever (never emitted). Batch
   form: one map-side aggregate builds the (definition -> first truthy
   bpmn) dimension, broadcast-joined back — NO corpus shuffle (the
   window-fill form would sort the whole corpus by definition key).
@@ -257,18 +257,30 @@ def _fold_sorted_groups(
 
 
 def _first_truthy_order() -> list:
-    """Struct whose MIN is the first event in :func:`_event_sort_key`
-    order (boolean null-flags lead each column: false < true)."""
+    """Struct whose MIN is the first event in the resolve hop's order:
+    (timestamp, position, partition_id), nulls last per column (boolean
+    null-flags lead each column: false < true). The partition id breaks
+    a (timestamp, position) tie across Zeebe partitions, exactly like
+    ``pipeline._resolve_batch``'s sort key."""
     return [
-        F.col("timestamp").isNull(),
-        F.coalesce(F.col("timestamp"), F.lit(0)),
-        F.col("position").isNull(),
-        F.coalesce(F.col("position"), F.lit(0)),
+        flag
+        for c in ("timestamp", "position", "partition_id")
+        for flag in (F.col(c).isNull(), F.coalesce(F.col(c), F.lit(0)))
     ]
 
 
 def _empty_bpmn():
     return F.col("bpmn_process_id").isNull() | (F.col("bpmn_process_id") == "")
+
+
+def resolve_input(events: DataFrame) -> DataFrame:
+    """Hop 1's input, shared by :func:`resolve_events` and
+    ``pipeline.resolve_stage``: the skipped value types are dropped, and
+    so is an event with neither a bpmnProcessId nor a definition key
+    (nothing could ever resolve it)."""
+    return events.filter(~F.col("value_type").isin(*DROPPED_VALUE_TYPES)).filter(
+        ~(_empty_bpmn() & F.col("process_definition_key").isNull())
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -284,9 +296,7 @@ def resolve_events(events: DataFrame) -> DataFrame:
     aggregate bounded by the number of deployed process definitions —
     broadcastable by construction — so the corpus pass stays map-only:
     no shuffle, no sort (guide §2.4)."""
-    ev = events.filter(~F.col("value_type").isin(*DROPPED_VALUE_TYPES)).filter(
-        ~(_empty_bpmn() & F.col("process_definition_key").isNull())
-    )
+    ev = resolve_input(events)
     dim = (
         ev.filter(F.col("process_definition_key").isNotNull())
         .groupBy("process_definition_key")

@@ -11,11 +11,11 @@ deployment is a loop of :func:`run_deployment` drains; each resumes from
 the hops' checkpoints.
 
 Scale notes: state lives in the Spark state store (RocksDB provider on a
-real cluster — set ``spark.sql.streaming.stateStore.providerClass``), hash
-partitioned by the stage key across executors; the Python reducers see one
-key group at a time. The reference holds all of this in single-JVM maps —
-the streaming port is what makes the same semantics horizontally
-shardable.
+real cluster — :func:`configure_state_store`), hash partitioned by the
+stage key across executors; the Python reducers see one key group at a
+time. State never expires, as in the reference. The reference holds all
+of this in single-JVM maps — the streaming port is what makes the same
+semantics horizontally shardable.
 """
 
 from __future__ import annotations
@@ -23,7 +23,7 @@ from __future__ import annotations
 import json
 import os
 import time
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -32,7 +32,6 @@ from pyspark.sql.types import StringType, StructField, StructType
 
 from ph_ee_nats_importer_rdbms_spark import schemas
 from ph_ee_nats_importer_rdbms_spark.operators.classify import (
-    DROPPED_VALUE_TYPES,
     parse_envelope,
     with_routing,
 )
@@ -52,18 +51,10 @@ from ph_ee_nats_importer_rdbms_spark.streaming.batch_replay import (  # noqa: F4
     _concat,
     _event_sort_key,
     _records,
+    resolve_input,
 )
 
 _STATE_SCHEMA = StructType([StructField("blob", StringType(), True)])
-
-
-def _sorted_events(pdf_iter: Iterator[pd.DataFrame]) -> list[dict]:
-    # sort the records, not the frame: the many-key hops see ~20-row
-    # groups, where pandas lexsort machinery costs more than converting
-    # and sorting the dicts directly (r13)
-    records = _records(_concat(pdf_iter))
-    records.sort(key=_event_sort_key)
-    return records
 
 
 def _columns(schema: StructType) -> list[str]:
@@ -90,8 +81,12 @@ def _resolve_batch(
     resolve_step's — pinned against randomized multi-batch replays in
     tests/test_round13_opts.py."""
     cols = _columns(FLAT_SCHEMA)
+    # the partition id breaks a (timestamp, position) tie across Zeebe
+    # partitions, like batch_replay.resolve_events' first-truthy min
     pdf = pdf.sort_values(
-        ["timestamp", "position"], kind="mergesort", ignore_index=True
+        ["timestamp", "position", "partition_id"],
+        kind="mergesort",
+        ignore_index=True,
     )
     bp = pdf["bpmn_process_id"]
     known = bp.notna() & (bp != "")
@@ -169,162 +164,91 @@ def _rekey_batch(
     return st.parent_key, pd.DataFrame(out, columns=cols)
 
 
-def _ttl(state_ttl_minutes: float | None) -> tuple[int | None, GroupStateTimeout]:
-    ttl_ms = int(state_ttl_minutes * 60_000) if state_ttl_minutes else None
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
-    return ttl_ms, timeout
-
-
-def resolve_stage(
-    events: DataFrame, state_ttl_minutes: float | None = None
+def _keyed_stage(
+    df: DataFrame,
+    key: str,
+    schema: StructType,
+    step: Callable[[tuple, str | None, pd.DataFrame], tuple[pd.DataFrame, str]],
 ) -> DataFrame:
-    """C5: resolve empty bpmnProcessIds through per-definition-key state.
+    """One stateful hop: ``applyInPandasWithState`` grouped by ``key``,
+    holding one JSON blob per key. ``step(key, blob, pdf)`` gets the
+    key's stored blob (None for a new key) and its micro-batch rows, and
+    returns the rows to emit and the blob to store."""
 
-    ``state_ttl_minutes`` is a documented IMPROVEMENT over the reference,
-    whose definition map and buffer never evict (TempDocumentStore.java:16-17
-    — an unresolvable definition key accumulates buffered rows forever).
-    With a TTL, a definition key idle longer than the window is dropped:
-    its resolved mapping re-learns from the next carrier event (get-or-
-    create, NatsConsumer.java:60-70), and any still-unresolved buffered rows
-    are discarded — the same loss the reference suffers on restart, but at
-    a bounded, chosen horizon instead of OOM. Default None = parity.
+    def fn(k, pdf_iter: Iterator[pd.DataFrame], state: GroupState):
+        out, blob = step(
+            k, state.get[0] if state.exists else None, _concat(pdf_iter)
+        )
+        state.update((blob,))
+        yield out
 
-    Operational note (all TTL'd stages): with ``availableNow`` triggers,
-    set ``spark.sql.streaming.noDataMicroBatches.enabled=false`` — a
-    pending processing-time timer otherwise keeps scheduling no-data
-    batches whose batch timestamp never crosses the timer, spinning the
-    run; eviction then happens lazily on the next data-carrying batch.
-    Continuous triggers (production) need no special handling."""
-    cols = _columns(FLAT_SCHEMA)
-    ttl_ms, timeout = _ttl(state_ttl_minutes)
+    return df.groupBy(key).applyInPandasWithState(
+        fn, schema, _STATE_SCHEMA, "append", GroupStateTimeout.NoTimeout
+    )
 
-    def fn(key, pdf_iter, state: GroupState):
-        if ttl_ms is not None and state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame([], columns=cols)
-            return
-        if state.exists:
-            d = json.loads(state.get[0])
-            resolved, buffered = d["resolved_bpmn"], d["buffered"]
-        else:
-            resolved, buffered = None, []
+
+def resolve_stage(events: DataFrame) -> DataFrame:
+    """C5: resolve empty bpmnProcessIds through per-definition-key state
+    (never evicted, like the reference's TempDocumentStore.java:16-17)."""
+
+    def step(_key, blob, pdf):
+        d = json.loads(blob) if blob else {"resolved_bpmn": None, "buffered": []}
         resolved, buffered, out = _resolve_batch(
-            resolved, buffered, _concat(pdf_iter)
+            d["resolved_bpmn"], d["buffered"], pdf
         )
-        state.update(
-            (json.dumps({"resolved_bpmn": resolved, "buffered": buffered}),)
-        )
-        if ttl_ms is not None:
-            state.setTimeoutDuration(ttl_ms)
-        yield out
+        return out, json.dumps({"resolved_bpmn": resolved, "buffered": buffered})
 
-    filtered = events.filter(
-        ~F.col("value_type").isin(*DROPPED_VALUE_TYPES)
-    ).filter(
-        ~(
-            (F.col("bpmn_process_id").isNull() | (F.col("bpmn_process_id") == ""))
-            & F.col("process_definition_key").isNull()
-        )
-    )
-    return filtered.groupBy("process_definition_key").applyInPandasWithState(
-        fn, FLAT_SCHEMA, _STATE_SCHEMA, "append", timeout
+    return _keyed_stage(
+        resolve_input(events), "process_definition_key", FLAT_SCHEMA, step
     )
 
 
-def rekey_stage(
-    routed: DataFrame, state_ttl_minutes: float | None = None
-) -> DataFrame:
-    """C4: add effective_key via per-instance call-activity link state.
+def rekey_stage(routed: DataFrame) -> DataFrame:
+    """C4: add effective_key via per-instance call-activity link state."""
 
-    ``state_ttl_minutes``: optional eviction for idle call-activity links
-    (the reference's inflightCallActivities map is unbounded,
-    RecordParser.java:75). An evicted link means a later child event keys
-    to itself instead of the parent — identical to the reference after a
-    restart; a fresh ELEMENT_ACTIVATING re-creates the link (get-or-create,
-    InflightTransferManager.java:56-70). Default None = parity."""
-    cols = _columns(REKEYED_SCHEMA)
-    ttl_ms, timeout = _ttl(state_ttl_minutes)
-
-    def fn(key, pdf_iter, state: GroupState):
-        if ttl_ms is not None and state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame([], columns=cols)
-            return
-        parent0 = (
-            json.loads(state.get[0])["parent_key"] if state.exists else None
+    def step(_key, blob, pdf):
+        parent, out = _rekey_batch(
+            json.loads(blob)["parent_key"] if blob else None, pdf
         )
-        parent, out = _rekey_batch(parent0, _concat(pdf_iter))
-        state.update((json.dumps({"parent_key": parent}),))
-        if ttl_ms is not None:
-            state.setTimeoutDuration(ttl_ms)
-        yield out
+        return out, json.dumps({"parent_key": parent})
 
-    return routed.groupBy("process_instance_key").applyInPandasWithState(
-        fn, REKEYED_SCHEMA, _STATE_SCHEMA, "append", timeout
-    )
+    return _keyed_stage(routed, "process_instance_key", REKEYED_SCHEMA, step)
 
 
-def entity_stage(rekeyed: DataFrame, state_ttl_minutes: float | None = None) -> DataFrame:
+def entity_stage(rekeyed: DataFrame) -> DataFrame:
     """C1-C3/C6/D1-D4: per-effective-key entity state machine emitting
-    variable/task inserts + entity upsert snapshots.
-
-    ``state_ttl_minutes`` is a documented IMPROVEMENT over the reference,
-    whose in-JVM maps never evict (InflightTransferManager.java:19 et al. —
-    they grow until OOM). With a TTL, instances idle longer than the window
-    are dropped from the state store; their rows are already durable in the
-    sink, and a late event for an evicted instance re-creates state exactly
-    like the reference's get-or-create-after-restart path
-    (InflightTransferManager.java:56-70). Default None = reference parity.
-    """
+    variable/task inserts + entity upsert snapshots."""
     cols = _columns(CHANGES_SCHEMA)
-    ttl_ms, timeout = _ttl(state_ttl_minutes)
 
-    def fn(key, pdf_iter, state: GroupState):
-        if ttl_ms is not None and state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame([], columns=cols)
-            return
-        st = sm.EntityState.from_json(state.get[0]) if state.exists else sm.EntityState()
-        events = _sorted_events(pdf_iter)
+    def step(key, blob, pdf):
+        st = sm.EntityState.from_json(blob) if blob else sm.EntityState()
+        # sort the records, not the frame: the many-key hops see ~20-row
+        # groups, where pandas lexsort machinery costs more than
+        # converting and sorting the dicts directly (r13)
+        events = _records(pdf)
+        events.sort(key=_event_sort_key)
         # first tenant in time order, sticky across batches: a later batch
         # with only null-tenant events keeps routing to the instance's DB
         st.tenant = st.tenant or next(
             (e.get("tenant") for e in events if e.get("tenant")), None
         )
-        tenant = st.tenant
         st, rows = sm.entity_step(st, events)
         st.seq += 1
+        snap = sm.entity_snapshot(int(key[0]), st)
+        if snap is not None:
+            rows.append(snap)
         out = [
             {
                 "kind": r.pop("kind"),
                 "workflow_instance_key": r.get("workflow_instance_key"),
-                "tenant": tenant,
+                "tenant": st.tenant,
                 "payload": json.dumps(r),
             }
             for r in rows
         ]
-        snap = sm.entity_snapshot(int(key[0]), st)
-        if snap is not None:
-            out.append(
-                {
-                    "kind": snap.pop("kind"),
-                    "workflow_instance_key": snap["workflow_instance_key"],
-                    "tenant": tenant,
-                    "payload": json.dumps(snap),
-                }
-            )
-        state.update((st.to_json(),))
-        if ttl_ms is not None:
-            state.setTimeoutDuration(ttl_ms)
-        yield pd.DataFrame(out, columns=cols)
+        return pd.DataFrame(out, columns=cols), st.to_json()
 
-    return rekeyed.groupBy("effective_key").applyInPandasWithState(
-        fn, CHANGES_SCHEMA, _STATE_SCHEMA, "append", timeout
-    )
+    return _keyed_stage(rekeyed, "effective_key", CHANGES_SCHEMA, step)
 
 
 # ---------------------------------------------------------------------------
@@ -365,8 +289,9 @@ def read_raw_stream(
 ) -> DataFrame:
     """Raw Zeebe envelope JSON strings from a file-drop directory — the
     NATS-bridge ingestion pattern (sources/nats.py writes this layout).
-    ``max_files_per_trigger`` bounds micro-batch size (tests set 1 to force
-    cross-batch state handoff)."""
+    ``max_files_per_trigger`` bounds hop 1's micro-batch size. Hops 2 and
+    3 read each drain's hop output as one micro-batch, so only a new
+    drain splits their state across batches."""
     return (
         spark.readStream.format("text")
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -390,89 +315,56 @@ def read_landed_stream(spark: SparkSession, landing_dir: str) -> DataFrame:
 
 def run_multi_hop(
     spark: SparkSession,
-    source_dir: str,
+    events: DataFrame,
     work_dir: str,
     registry: DataFrame | None = None,
-    max_files_per_trigger: int = 64,
-    state_store: str | None = None,
-    events: DataFrame | None = None,
-    state_ttl_minutes: float | None = None,
     hop_timings: dict | None = None,
 ) -> dict[str, str]:
-    """Run the 3-hop pipeline over ``source_dir``; returns output paths.
+    """Run the 3-hop pipeline over the parsed event stream ``events``
+    (:func:`read_raw_stream` or :func:`read_landed_stream`); returns
+    output paths.
 
     Hops (each checkpointed, restart-safe, exactly-once into parquet):
       resolved/  flat events after F1-F3 + C5
       rekeyed/   + routing (F5/F6) + effective_key (C4)
       changes/   typed change rows (variable/task inserts, entity upserts)
 
-    ``state_store='rocksdb'`` switches the three stateful hops onto the
-    RocksDB provider (see :func:`configure_state_store`); None keeps the
-    session's current setting. ``events`` overrides the hop-1 input with an
-    already-built flat event stream (e.g. read_landed_stream) — then
-    ``source_dir`` is ignored. ``state_ttl_minutes`` applies the documented
-    eviction improvement to all three stateful hops (see each stage's
-    docstring); None = reference parity (unbounded state).
+    The hops run on the session's state-store provider
+    (:func:`configure_state_store` selects RocksDB).
 
     ``hop_timings`` (optional dict) accumulates wall seconds per hop
     (``resolve``/``rekey``/``entity``, += so multi-wave callers fold) —
     the ingest throughput bench's per-hop attribution
     (tools/bench_ingest.py)."""
-    if state_store is not None:
-        configure_state_store(spark, state_store)
     paths = {
         n: os.path.join(work_dir, n) for n in ("resolved", "rekeyed", "changes")
     }
 
-    def start(df: DataFrame, name: str):
-        return (
+    def drain(df: DataFrame, name: str, hop: str) -> None:
+        t0 = time.perf_counter()
+        (
             df.writeStream.format("parquet")
             .option("path", paths[name])
             .option("checkpointLocation", os.path.join(work_dir, f"ckpt_{name}"))
             .outputMode("append")
             .trigger(availableNow=True)
             .start()
+            .awaitTermination()
         )
-
-    def timed(hop: str, run):
-        t0 = time.perf_counter()
-        run()
         if hop_timings is not None:
             hop_timings[hop] = hop_timings.get(hop, 0.0) + (
                 time.perf_counter() - t0
             )
 
-    source = (
-        events
-        if events is not None
-        else read_raw_stream(spark, source_dir, max_files_per_trigger)
-    )
-    timed(
-        "resolve",
-        lambda: start(
-            resolve_stage(source, state_ttl_minutes), "resolved"
-        ).awaitTermination(),
-    )
-
+    drain(resolve_stage(events), "resolved", "resolve")
     resolved = spark.readStream.schema(FLAT_SCHEMA).parquet(paths["resolved"])
-    timed(
+    drain(
+        rekey_stage(with_routing(resolved, registry, resolve_definitions=False)),
+        "rekeyed",
         "rekey",
-        lambda: start(
-            rekey_stage(
-                with_routing(resolved, registry, resolve_definitions=False),
-                state_ttl_minutes,
-            ),
-            "rekeyed",
-        ).awaitTermination(),
     )
-
     rekeyed = spark.readStream.schema(REKEYED_SCHEMA).parquet(paths["rekeyed"])
-    timed(
-        "entity",
-        lambda: start(
-            entity_stage(rekeyed, state_ttl_minutes), "changes"
-        ).awaitTermination(),
-    )
+    drain(entity_stage(rekeyed), "changes", "entity")
     return paths
 
 
@@ -519,8 +411,6 @@ def run_deployment(
     source_dir: str | None = None,
     nats_options: dict[str, str] | None = None,
     registry: DataFrame | None = None,
-    max_files_per_trigger: int = 64,
-    state_store: str | None = None,
     distributed: bool = True,
     dialect: str = "mysql",
 ) -> dict[str, str]:
@@ -548,7 +438,8 @@ def run_deployment(
     deployments, py4j ``jvm_executor``).
     The landing files and every hop and the sink query are checkpointed
     under ``work_dir`` — restart resumes with exactly-once delivery into
-    the idempotent MERGE."""
+    the idempotent MERGE. The state-store provider is the session's
+    (:func:`configure_state_store`)."""
     from ph_ee_nats_importer_rdbms_spark.sinks.jdbc import changes_foreach_batch
 
     if source_dir is None and nats_options is None:
@@ -556,20 +447,13 @@ def run_deployment(
             "run_deployment needs an ingestion source: pass source_dir "
             "(file-drop bridge directory) or nats_options (NATS JetStream)"
         )
-    events = None
     if nats_options is not None:
         landing = os.path.join(work_dir, "landing")
         land(nats_options, landing)
         events = read_landed_stream(spark, landing)
-    paths = run_multi_hop(
-        spark,
-        source_dir or "",
-        work_dir,
-        registry=registry,
-        max_files_per_trigger=max_files_per_trigger,
-        state_store=state_store,
-        events=events,
-    )
+    else:
+        events = read_raw_stream(spark, source_dir)
+    paths = run_multi_hop(spark, events, work_dir, registry=registry)
 
     changes = spark.readStream.schema(CHANGES_SCHEMA).parquet(paths["changes"])
     (

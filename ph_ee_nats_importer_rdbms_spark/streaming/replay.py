@@ -49,7 +49,6 @@ import shutil
 import sys
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
-from pyspark.sql import types as T
 
 from ph_ee_nats_importer_rdbms_spark import schemas
 from ph_ee_nats_importer_rdbms_spark.plans import staging
@@ -140,16 +139,6 @@ def write_ordered_chunks(
     shutil.rmtree(tmp, ignore_errors=True)
 
 
-def _typed_entity(df: DataFrame, schema: T.StructType) -> DataFrame:
-    """Moved to batch_replay.py (fingerprinted replay semantics); kept as
-    an alias for the streaming A/B build below."""
-    from ph_ee_nats_importer_rdbms_spark.streaming.batch_replay import (
-        _typed_entity as typed,
-    )
-
-    return typed(df, schema)
-
-
 def _write_tables(tables: dict[str, DataFrame], out_root: str) -> None:
     """AQE-sized table writes (r13, guide §6): the replayed tables are
     read on every zeebe_*_streaming query — compact at the one-time
@@ -196,12 +185,16 @@ def _build_streaming(spark: SparkSession, sf_dir: str, root: str) -> None:
     stateful stages."""
     from ph_ee_nats_importer_rdbms_spark.plans.queries import flat_events_staged
     from ph_ee_nats_importer_rdbms_spark.streaming import pipeline as sp
+    from ph_ee_nats_importer_rdbms_spark.streaming.batch_replay import (
+        _typed_entity,
+    )
 
     flat = flat_events_staged(spark, sf_dir)
     src_dir = os.path.join(root, "source")
     work_dir = os.path.join(root, "work")
     write_ordered_chunks(flat, src_dir)
-    paths = sp.run_multi_hop(spark, src_dir, work_dir, max_files_per_trigger=1)
+    events = sp.read_raw_stream(spark, src_dir, max_files_per_trigger=1)
+    paths = sp.run_multi_hop(spark, events, work_dir)
     tables = sp.materialize_tables(spark, paths["changes"])
     for name in _ENTITY_SCHEMAS:
         tables[name] = _typed_entity(tables[name], _ENTITY_SCHEMAS[name])

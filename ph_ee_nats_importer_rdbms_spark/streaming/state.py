@@ -11,10 +11,9 @@ SAME declarative table the batch pivot compiles to Columns — so batch and
 streaming cannot drift (mappers.py docstring).
 
 Reference fidelity notes:
-- State never expires (the reference's maps are unbounded —
-  InflightTransferManager.java:19, RecordParser.java:75,
-  TempDocumentStore.java:16-17). pipeline.py exposes an optional TTL as a
-  documented improvement, off by default.
+- State never expires, like the reference's unbounded maps
+  (InflightTransferManager.java:19, RecordParser.java:75,
+  TempDocumentStore.java:16-17).
 - Within a micro-batch, (timestamp, position) is the arrival order; the
   reference relies on NATS delivery order the same way (SURVEY §3.4).
 """

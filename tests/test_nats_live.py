@@ -1,11 +1,11 @@
 """Opt-in live-broker integration test for the NATS JetStream landing.
 
-The CI container has neither a NATS server nor the ``nats-py`` client, so
-the landing's JetStream transport (sources/nats_source._JetStreamTransport)
-is otherwise exercised only through the file transport, which shares the
-range/resume/write machinery of ``land`` but not the broker I/O
-(NatsConsumer.java:34-35 parity). This module closes that gap wherever a
-broker IS available:
+The CI container has no NATS server, so the landing's default ``wire``
+transport (sources/nats_source._WireTransport over sources/nats_wire.py)
+is otherwise exercised only against the in-repo protocol double
+(tests/nats_mini_server.py). This module closes that gap wherever a
+broker IS available (NatsConsumer.java:34-35 parity); the ``nats-py``
+client only creates the streams and publishes:
 
     SPARK_GRAFT_NATS_LIVE=1 SPARK_GRAFT_NATS_SERVERS=nats://host:4222 \
         pytest tests/test_nats_live.py
@@ -83,8 +83,7 @@ def test_jetstream_offsets_and_restart_replay(spark, tmp_path):
     landing = str(tmp_path / "landing")
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
-    options = {
-        "transport": "jetstream",
+    options = {  # no transport: the default wire client lands
         "servers": _SERVERS,
         "stream": stream,
         "subject": subject,

@@ -79,9 +79,14 @@ def test_max_rows_per_trigger_bounds_batches(tmp_path):
     assert _ranges(landing) == [(1, 4), (5, 8), (9, 10)]
 
 
-def test_jetstream_transport_needs_client(tmp_path):
-    with pytest.raises(NotImplementedError):
-        land({"transport": "jetstream"}, str(tmp_path / "landing"))
+def test_transport_defaults_to_wire():
+    """Options without ``transport`` speak JetStream through the
+    dependency-free wire client; an unknown transport is a config error."""
+    t = nats_source._transport({"stream": "zeebe"})
+    assert isinstance(t, nats_source._WireTransport)
+    assert (t.servers, t.stream) == (nats_source.DEFAULT_SERVERS, "zeebe")
+    with pytest.raises(ValueError, match="unknown nats transport"):
+        nats_source._transport({"transport": "jetstream"})
 
 
 def test_land_crash_before_rename_relands_each_sequence_once(tmp_path, monkeypatch):

@@ -229,27 +229,41 @@ def _raw_json(flat: dict) -> str:
     return json.dumps(env)
 
 
-def test_multi_hop_matches_batch(spark, tmp_path):
+def _three_drains(spark, root) -> str:
+    """Run the 3-hop topology as three drains, one file drop each, and
+    return the change log path. Every hop runs three micro-batches, and
+    the corpus is cut into contiguous, time-ordered chunks so that state
+    crosses both boundaries: the C4 child activates in drop 0 and
+    completes in drop 1, instance 100 starts in drop 0 and completes in
+    drop 1, and the C5 gapped row (drop 1) waits for its carrier
+    (drop 2)."""
+    from ph_ee_nats_importer_rdbms_spark.streaming import pipeline as sp
+
+    corpus = _corpus()
+    src = root / "events"
+    src.mkdir()
+    for i, chunk in enumerate([corpus[0:4], corpus[4:10], corpus[10:]]):
+        (src / f"drop_{i}.jsonl").write_text(
+            "\n".join(_raw_json(e) for e in chunk) + "\n"
+        )
+        paths = sp.run_multi_hop(
+            spark, sp.read_raw_stream(spark, str(src)), str(root / "work")
+        )
+    return paths["changes"]
+
+
+@pytest.fixture(scope="module")
+def three_batch_changes(spark, tmp_path_factory) -> str:
+    return _three_drains(spark, tmp_path_factory.mktemp("three_batch"))
+
+
+def test_multi_hop_matches_batch(spark, three_batch_changes):
     from ph_ee_nats_importer_rdbms_spark.operators.classify import parse_envelope
     from ph_ee_nats_importer_rdbms_spark.operators.pipeline import run_import_pipeline
     from ph_ee_nats_importer_rdbms_spark.streaming import pipeline as sp
 
     corpus = _corpus()
-
-    # three file drops -> with maxFilesPerTrigger=1, three micro-batches,
-    # so C4/C5 state must survive across batches
-    src = tmp_path / "events"
-    src.mkdir()
-    chunks = [corpus[0:6], corpus[6:12], corpus[12:]]
-    for i, chunk in enumerate(chunks):
-        (src / f"drop_{i}.jsonl").write_text(
-            "\n".join(_raw_json(e) for e in chunk) + "\n"
-        )
-
-    paths = sp.run_multi_hop(
-        spark, str(src), str(tmp_path / "work"), max_files_per_trigger=1
-    )
-    got = sp.materialize_tables(spark, paths["changes"])
+    got = sp.materialize_tables(spark, three_batch_changes)
 
     # batch reference on the same events — via the raw-JSON parse path too
     raw_df = spark.createDataFrame(
@@ -302,29 +316,91 @@ def test_multi_hop_matches_batch(spark, tmp_path):
         assert gv == wv, f"{name} mismatch"
 
 
+def test_multi_hop_matches_batch_replay(spark, three_batch_changes):
+    """Default-selection parity pin: the five typed tables of the 3-hop
+    topology (three ordered one-file micro-batches, change-log fold,
+    ``_typed_entity``) equal ``batch_replay.replay_tables`` on the same
+    events, row for row."""
+    from ph_ee_nats_importer_rdbms_spark.operators.classify import parse_envelope
+    from ph_ee_nats_importer_rdbms_spark.streaming import batch_replay as br
+    from ph_ee_nats_importer_rdbms_spark.streaming import pipeline as sp
+    from ph_ee_nats_importer_rdbms_spark.streaming.replay import (
+        _ENTITY_SCHEMAS,
+        TABLES,
+    )
+
+    got = sp.materialize_tables(spark, three_batch_changes)
+    for name, schema in _ENTITY_SCHEMAS.items():
+        got[name] = br._typed_entity(got[name], schema)
+    raw = spark.createDataFrame(
+        [(_raw_json(e),) for e in _corpus()], "value string"
+    )
+    want = br.replay_tables(spark, parse_envelope(raw))
+    for name in TABLES:
+        cols = want[name].columns
+        w = sorted(map(tuple, want[name].collect()), key=repr)
+        g = sorted(map(tuple, got[name].select(*cols).collect()), key=repr)
+        assert w, f"{name}: empty on both sides proves nothing"
+        assert g == w, f"{name} diverges"
+
+
+def test_resolve_partition_tie_breaks_on_partition_id(spark):
+    """Two truthy events for one definition key share (timestamp,
+    position) on partitions 2 and 1 and arrive in that order; the
+    partition-2 id sorts after the partition-1 id. The streaming resolve
+    batch and the native ``resolve_events`` both resolve the key to the
+    partition-1 id."""
+    import pandas as pd
+
+    from ph_ee_nats_importer_rdbms_spark.streaming import batch_replay as br
+    from ph_ee_nats_importer_rdbms_spark.streaming import pipeline as sp
+
+    cols = [f.name for f in br.FLAT_SCHEMA.fields]
+
+    def event(partition, bpmn, ts, position):
+        return {
+            **{c: None for c in cols},
+            "partition_id": partition,
+            "position": position,
+            "key": 10 + partition,
+            "timestamp": ts,
+            "record_type": "EVENT",
+            "value_type": "PROCESS_INSTANCE",
+            "intent": "ELEMENT_ACTIVATING",
+            "bpmn_process_id": bpmn,
+            "process_instance_key": 7,
+            "process_definition_key": 42,
+        }
+
+    rows = [
+        event(2, "flow-p2", 1_000, 5),
+        event(1, "flow-p1", 1_000, 5),
+        event(1, "", 2_000, 6),  # the gapped row takes the resolution
+    ]
+    resolved, buffered, out = sp._resolve_batch(
+        None, [], pd.DataFrame(rows, columns=cols)
+    )
+    assert resolved == "flow-p1" and buffered == []
+    assert out.loc[out["timestamp"] == 2_000, "bpmn_process_id"].tolist() == [
+        "flow-p1"
+    ]
+
+    df = spark.createDataFrame(
+        [tuple(r[c] for c in cols) for r in rows], br.FLAT_SCHEMA
+    )
+    native = br.resolve_events(df).filter("timestamp = 2000").collect()
+    assert [r["bpmn_process_id"] for r in native] == ["flow-p1"]
+
+
 def test_multi_hop_rocksdb_state_store(spark, tmp_path):
     """Same 3-hop topology on the RocksDB state-store provider (the
     at-scale backend): cross-batch C4/C5 state must survive in RocksDB and
     produce the identical change log."""
     from ph_ee_nats_importer_rdbms_spark.streaming import pipeline as sp
 
-    corpus = _corpus()
-    src = tmp_path / "events"
-    src.mkdir()
-    chunks = [corpus[0:6], corpus[6:12], corpus[12:]]
-    for i, chunk in enumerate(chunks):
-        (src / f"drop_{i}.jsonl").write_text(
-            "\n".join(_raw_json(e) for e in chunk) + "\n"
-        )
     try:
-        paths = sp.run_multi_hop(
-            spark,
-            str(src),
-            str(tmp_path / "work"),
-            max_files_per_trigger=1,
-            state_store="rocksdb",
-        )
-        got = sp.materialize_tables(spark, paths["changes"])
+        sp.configure_state_store(spark, "rocksdb")
+        got = sp.materialize_tables(spark, _three_drains(spark, tmp_path))
         t = {
             r["workflow_instance_key"]: json.loads(r["payload"])
             for r in got["transfers"].collect()
@@ -368,12 +444,13 @@ def test_multi_hop_restart_resumes_state(spark, tmp_path):
     (src / "drop_0.jsonl").write_text(
         "\n".join(_raw_json(e) for e in batch_a) + "\n"
     )
-    sp.run_multi_hop(spark, str(src), work)
+    sp.run_multi_hop(spark, sp.read_raw_stream(spark, str(src)), work)
 
     (src / "drop_1.jsonl").write_text(
         "\n".join(_raw_json(e) for e in batch_b) + "\n"
     )
-    paths = sp.run_multi_hop(spark, str(src), work)  # restart, same checkpoints
+    # restart, same checkpoints
+    paths = sp.run_multi_hop(spark, sp.read_raw_stream(spark, str(src)), work)
     got = sp.materialize_tables(spark, paths["changes"])
 
     t = {
@@ -432,7 +509,9 @@ def test_multi_hop_matches_batch_at_corpus_scale(spark, tmp_path):
         )
 
     paths = sp.run_multi_hop(
-        spark, str(src), str(tmp_path / "cs_work"), max_files_per_trigger=1
+        spark,
+        sp.read_raw_stream(spark, str(src), max_files_per_trigger=1),
+        str(tmp_path / "cs_work"),
     )
     got = sp.materialize_tables(spark, paths["changes"])
     want = run_import_pipeline(corpus_df)
@@ -493,71 +572,6 @@ def test_multi_hop_matches_batch_at_corpus_scale(spark, tmp_path):
     assert batch_snap(want["batches"], b_fields) == stream_snap(
         got["batches"].collect(), b_fields
     )
-
-
-def test_resolve_state_ttl_evicts_buffer_and_recreates(spark, tmp_path):
-    """C5 buffer eviction (the documented TTL improvement over the
-    reference's unbounded TempDocumentStore): a definition key idle past
-    the TTL is dropped — its buffered rows are discarded — and a late
-    carrier re-creates state from scratch (get-or-create), after which
-    resolution works normally again."""
-    import time
-
-    from ph_ee_nats_importer_rdbms_spark.streaming import pipeline as sp
-
-    src = tmp_path / "ttl_events"
-    src.mkdir()
-    work = str(tmp_path / "ttl_work")
-    ttl_minutes = 1 / 60  # 1 second
-
-    # availableNow runs must not spin no-data batches waiting on pending
-    # timers (see resolve_stage docstring); timers then fire lazily on the
-    # next data-carrying batch — the shape this test asserts.
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-
-    def run():
-        return sp.run_multi_hop(
-            spark, str(src), work, state_ttl_minutes=ttl_minutes
-        )
-
-    # run 1: gapped row (empty bpmn) for def 6001 -> buffered, not emitted
-    (src / "d0.jsonl").write_text(
-        _raw_json(variable_event(200, "batchId", '"B-9"', 1_000, bpmn="", definition=6001)) + "\n"
-    )
-    paths = run()
-    resolved = spark.read.schema(sp.FLAT_SCHEMA).parquet(paths["resolved"])
-    assert resolved.filter("process_definition_key = 6001").count() == 0
-
-    # run 2 after the TTL: an unrelated key's batch triggers timeout
-    # processing -> def 6001's state (with the buffered row) is evicted
-    time.sleep(1.5)
-    (src / "d1.jsonl").write_text(
-        _raw_json(process_event(300, "ELEMENT_ACTIVATING", 2_000, bpmn="mpesa_flow-tn03", definition=7001)) + "\n"
-    )
-    run()
-
-    # run 3: a carrier for def 6001 re-creates state; a following gapped
-    # row resolves off the re-created mapping. The evicted B-9 row must
-    # NOT replay.
-    (src / "d2.jsonl").write_text(
-        _raw_json(process_event(200, "ELEMENT_ACTIVATING", 3_000, bpmn="bulk_processor-tn02", definition=6001))
-        + "\n"
-        + _raw_json(variable_event(200, "note", '"late"', 3_500, bpmn="", definition=6001))
-        + "\n"
-    )
-    try:
-        paths = run()
-    finally:
-        spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
-    resolved = spark.read.schema(sp.FLAT_SCHEMA).parquet(paths["resolved"])
-    rows = sorted(
-        (r["timestamp"], r["bpmn_process_id"])
-        for r in resolved.filter("process_definition_key = 6001").collect()
-    )
-    assert rows == [
-        (3_000, "bulk_processor-tn02"),
-        (3_500, "bulk_processor-tn02"),
-    ]
 
 
 def test_run_deployment_requires_a_source(spark, tmp_path):

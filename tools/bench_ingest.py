@@ -55,6 +55,9 @@ from ph_ee_nats_importer_rdbms_spark.streaming import (  # noqa: E402
     pipeline as sp,
     replay,
 )
+from ph_ee_nats_importer_rdbms_spark.streaming.batch_replay import (  # noqa: E402
+    _typed_entity,
+)
 
 
 def _flat_corpus(spark, sf_dir):
@@ -68,7 +71,7 @@ def _sink(spark, changes_path: str, out_root: str) -> float:
     for name in replay.TABLES:
         df = tables[name]
         if name in replay._ENTITY_SCHEMAS:
-            df = replay._typed_entity(df, replay._ENTITY_SCHEMAS[name])
+            df = _typed_entity(df, replay._ENTITY_SCHEMAS[name])
         df.write.mode("overwrite").parquet(os.path.join(out_root, name))
     return time.perf_counter() - t0
 
@@ -83,9 +86,8 @@ def run_file(spark, sf_dir, work, partitions, chunks) -> dict:
     spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
     paths = sp.run_multi_hop(
         spark,
-        src,
+        sp.read_raw_stream(spark, src, max_files_per_trigger=1),
         os.path.join(work, "work"),
-        max_files_per_trigger=1,
         hop_timings=hops,
     )
     hops["sink"] = _sink(spark, paths["changes"], os.path.join(work, "tables"))
@@ -117,9 +119,8 @@ def run_wire(spark, sf_dir, work, partitions, waves) -> dict:
             hops["land"] += time.perf_counter() - t0
             paths = sp.run_multi_hop(
                 spark,
-                "",
+                sp.read_landed_stream(spark, landing),
                 os.path.join(work, "work"),
-                events=sp.read_landed_stream(spark, landing),
                 hop_timings=hops,
             )
             # per-wave drain time: wave 1 is a cold topology, wave 2+ a
