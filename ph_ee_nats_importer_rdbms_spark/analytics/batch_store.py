@@ -1,19 +1,28 @@
-"""Manifest-transaction helpers for batch-versioned analytics stores.
+"""Manifest-transaction layer of the batch-versioned analytics stores.
 
 The minimal slice of a Delta/Iceberg commit the incremental stores need
-(single writer, append-mostly), extracted as a utility so new stores
-stop re-implementing it: per-batch artifact directories are INVISIBLE
-until a commit manifest lands; the manifest write is atomic
-(tmp + os.replace); a crashed append leaves only manifest-less garbage
-that the idempotent retry overwrites in place. Same discipline as
-incremental_docs/incremental_vectors (which predate this module and
-carry their own copies, cross-tested against full rebuilds).
+(single writer, append-mostly). This is the ONLY module that knows the
+store format; every incremental store (incremental_docs,
+incremental_curation on top of it, incremental_vectors,
+incremental_embeddings, incremental_training) calls it directly::
+
+    _batches/<seq>_<batch>.json   commit marker, written LAST (atomic
+                                  tmp + os.replace); a batch dir
+                                  without a manifest is invisible
+    <artifact>/<batch>/           one parquet dir per artifact per batch
+
+Per-batch artifact directories are INVISIBLE until a commit manifest
+lands; a crashed append leaves only manifest-less garbage that the
+idempotent retry overwrites in place.
 
 Batch ids are content digests (sha256 of the sorted (key, row-hash)
 pairs, computed engine-side — one scalar to the driver), which is what
 makes a retried or checkpoint-replayed delivery map onto the same
 directories while a same-ids-different-payload delivery gets a fresh id
 (and so hits the re-delivery guard instead of the replay skip).
+:func:`begin_append` is the one append guard and :func:`foreach_batch_sink`
+the one streaming sink: a replayable source plus this idempotent sink is
+the exactly-once composition of Structured Streaming (SIGMOD 2018).
 """
 
 from __future__ import annotations
@@ -25,13 +34,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 BASE_BATCH = "base"
 
-#: Batch-id scheme version recorded in every commit manifest. Scheme 1
-#: (pre round 5) digested only the sorted key set; scheme 2 digests
-#: (key, row-hash) pairs so same-ids-different-payload deliveries get a
-#: fresh id. Manifests WITHOUT the field are scheme 1 by definition —
-#: :func:`replayed_manifest` matches those on the legacy digest so a
-#: checkpoint replay against a pre-upgrade store is still recognized as
-#: a replay instead of tripping the re-delivery guard (ADVICE r5).
+#: Batch-id scheme version recorded in every commit manifest: scheme 2
+#: digests (key, row-hash) pairs (:func:`batch_id_of`). Only scheme-2 ids
+#: are recognized as replays; a manifest without the field (scheme 1, a
+#: digest of the key set alone) never matches, so replaying its delivery
+#: fails loudly on the delivered-keys guard instead of being skipped.
 ID_SCHEME = 2
 
 
@@ -41,6 +48,10 @@ def manifest_dir(root: str) -> str:
 
 def batch_path(root: str, name: str, batch: str) -> str:
     return os.path.join(root, name, batch)
+
+
+def manifest_name(manifest: dict) -> str:
+    return f"{manifest['seq']:06d}_{manifest['batch']}.json"
 
 
 def committed_batches(root: str) -> list[dict]:
@@ -65,7 +76,7 @@ def commit(root: str, manifest: dict) -> None:
     manifest.setdefault("id_scheme", ID_SCHEME)
     mdir = manifest_dir(root)
     os.makedirs(mdir, exist_ok=True)
-    name = f"{manifest['seq']:06d}_{manifest['batch']}.json"
+    name = manifest_name(manifest)
     tmp = os.path.join(mdir, f".{name}.tmp")
     with open(tmp, "w") as f:
         json.dump(manifest, f)
@@ -85,10 +96,26 @@ def write_artifacts(root: str, batch: str, dfs: dict[str, DataFrame]) -> None:
         )
 
 
+def manifest_fingerprint(root: str, committed: list[dict]) -> tuple:
+    """(name, size, mtime_ns) of each committed manifest — a cache key
+    for read paths that memoize per committed state. Every commit writes
+    its manifest through os.replace, so a store rebuilt at the same path
+    (whose base batch is always named "base") still changes the key."""
+    mdir = manifest_dir(root)
+    out = []
+    for m in committed:
+        name = manifest_name(m)
+        st = os.stat(os.path.join(mdir, name))
+        out.append((name, st.st_size, st.st_mtime_ns))
+    return tuple(out)
+
+
 def read_union(
     spark: SparkSession, root: str, name: str, schema: T.StructType | str
 ) -> DataFrame:
-    """Union of an artifact across COMMITTED batches only."""
+    """Union of an artifact across COMMITTED batches only — a crashed
+    append's manifest-less directories are never read. The schema is
+    explicit: an artifact can have an empty dir (no pairs yet)."""
     paths = [
         batch_path(root, name, m["batch"]) for m in committed_batches(root)
     ]
@@ -123,43 +150,6 @@ def committed_count(root: str, name: str) -> int:
     )
 
 
-def legacy_batch_id_of(df: DataFrame, key: str) -> str:
-    """The scheme-1 (pre round 5) id: digest of the sorted key-string
-    set only. Kept solely so :func:`replayed_manifest` can recognize
-    replays against manifests committed before the payload-aware scheme."""
-    row = df.agg(
-        F.sha2(
-            F.concat_ws(
-                ",", F.sort_array(F.collect_list(F.col(key).cast("string")))
-            ),
-            256,
-        ).alias("h")
-    ).collect()[0]
-    return row["h"][:16]
-
-
-def replayed_manifest(committed: list[dict], batch: str, legacy_id) -> dict | None:
-    """The committed manifest this delivery replays, or None.
-
-    ``batch`` is the current-scheme id; manifests recorded under an older
-    scheme (no ``id_scheme`` field, or a lower version) are matched on
-    the legacy digest instead — computed lazily via the ``legacy_id``
-    thunk, and only when such manifests exist, so upgraded stores pay
-    nothing. This is what lets a byte-identical checkpoint replay against
-    a pre-upgrade store skip cleanly instead of falling through to the
-    delivered-ids guard and raising."""
-    for m in committed:
-        if m["batch"] == batch:
-            return m
-    legacy = [m for m in committed if m.get("id_scheme", 1) < ID_SCHEME]
-    if legacy:
-        old = legacy_id()
-        for m in legacy:
-            if m["batch"] == old:
-                return m
-    return None
-
-
 def batch_id_of(df: DataFrame, key: str) -> str:
     """Deterministic content digest of the batch: sha256 over the sorted
     ``(key, xxhash64(all columns))`` pairs. Hashing the PAYLOAD, not just
@@ -181,6 +171,72 @@ def batch_id_of(df: DataFrame, key: str) -> str:
         ).alias("h")
     ).collect()[0]
     return row["h"][:16]
+
+
+def is_replay(df: DataFrame, root: str, key: str) -> bool:
+    """True when this exact delivery (same content digest) is already
+    committed — the cheap probe (one config-sized digest agg, no
+    artifact reads), so wrappers that compute pre-commit statistics can
+    short-circuit a replay before paying for them."""
+    batch = batch_id_of(df, key)
+    return any(m["batch"] == batch for m in committed_batches(root))
+
+
+def begin_append(
+    spark: SparkSession,
+    df: DataFrame,
+    root: str,
+    key: str,
+    who: str,
+    held: str,
+    skip_committed: bool,
+) -> tuple[list[dict], str] | None:
+    """The append guard of every store: returns (committed manifests,
+    batch id) for a delivery that may go ahead, or None for a replay of
+    an already-committed batch under ``skip_committed`` (the caller then
+    returns its no-op stats).
+
+    Raises ``ValueError`` for a committed batch without
+    ``skip_committed``, and for a delivery that re-delivers a key of the
+    committed ``delivered`` artifact (``{key} long``) — a same-ids,
+    different-payload delivery gets a fresh id and lands here, never in
+    the replay skip. ``who`` names the append in the messages and
+    ``held`` says where the key already is ("already in the store")."""
+    committed = committed_batches(root)
+    batch = batch_id_of(df, key)
+    if any(m["batch"] == batch for m in committed):
+        if skip_committed:
+            return None
+        raise ValueError(
+            f"{who}: batch {batch} already committed — "
+            "this exact delivery has been applied (retry after success?)"
+        )
+    delivered = read_union(spark, root, "delivered", f"{key} long")
+    dup = df.select(key).join(delivered, key, "leftsemi").limit(1).collect()
+    if dup:
+        raise ValueError(
+            f"{who}: {key} {dup[0][0]} {held} — "
+            f"deliveries must carry new {key}s"
+        )
+    return committed, batch
+
+
+def foreach_batch_sink(append, root: str):
+    """``foreachBatch`` sink folding a stream of deliveries (a landing
+    zone read with ``readStream``) into a store micro-batch by
+    micro-batch; ``append(spark, df, root, skip_committed=...)`` is the
+    store's append function.
+
+    Exactly-once composition: the checkpoint replays a failed micro-batch
+    with identical content, the batch id is a digest of that content,
+    and ``skip_committed`` turns the replay into a no-op — no sink-side
+    offset bookkeeping."""
+
+    def sink(batch_df: DataFrame, epoch_id: int) -> None:
+        if not batch_df.isEmpty():
+            append(batch_df.sparkSession, batch_df, root, skip_committed=True)
+
+    return sink
 
 
 def hash_subsample(

@@ -157,14 +157,14 @@ def append_curation_batch(
     monitoring jobs (vocab churn, BPE pair merge, NB agreement scan) —
     the checkpoint-replay no-op costs one digest probe, not a full
     pre-commit statistics pass (driver ADVICE r10)."""
-    if skip_committed and incremental_docs.is_replay(new_docs, root):
+    if skip_committed and bs.is_replay(new_docs, root, "doc_id"):
         return {"new_docs": 0, "skipped": True}
     vp = vocab_partial_of(new_docs).localCheckpoint(eager=True)
     pp = bpe_pair_partial_of(new_docs).localCheckpoint(eager=True)
     frozen = _frozen_vocab_head(root)
     manifest_extra: dict = {}
     if frozen is not None:
-        committed_vp = incremental_docs.read_artifact(
+        committed_vp = bs.read_union(
             spark, root, "vocab_partial", VOCAB_PARTIAL_SCHEMA
         )
         cur = set(_vocab_head(committed_vp.unionByName(vp)))
@@ -177,7 +177,7 @@ def append_curation_batch(
         }
     frozen_pairs = _frozen_pair_head(root)
     if frozen_pairs is not None:
-        committed_pp = incremental_docs.read_artifact(
+        committed_pp = bs.read_union(
             spark, root, "bpe_pair_partial", BPE_PAIR_PARTIAL_SCHEMA
         )
         cur_p = {tuple(p) for p in _pair_head(committed_pp.unionByName(pp))}
@@ -208,31 +208,12 @@ def append_curation_batch(
     )
 
 
-def streaming_curation_sink(root: str):
-    """``foreachBatch`` sink: document deliveries arriving as a STREAM
-    (a landing zone the crawler/vendor drop lands in) fold into the
-    curation store micro-batch by micro-batch. Exactly-once by the same
-    composition as the vector-index sink (incremental_vectors): the
-    checkpoint replays a failed micro-batch with identical content, the
-    batch id is that content's digest, and ``skip_committed`` makes the
-    replay a no-op — each delivery curates exactly once with no sink-side
-    offset bookkeeping."""
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if not batch_df.isEmpty():
-            append_curation_batch(
-                batch_df.sparkSession, batch_df, root, skip_committed=True
-            )
-
-    return sink
-
-
 def read_curation(spark: SparkSession, root: str) -> DataFrame:
     """The CURRENT whole-corpus verdict: committed metric union joined to
     the latest labeling, through the shared cascade. Labels carry only
     docs that appear in some near-dup pair; everything else is its own
     keeper (the left join + coalesce inside the cascade)."""
-    metrics = incremental_docs.read_artifact(spark, root, "metrics", METRICS_SCHEMA)
+    metrics = bs.read_union(spark, root, "metrics", METRICS_SCHEMA)
     dup = (
         incremental_docs.read_labels(spark, root)
         .select(
@@ -371,9 +352,7 @@ def read_vocabulary(spark: SparkSession, root: str, top_k: int | None = None):
 
     k = top_k or VOCAB_TOP_K
     merged = (
-        incremental_docs.read_artifact(
-            spark, root, "vocab_partial", VOCAB_PARTIAL_SCHEMA
-        )
+        bs.read_union(spark, root, "vocab_partial", VOCAB_PARTIAL_SCHEMA)
         .groupBy("token")
         .agg(
             F.sum("n_occurrences").alias("n_occurrences"),
@@ -747,9 +726,7 @@ def read_corpus_report(spark: SparkSession, root: str) -> DataFrame:
     corpus re-scan."""
     from ph_ee_nats_importer_rdbms_spark.analytics.text import corpus_report_of
 
-    metrics = incremental_docs.read_artifact(
-        spark, root, "metrics", METRICS_SCHEMA
-    )
+    metrics = bs.read_union(spark, root, "metrics", METRICS_SCHEMA)
     verdict = read_curation(spark, root)
     return corpus_report_of(metrics.join(verdict, "doc_id"))
 

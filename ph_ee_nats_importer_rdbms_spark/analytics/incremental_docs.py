@@ -26,13 +26,11 @@ hypothesis fuzz): after any sequence of appends, ``pairs`` equals the
 from-scratch pair set of the union corpus and ``labels`` equals the
 from-scratch clustering.
 
-Store layout — batch-versioned with COMMIT MANIFESTS (the minimal
-manifest-transaction shape a Delta/Iceberg table would provide at lake
-scale; single writer assumed, like the deployed importer)::
+Store layout — per-batch artifact dirs made visible by batch_store's
+COMMIT MANIFESTS (the minimal manifest-transaction shape a Delta/Iceberg
+table would provide at lake scale; single writer assumed, like the
+deployed importer)::
 
-    _batches/<seq>_<batch>.json   commit marker, written LAST (atomic
-                                  os.replace); a batch dir without a
-                                  manifest is invisible to every reader
     shingles/<batch>/    (doc_id, shingles)           per-batch dir
     signatures/<batch>/  (doc_id, sig_0..sig_11)      per-batch dir
     bands/<batch>/       (doc_id, band_id, band_key)  per-batch dir
@@ -62,9 +60,6 @@ source-sliceable — and is out of scope for this module).
 """
 
 from __future__ import annotations
-
-import json
-import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
@@ -112,78 +107,18 @@ _SCHEMAS = {
     ),
 }
 
-_BASE_BATCH = "base"
-
-
-def _manifest_dir(root: str) -> str:
-    return os.path.join(root, "_batches")
-
-
-def _batch_path(root: str, name: str, batch: str) -> str:
-    return os.path.join(root, name, batch)
-
-
-def committed_batches(root: str) -> list[dict]:
-    """Commit manifests in sequence order — the store's visible state."""
-    mdir = _manifest_dir(root)
-    try:
-        names = sorted(n for n in os.listdir(mdir) if n.endswith(".json"))
-    except OSError:
-        return []
-    out = []
-    for n in names:
-        with open(os.path.join(mdir, n)) as f:
-            out.append(json.load(f))
-    return out
-
-
-def _commit(root: str, manifest: dict) -> None:
-    """Write the commit marker atomically (tmp + os.replace) — the ONLY
-    point at which a batch becomes visible."""
-    manifest.setdefault("id_scheme", bs.ID_SCHEME)
-    mdir = _manifest_dir(root)
-    os.makedirs(mdir, exist_ok=True)
-    name = f"{manifest['seq']:06d}_{manifest['batch']}.json"
-    tmp = os.path.join(mdir, f".{name}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-        f.write("\n")
-    os.replace(tmp, os.path.join(mdir, name))
-
-
-def _read(
-    spark: SparkSession, root: str, name: str, schema: T.StructType | None = None
-) -> DataFrame:
-    """Union of the artifact across COMMITTED batches only — a crashed
-    append's manifest-less directories are never read. Explicit schema: a
-    store whose corpus has no near-dups yet has an empty pairs dir."""
-    paths = [
-        _batch_path(root, name, m["batch"])
-        for m in committed_batches(root)
-    ]
-    return spark.read.schema(schema or _SCHEMAS[name]).parquet(*paths)
-
-
-def read_artifact(
-    spark: SparkSession, root: str, name: str, schema: T.StructType
-) -> DataFrame:
-    """Committed union of an EXTRA (caller-defined) per-batch artifact —
-    the read side of the ``extra`` parameter of build_index/append_batch.
-    The caller owns the schema (it isn't in this module's registry)."""
-    return _read(spark, root, name, schema)
-
 
 def read_pairs(spark: SparkSession, root: str) -> DataFrame:
-    return _read(spark, root, "pairs")
+    return bs.read_union(spark, root, "pairs", _SCHEMAS["pairs"])
 
 
 def read_labels(spark: SparkSession, root: str) -> DataFrame:
     """The CURRENT labeling = the latest committed batch's labels version
     (each commit writes a full replacement; the manifest is the pointer,
     so no in-place swap ever hides the directory from a reader)."""
-    latest = committed_batches(root)[-1]
+    latest = bs.committed_batches(root)[-1]
     return spark.read.schema(_SCHEMAS["labels"]).parquet(
-        _batch_path(root, "labels", latest["batch"])
+        bs.batch_path(root, "labels", latest["batch"])
     )
 
 
@@ -192,51 +127,6 @@ def _cc_or_empty(spark: SparkSession, pairs: DataFrame) -> DataFrame:
     if edges.isEmpty():  # bounded probe, not a full count job
         return spark.createDataFrame([], _SCHEMAS["labels"])
     return connected_components(edges)
-
-
-def _legacy_batch_id_of(docs: DataFrame) -> str:
-    """The scheme-1 id this store used before round 5 (sorted doc_id set,
-    numeric sort, no row hash) — kept so replays against pre-upgrade
-    manifests are still recognized (batch_store.ID_SCHEME)."""
-    row = docs.agg(
-        F.sha2(
-            F.concat_ws(",", F.sort_array(F.collect_list(F.col("doc_id")))), 256
-        ).alias("h")
-    ).collect()[0]
-    return row["h"][:16]
-
-
-def _batch_id_of(docs: DataFrame) -> str:
-    """Deterministic batch id: digest of the sorted (doc_id, xxhash64(row))
-    pairs, computed engine-side (one scalar to the driver). A retried
-    delivery of the same BYTES maps to the same directories (idempotent
-    overwrite); a delivery reusing seen ids with different text gets a
-    fresh id and is rejected by the re-delivery guard rather than
-    silently dropped as a replay."""
-    cols = sorted(docs.columns)
-    pair = F.concat_ws(
-        ":",
-        F.col("doc_id").cast("string"),
-        F.xxhash64(*[F.col(c) for c in cols]).cast("string"),
-    )
-    row = docs.agg(
-        F.sha2(
-            F.concat_ws(",", F.sort_array(F.collect_list(pair))), 256
-        ).alias("h")
-    ).collect()[0]
-    return row["h"][:16]
-
-
-def _write_artifacts(
-    root: str, batch: str, dfs: dict[str, DataFrame]
-) -> None:
-    from ph_ee_nats_importer_rdbms_spark.sources.files import compact_for_write
-
-    # AQE-sized files (r13, guide §6) — see batch_store.write_artifacts
-    for name, df in dfs.items():
-        compact_for_write(df).write.mode("overwrite").parquet(
-            _batch_path(root, name, batch)
-        )
 
 
 def build_index(
@@ -251,7 +141,8 @@ def build_index(
     ``extra`` adds caller-defined per-batch artifacts (name -> relation
     derived from THIS batch's docs) to the same transaction: they stage
     into batch dirs with everything else and become visible atomically
-    with the one commit manifest. Read back with :func:`read_artifact`.
+    with the one commit manifest. Read back with
+    :func:`batch_store.read_union`.
     The curation store (incremental_curation.py) rides its per-doc
     metrics on this. ``manifest_extra`` adds caller-defined JSON fields
     to the commit manifest itself (config-sized monitoring statistics —
@@ -271,9 +162,9 @@ def build_index(
         .distinct()
     )
     pairs = jaccard_verify(candidates, sh).localCheckpoint(eager=True)
-    _write_artifacts(
+    bs.write_artifacts(
         root,
-        _BASE_BATCH,
+        bs.BASE_BATCH,
         {
             "shingles": sh,
             "signatures": sigs,
@@ -284,25 +175,8 @@ def build_index(
             **(extra or {}),
         },
     )
-    _commit(root, {"seq": 0, "batch": _BASE_BATCH, **(manifest_extra or {})})
-
-
-def is_replay(new_docs: DataFrame, root: str) -> bool:
-    """True when this exact delivery (same content digest) is already
-    committed — the cheap is-committed probe (one config-sized digest
-    agg, no artifact reads), so wrappers that compute pre-commit
-    monitoring statistics (curation churn, NB agreement) can
-    short-circuit a ``skip_committed`` re-delivery BEFORE paying those
-    jobs (driver ADVICE r10). Same recognition rules as the append
-    guard itself, legacy id scheme included."""
-    committed = committed_batches(root)
-    return (
-        bs.replayed_manifest(
-            committed,
-            _batch_id_of(new_docs),
-            lambda: _legacy_batch_id_of(new_docs),
-        )
-        is not None
+    bs.commit(
+        root, {"seq": 0, "batch": bs.BASE_BATCH, **(manifest_extra or {})}
     )
 
 
@@ -327,28 +201,13 @@ def append_batch(
     ``skip_committed`` turns an exact-batch replay (same content digest)
     into a no-op instead of an error — the checkpoint-replay semantics a
     ``foreachBatch`` streaming sink needs for exactly-once."""
-    committed = committed_batches(root)
-    batch = _batch_id_of(new_docs)
-    if bs.replayed_manifest(
-        committed, batch, lambda: _legacy_batch_id_of(new_docs)
-    ):
-        if skip_committed:
-            return {"new_docs": 0, "skipped": True}
-        raise ValueError(
-            f"append_batch: batch {batch} already committed — "
-            "this exact delivery has been applied (retry after success?)"
-        )
-    dup = (
-        new_docs.select("doc_id")
-        .join(_read(spark, root, "delivered"), "doc_id", "leftsemi")
-        .limit(1)
-        .collect()
+    began = bs.begin_append(
+        spark, new_docs, root, "doc_id", "append_batch",
+        "already in the store", skip_committed,
     )
-    if dup:
-        raise ValueError(
-            f"append_batch: doc_id {dup[0][0]} already in the store — "
-            "batches must carry new doc_ids (re-deliveries are not appends)"
-        )
+    if began is None:
+        return {"new_docs": 0, "skipped": True}
+    committed, batch = began
     sh_new = shingles_of(new_docs).localCheckpoint(eager=True)
     sig_new = signatures_of(sh_new).localCheckpoint(eager=True)
     bands_new = bands_of(sig_new).localCheckpoint(eager=True)
@@ -356,7 +215,9 @@ def append_batch(
     # candidate pairs: every pair involving a new doc collides with it in
     # >=1 band, so probing the FULL band table (old ∪ new) with only the
     # new bands finds old↔new and new↔new pairs; old↔old never regenerates.
-    bands_all = _read(spark, root, "bands").unionByName(bands_new)
+    bands_all = bs.read_union(
+        spark, root, "bands", _SCHEMAS["bands"]
+    ).unionByName(bands_new)
     a = bands_new.alias("a")
     b = bands_all.alias("b")
     candidates = (
@@ -375,7 +236,9 @@ def append_batch(
     # verification needs both sides' shingle sets; candidates only ever
     # reference new docs + their collision partners, so the join against
     # the stored shingles stays candidate-proportional.
-    sh_all = _read(spark, root, "shingles").unionByName(sh_new)
+    sh_all = bs.read_union(
+        spark, root, "shingles", _SCHEMAS["shingles"]
+    ).unionByName(sh_new)
     pairs_new = jaccard_verify(candidates, sh_all).localCheckpoint(eager=True)
 
     # label merge: old labeling as contraction edges + the new pairs
@@ -389,7 +252,7 @@ def append_batch(
 
     # stage everything into batch-deterministic dirs (idempotent on retry),
     # THEN commit: the manifest write is the transaction boundary.
-    _write_artifacts(
+    bs.write_artifacts(
         root,
         batch,
         {
@@ -402,7 +265,7 @@ def append_batch(
             **(extra or {}),
         },
     )
-    _commit(
+    bs.commit(
         root,
         {"seq": len(committed), "batch": batch, **(manifest_extra or {})},
     )

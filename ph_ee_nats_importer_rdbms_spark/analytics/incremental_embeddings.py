@@ -38,7 +38,6 @@ from ph_ee_nats_importer_rdbms_spark.analytics import batch_store as bs
 from ph_ee_nats_importer_rdbms_spark.analytics.dedup import (
     EMBED_COSINE_THRESHOLD,
     EMBED_DIM,
-    EMBED_PLANES,
     EMBED_TARGET_OCC,
     _dot,
     _embed_bucket_col,
@@ -53,66 +52,39 @@ from ph_ee_nats_importer_rdbms_spark.analytics.vector_kernels import (
     sq16_pair_keep_col,
 )
 
-#: round-6 layout: band keys are slim (vec_id, band, bucket) and the
-#: embedding payload lives ONCE per vector in a separate ``vectors``
-#: artifact — bands never duplicate embeddings. Pre-round-6 stores (a
-#: plain plane LIST in planes.json, single-band buckets carrying
-#: embedding+norm, no vectors artifact) stay readable and appendable:
-#: the read paths normalize both layouts to the same relations, and
-#: appends to a legacy store keep writing its layout so read_union
-#: schemas stay uniform across that store's batch dirs.
+#: band keys are slim (vec_id, band, bucket) and the embedding payload
+#: lives ONCE per vector in a separate ``vectors`` artifact — bands never
+#: duplicate embeddings.
 BUCKETS_SCHEMA = "vec_id long, band int, bucket long"
 #: round-11 artifact: per-vector SQ16 pre-filter sketch (VERDICT r10
 #: task #1) — lets the banded candidate join carry ~150 B of fixed-width
 #: columns instead of the raw embedding and thins candidates with the
 #: LOSSLESS Cauchy–Schwarz bound BEFORE the cross-band distinct (the
 #: 1.24e9-key shuffle that exhausted the sf100 box's scratch disk).
-#: Pre-upgrade and legacy stores simply lack the dirs: reads fall back
-#: to the exact path, appends keep the store's shape (never a mixed
-#: store where only some batches carry the sketch).
+#: Every build and append writes it.
 SQ16_SCHEMA = (
     "vec_id long, q16 array<smallint>, s16 double, e16 double,"
     " rn16 double, pnorm double"
 )
-LEGACY_BUCKETS_SCHEMA = (
-    "vec_id long, embedding array<float>, bucket long, norm double"
-)
 VECTORS_SCHEMA = "vec_id long, embedding array<float>, norm double"
 PAIRS_SCHEMA = "vec_a long, vec_b long, cosine double"
 LABELS_SCHEMA = "node long, label long"
-_DELIVERED = "vec_id long"
 
 
 def _planes_path(root: str) -> str:
     return os.path.join(root, "planes.json")
 
 
-def frozen_planes(root: str):
-    """The frozen band structure: a dict {bands, planes_per_band, planes}
-    for round-6 stores, a plain plane list for pre-round-6 stores (both
-    forms are accepted everywhere a structure is taken)."""
+def frozen_planes(root: str) -> dict:
+    """The frozen band structure {bands, planes_per_band, planes}."""
     with open(_planes_path(root)) as f:
         return json.load(f)
 
 
-def _structure_of(planes_or_structure) -> dict:
-    if isinstance(planes_or_structure, dict):
-        return planes_or_structure
-    return {
-        "bands": 1,
-        "planes_per_band": len(planes_or_structure),
-        "planes": planes_or_structure,
-    }
-
-
-def _is_legacy(root: str) -> bool:
-    return isinstance(frozen_planes(root), list)
-
-
-def _bucketed(vectors: DataFrame, structure) -> DataFrame:
+def _bucketed(vectors: DataFrame, structure: dict) -> DataFrame:
     """(vec_id, band, bucket) — banded sign-LSH keys (dedup.py shape)."""
-    s = _structure_of(structure)
-    b, r, planes = s["bands"], s["planes_per_band"], s["planes"]
+    b, r = structure["bands"], structure["planes_per_band"]
+    planes = structure["planes"]
     per_band = F.array(
         *[
             _embed_bucket_col("embedding", planes[i * r : (i + 1) * r])
@@ -124,15 +96,6 @@ def _bucketed(vectors: DataFrame, structure) -> DataFrame:
     )
 
 
-def _bucketed_legacy(vectors: DataFrame, planes: list) -> DataFrame:
-    return vectors.select(
-        "vec_id",
-        "embedding",
-        _embed_bucket_col("embedding", planes).alias("bucket"),
-        _norm("embedding").alias("norm"),
-    )
-
-
 def _vectors_of(vectors: DataFrame) -> DataFrame:
     return vectors.select(
         "vec_id", "embedding", _norm("embedding").alias("norm")
@@ -140,38 +103,13 @@ def _vectors_of(vectors: DataFrame) -> DataFrame:
 
 
 def _store_buckets(spark: SparkSession, root: str) -> DataFrame:
-    """(vec_id, band, bucket) across committed batches, any layout."""
-    if _is_legacy(root):
-        return bs.read_union(
-            spark, root, "buckets", LEGACY_BUCKETS_SCHEMA
-        ).select("vec_id", F.lit(0).alias("band"), "bucket")
+    """(vec_id, band, bucket) across committed batches."""
     return bs.read_union(spark, root, "buckets", BUCKETS_SCHEMA)
 
 
 def _store_vectors(spark: SparkSession, root: str) -> DataFrame:
-    """(vec_id, embedding, norm) across committed batches, any layout."""
-    if _is_legacy(root):
-        return bs.read_union(
-            spark, root, "buckets", LEGACY_BUCKETS_SCHEMA
-        ).select("vec_id", "embedding", "norm")
+    """(vec_id, embedding, norm) across committed batches."""
     return bs.read_union(spark, root, "vectors", VECTORS_SCHEMA)
-
-
-def _sq16_available(root: str) -> bool:
-    """True when EVERY committed batch carries the SQ16 sketch — the
-    prefilter needs metadata for both join sides, so one pre-upgrade
-    batch sends the whole store down the exact path (and appends then
-    skip writing the sketch, keeping the store's shape uniform)."""
-    if _is_legacy(root):
-        return False
-    return all(
-        os.path.isdir(os.path.join(root, "sq16", m["batch"]))
-        for m in bs.committed_batches(root)
-    )
-
-
-def _store_sq16(spark: SparkSession, root: str) -> DataFrame:
-    return bs.read_union(spark, root, "sq16", SQ16_SCHEMA)
 
 
 def _verified_pairs(
@@ -281,18 +219,16 @@ def analytic_recall_floor(structure) -> float:
         _EMBED_DESIGN_P,
     )
 
-    s = _structure_of(structure)
-    b, r = s["bands"], s["planes_per_band"]
+    b, r = structure["bands"], structure["planes_per_band"]
     return 1.0 - (1.0 - _EMBED_DESIGN_P**r) ** b
 
 
 def _measured_recall_stats(
     sample_vec: DataFrame,
-    all_vec: DataFrame,
+    corpus: DataFrame,
     sample_bk: DataFrame,
-    all_bk: DataFrame,
+    corpus_bk: DataFrame,
     n_delivery: int,
-    n_total: int,
 ) -> dict:
     """MEASURED band recall for one delivery (VERDICT r7 task #6): of the
     sampled delivery vectors' TRUE pairs at the floor cosine (exact
@@ -302,10 +238,12 @@ def _measured_recall_stats(
     break it silently — this records the observed value in the commit
     manifest so degradation is a monitored signal, not a documented
     caveat. Bounded: |sample| <= ``RECALL_SAMPLE_MAX`` and the truth
-    pass runs against a deterministic <= ``RECALL_CORPUS_CAP``-row
-    corpus subsample (append-time only — never on a serving path, and
-    never corpus-proportional). ``n_delivery``/``n_total`` come from
-    counts the caller already holds — no extra cardinality jobs."""
+    pass runs against ``corpus``, the union of the per-batch
+    ``recall_sample`` artifacts (deterministic subsamples at the
+    commit-time rate, ~``RECALL_CORPUS_CAP`` rows — append-time only,
+    never on a serving path, and never corpus-proportional), bucketed
+    as ``corpus_bk``. ``n_delivery`` comes from a count the caller
+    already holds — no extra cardinality jobs."""
     from ph_ee_nats_importer_rdbms_spark.analytics.dedup import (
         EMBED_RECALL_FLOOR_COS,
     )
@@ -315,9 +253,6 @@ def _measured_recall_stats(
         F.col("vec_id").alias("id_a"),
         F.col("embedding").alias("emb_a"),
         F.col("norm").alias("norm_a"),
-    )
-    corpus = bs.hash_subsample(
-        all_vec, n_total, RECALL_CORPUS_CAP, "vec_id", "band-recall"
     )
     b = corpus.select(
         F.col("vec_id").alias("id_b"),
@@ -344,7 +279,7 @@ def _measured_recall_stats(
         sample_bk.join(F.broadcast(sample_ids), "vec_id")
         .select("band", "bucket", F.col("vec_id").alias("id_a"))
         .join(
-            all_bk.select(
+            corpus_bk.select(
                 "band", "bucket", F.col("vec_id").alias("id_b")
             ),
             ["band", "bucket"],
@@ -370,50 +305,27 @@ def _measured_recall_stats(
 def _recall_input(
     spark: SparkSession,
     root: str,
-    structure,
+    structure: dict,
     new_vec: DataFrame,
     new_bk: DataFrame,
-    all_vec: DataFrame,
-    all_bk: DataFrame,
     n_delivery: int,
     n_total: int,
 ) -> dict:
-    """Route the recall measurement. Preferred path: the union of the
-    per-batch ``recall_sample`` artifacts (this delivery's recomputed —
-    deterministic — rather than re-read), with the sample BUCKETED
+    """The recall measurement's truth corpus: the union of the committed
+    per-batch ``recall_sample`` artifacts and this delivery's sample
+    (recomputed — deterministic — rather than re-read), BUCKETED
     IN-FLIGHT against the frozen structure: corpus-free I/O, so the
-    monitor cannot break the store's delivery-linear append contract.
-    Fallback for legacy-layout stores and pre-upgrade batches without
-    sample dirs: the full-union measurement (corpus-proportional,
-    documented)."""
-    committed = bs.committed_batches(root)
-    if not _is_legacy(root) and all(
-        os.path.isdir(bs.batch_path(root, "recall_sample", m["batch"]))
-        for m in committed
-    ):
-        from functools import reduce
-
-        cur = bs.hash_subsample(
-            new_vec, n_total, RECALL_CORPUS_CAP, "vec_id", "band-recall"
-        )
-        parts = [
-            spark.read.schema(VECTORS_SCHEMA).parquet(
-                bs.batch_path(root, "recall_sample", m["batch"])
-            )
-            for m in committed
-        ]
-        sample_union = reduce(DataFrame.unionByName, parts, cur).localCheckpoint(
-            eager=True
-        )
-        samp_bk = _bucketed(sample_union, structure)
-        # the union IS the (already-capped) truth corpus: pass a size at
-        # the cap so the helper's own subsample is the identity map
-        return _measured_recall_stats(
-            new_vec, sample_union, new_bk, samp_bk, n_delivery,
-            RECALL_CORPUS_CAP,
-        )
+    monitor cannot break the store's delivery-linear append contract."""
+    sample = bs.hash_subsample(
+        new_vec, n_total, RECALL_CORPUS_CAP, "vec_id", "band-recall"
+    )
+    if bs.committed_batches(root):
+        sample = bs.read_union(
+            spark, root, "recall_sample", VECTORS_SCHEMA
+        ).unionByName(sample)
+    sample = sample.localCheckpoint(eager=True)
     return _measured_recall_stats(
-        new_vec, all_vec, new_bk, all_bk, n_delivery, n_total
+        new_vec, sample, new_bk, _bucketed(sample, structure), n_delivery
     )
 
 
@@ -430,15 +342,14 @@ def _structure_stats(structure, n_total: int, n_delivery: int) -> dict:
     target is the candidate-load multiplier the frozen structure now
     pays versus its design point (the fixed-plane quadratic the sf10
     scaling bench caught, creeping back one delivery at a time)."""
-    s = _structure_of(structure)
-    r = s["planes_per_band"]
+    r = structure["planes_per_band"]
     exp_occ = n_total / float(2**r)
     return {
         "n": int(n_delivery),
         "n_total": int(n_total),
         "expected_occupancy": exp_occ,
         "occupancy_ratio": exp_occ / EMBED_TARGET_OCC,
-        "bands": int(s["bands"]),
+        "bands": int(structure["bands"]),
         "planes_per_band": int(r),
     }
 
@@ -454,59 +365,46 @@ def build_embedding_store(
     spark: SparkSession,
     vectors: DataFrame,
     root: str,
-    planes=None,
+    planes: dict | None = None,
 ) -> None:
     """Full build from a (vec_id, embedding) relation; freezes the band
     structure into the store (an append must never redraw it — same
-    contract as the PQ/IVF codebooks). ``planes`` accepts a structure
-    dict, a plain plane list (single band — the pre-round-6 shape), or
-    None, which sizes the structure from the corpus via
-    :func:`dedup.embed_bands_for` so the store's candidate volume stays
-    ~linear as corpora grow (the fixed-plane quadratic caught by the
-    sf10 scaling bench)."""
+    contract as the PQ/IVF codebooks). ``planes`` is a structure dict
+    {bands, planes_per_band, planes}, or None, which sizes the structure
+    from the corpus via :func:`dedup.embed_bands_for` so the store's
+    candidate volume stays ~linear as corpora grow (the fixed-plane
+    quadratic caught by the sf10 scaling bench)."""
     if planes is None:
         bands, r = embed_bands_for(vectors.count())
-        structure = {
+        planes = {
             "bands": bands,
             "planes_per_band": r,
             "planes": hyperplanes(bands * r, EMBED_DIM),
         }
-    else:
-        structure = _structure_of(planes)
     os.makedirs(root, exist_ok=True)
     with open(_planes_path(root), "w") as f:
-        # a plain list round-trips as a plain list (legacy-layout build)
-        json.dump(planes if isinstance(planes, list) else structure, f)
-    if isinstance(planes, list):
-        bucketed = _bucketed_legacy(vectors, planes).localCheckpoint(
-            eager=True
-        )
-        slim = bucketed.select("vec_id", F.lit(0).alias("band"), "bucket")
-        vec = bucketed.select("vec_id", "embedding", "norm")
-        artifacts = {"buckets": bucketed}
-        meta = None
-    else:
-        slim = _bucketed(vectors, structure).localCheckpoint(eager=True)
-        vec = _vectors_of(vectors).localCheckpoint(eager=True)
-        # the prefilter reads the sketch on BOTH join sides — checkpoint
-        # so the encode runs once per vector, not once per side
-        meta = sq16_meta_of(
-            vectors.select("vec_id", "embedding")
-        ).localCheckpoint(eager=True)
-        artifacts = {"buckets": slim, "vectors": vec, "sq16": meta}
+        json.dump(planes, f)
+    slim = _bucketed(vectors, planes).localCheckpoint(eager=True)
+    vec = _vectors_of(vectors).localCheckpoint(eager=True)
+    # the prefilter reads the sketch on BOTH join sides — checkpoint so
+    # the encode runs once per vector, not once per side
+    meta = sq16_meta_of(
+        vectors.select("vec_id", "embedding")
+    ).localCheckpoint(eager=True)
     pairs = _verified_pairs(
         slim, slim, vec, new_meta=meta, all_meta=meta
     ).localCheckpoint(eager=True)
     n = vec.count()
-    if not isinstance(planes, list):
-        artifacts["recall_sample"] = bs.hash_subsample(
-            vec, n, RECALL_CORPUS_CAP, "vec_id", "band-recall"
-        )
     bs.write_artifacts(
         root,
         bs.BASE_BATCH,
         {
-            **artifacts,
+            "buckets": slim,
+            "vectors": vec,
+            "sq16": meta,
+            "recall_sample": bs.hash_subsample(
+                vec, n, RECALL_CORPUS_CAP, "vec_id", "band-recall"
+            ),
             "pairs": pairs,
             "delivered": vectors.select("vec_id"),
             "labels": _labels_or_empty(
@@ -521,10 +419,8 @@ def build_embedding_store(
         {
             "seq": 0,
             "batch": bs.BASE_BATCH,
-            "structure_drift": _structure_stats(structure, n, n),
-            "recall": _recall_input(
-                spark, root, structure, vec, slim, vec, slim, n, n
-            ),
+            "structure_drift": _structure_stats(planes, n, n),
+            "recall": _recall_input(spark, root, planes, vec, slim, n, n),
         },
     )
 
@@ -559,54 +455,24 @@ def append_embedding_batch(
 ) -> dict:
     """Fold a vector delivery in: bucket the batch against the frozen
     planes, probe the committed bucket table, verify, merge labels."""
-    committed = bs.committed_batches(root)
-    batch = bs.batch_id_of(new_vectors, "vec_id")
-    if bs.replayed_manifest(
-        committed, batch, lambda: bs.legacy_batch_id_of(new_vectors, "vec_id")
-    ):
-        if skip_committed:
-            return {"new_vectors": 0, "skipped": True}
-        raise ValueError(
-            f"append_embedding_batch: batch {batch} already committed — "
-            "this exact delivery has been applied (retry after success?)"
-        )
-    dup = (
-        new_vectors.select("vec_id")
-        .join(
-            bs.read_union(spark, root, "delivered", _DELIVERED),
-            "vec_id",
-            "leftsemi",
-        )
-        .limit(1)
-        .collect()
+    began = bs.begin_append(
+        spark, new_vectors, root, "vec_id", "append_embedding_batch",
+        "already in the store", skip_committed,
     )
-    if dup:
-        raise ValueError(
-            f"append_embedding_batch: vec_id {dup[0][0]} already in the "
-            "store — deliveries must carry new vec_ids"
-        )
+    if began is None:
+        return {"new_vectors": 0, "skipped": True}
+    committed, batch = began
     structure = frozen_planes(root)
-    if _is_legacy(root):
-        # keep a pre-round-6 store's layout uniform across its batch dirs
-        legacy_b = _bucketed_legacy(new_vectors, structure).localCheckpoint(
-            eager=True
-        )
-        new_bk = legacy_b.select("vec_id", F.lit(0).alias("band"), "bucket")
-        new_vec = legacy_b.select("vec_id", "embedding", "norm")
-        artifacts = {"buckets": legacy_b}
-    else:
-        new_bk = _bucketed(new_vectors, structure).localCheckpoint(eager=True)
-        new_vec = _vectors_of(new_vectors).localCheckpoint(eager=True)
-        artifacts = {"buckets": new_bk, "vectors": new_vec}
+    new_bk = _bucketed(new_vectors, structure).localCheckpoint(eager=True)
+    new_vec = _vectors_of(new_vectors).localCheckpoint(eager=True)
     all_bk = _store_buckets(spark, root).unionByName(new_bk)
     all_vec = _store_vectors(spark, root).unionByName(new_vec)
-    new_meta = all_meta = None
-    if _sq16_available(root):
-        new_meta = sq16_meta_of(
-            new_vectors.select("vec_id", "embedding")
-        ).localCheckpoint(eager=True)
-        all_meta = _store_sq16(spark, root).unionByName(new_meta)
-        artifacts["sq16"] = new_meta
+    new_meta = sq16_meta_of(
+        new_vectors.select("vec_id", "embedding")
+    ).localCheckpoint(eager=True)
+    all_meta = bs.read_union(spark, root, "sq16", SQ16_SCHEMA).unionByName(
+        new_meta
+    )
     pairs_new = _verified_pairs(
         new_bk, all_bk, all_vec, new_meta=new_meta, all_meta=all_meta
     ).localCheckpoint(eager=True)
@@ -632,7 +498,9 @@ def append_embedding_batch(
         root,
         batch,
         {
-            **artifacts,
+            "buckets": new_bk,
+            "vectors": new_vec,
+            "sq16": new_meta,
             "pairs": pairs_new,
             "delivered": new_vectors.select("vec_id"),
             "labels": labels,
@@ -640,23 +508,19 @@ def append_embedding_batch(
     )
     n = bs.artifact_count(root, "delivered", batch)
     n_prior = bs.committed_count(root, "delivered")
-    if not _is_legacy(root):
-        # each delivery samples ITSELF at the commit-time corpus rate —
-        # the recall truth pass reads the union of these small dirs, not
-        # the corpus payload (see _measured_recall_stats)
-        bs.write_artifacts(
-            root,
-            batch,
-            {
-                "recall_sample": bs.hash_subsample(
-                    new_vec,
-                    n_prior + n,
-                    RECALL_CORPUS_CAP,
-                    "vec_id",
-                    "band-recall",
-                )
-            },
-        )
+    # each delivery samples ITSELF at the commit-time corpus rate — the
+    # recall truth pass reads the union of these small dirs, not the
+    # corpus payload (see _measured_recall_stats)
+    bs.write_artifacts(
+        root,
+        batch,
+        {
+            "recall_sample": bs.hash_subsample(
+                new_vec, n_prior + n, RECALL_CORPUS_CAP, "vec_id",
+                "band-recall",
+            )
+        },
+    )
     bs.commit(
         root,
         {
@@ -664,8 +528,7 @@ def append_embedding_batch(
             "batch": batch,
             "structure_drift": _structure_stats(structure, n_prior + n, n),
             "recall": _recall_input(
-                spark, root, structure, new_vec, new_bk, all_vec, all_bk,
-                n, n_prior + n,
+                spark, root, structure, new_vec, new_bk, n, n_prior + n
             ),
         },
     )
@@ -751,7 +614,7 @@ def structure_drift_report(
     Deliveries committed by pre-upgrade code carry no stats and surface
     as NULL metrics with a NULL flag (unknown, not healthy) — the same
     contract as ``drift_report``."""
-    s = _structure_of(frozen_planes(root))
+    s = frozen_planes(root)
     frozen = (s["bands"], s["planes_per_band"])
     floor = analytic_recall_floor(s)
     rows = []
@@ -802,7 +665,7 @@ def needs_rebuild(
 
 
 def rebuild_store(
-    spark: SparkSession, old_root: str, new_root: str, planes=None
+    spark: SparkSession, old_root: str, new_root: str, planes: dict | None = None
 ) -> None:
     """The action ``needs_rebuild`` calls for: a full rebuild of the
     store over its own committed corpus into ``new_root``, re-sizing the
@@ -818,20 +681,6 @@ def rebuild_store(
     never an in-place mutation)."""
     vectors = _store_vectors(spark, old_root).select("vec_id", "embedding")
     build_embedding_store(spark, vectors, new_root, planes=planes)
-
-
-def streaming_append_sink(root: str):
-    """``foreachBatch`` sink — same exactly-once composition as the
-    vector-index and curation sinks (content-digest batch ids +
-    skip-committed replay)."""
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if not batch_df.isEmpty():
-            append_embedding_batch(
-                batch_df.sparkSession, batch_df, root, skip_committed=True
-            )
-
-    return sink
 
 
 # --- staged store: the registry's store-backed near-dup artifact ----------

@@ -37,7 +37,6 @@ from ph_ee_nats_importer_rdbms_spark.analytics.training import (
 )
 
 PACK_SCHEMA = "shard_id int, doc_id bigint, n_tokens int, seq_id int"
-_DELIVERED = "doc_id long"
 
 
 def build_pack_store(spark: SparkSession, docs: DataFrame, root: str) -> None:
@@ -63,32 +62,13 @@ def append_pack_batch(
     """Pack one delivery into fresh sequences above each shard's
     high-water mark. Returns append stats including the immutability
     cost (sequences opened vs a hypothetical top-up)."""
-    committed = bs.committed_batches(root)
-    batch = bs.batch_id_of(new_docs, "doc_id")
-    if bs.replayed_manifest(
-        committed, batch, lambda: bs.legacy_batch_id_of(new_docs, "doc_id")
-    ):
-        if skip_committed:
-            return {"new_docs": 0, "skipped": True}
-        raise ValueError(
-            f"append_pack_batch: batch {batch} already committed — "
-            "this exact delivery has been applied (retry after success?)"
-        )
-    dup = (
-        new_docs.select("doc_id")
-        .join(
-            bs.read_union(spark, root, "delivered", _DELIVERED),
-            "doc_id",
-            "leftsemi",
-        )
-        .limit(1)
-        .collect()
+    began = bs.begin_append(
+        spark, new_docs, root, "doc_id", "append_pack_batch",
+        "already packed", skip_committed,
     )
-    if dup:
-        raise ValueError(
-            f"append_pack_batch: doc_id {dup[0][0]} already packed — "
-            "deliveries must carry new doc_ids"
-        )
+    if began is None:
+        return {"new_docs": 0, "skipped": True}
+    committed, batch = began
     # per-shard high-water marks are a config-sized relation (PACK_SHARDS
     # rows) — broadcast, no shuffle of the new packing
     marks = (

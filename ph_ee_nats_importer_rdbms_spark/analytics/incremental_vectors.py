@@ -15,9 +15,9 @@ the delivery, never the corpus (the drift monitor's measured
 probe-coverage adds a bounded constant per delivery — sampled queries
 against a capped corpus subsample, see ``PROBE_RECALL_CORPUS_CAP``).
 
-Store layout mirrors incremental_docs' manifest-transaction shape::
+Store layout — per-batch artifact dirs made visible by batch_store's
+commit manifests::
 
-    _batches/<seq>_<batch>.json   commit marker, written LAST (atomic)
     codebooks.json                frozen IVF centroids + PQ books (build time)
     pq_codes/<batch>/             (vec_id, codes, approx_norm2)
     ivf_assign/<batch>/           (vec_id, cluster_id)
@@ -25,11 +25,14 @@ Store layout mirrors incremental_docs' manifest-transaction shape::
     vectors/<batch>/              (vec_id, embedding)  retrain corpus
     lists/<batch>/cluster_id=N/   codes inside their inverted lists —
                                   the partition-pruned serving layout
+    recall_sample/<batch>/        (vec_id, embedding)  the batch's own
+                                  hash-subsample for the probe monitor
 
-Crash safety and the re-delivery guard follow incremental_docs exactly:
-per-batch writes are deterministic overwrites into batch-named dirs, a
-batch without a manifest is invisible, and the guard runs against the
-committed ``delivered`` relation.
+Every build and append writes all six per-batch dirs. Crash safety and
+the re-delivery guard are batch_store's: per-batch writes are
+deterministic overwrites into batch-named dirs, a batch without a
+manifest is invisible, and the guard runs against the committed
+``delivered`` relation.
 
 Parity contract (tests/test_incremental_vectors.py, incl. a fuzz over
 random batch splits): after any sequence of appends, ``read_codes`` /
@@ -101,90 +104,18 @@ _SCHEMAS = {
     ),
 }
 
-_BASE_BATCH = "base"
-
-
-def _manifest_dir(root: str) -> str:
-    return os.path.join(root, "_batches")
-
-
-def _batch_path(root: str, name: str, batch: str) -> str:
-    return os.path.join(root, name, batch)
-
-
-def committed_batches(root: str) -> list[dict]:
-    mdir = _manifest_dir(root)
-    try:
-        names = sorted(n for n in os.listdir(mdir) if n.endswith(".json"))
-    except OSError:
-        return []
-    out = []
-    for n in names:
-        with open(os.path.join(mdir, n)) as f:
-            out.append(json.load(f))
-    return out
-
-
-def _commit(root: str, manifest: dict) -> None:
-    manifest.setdefault("id_scheme", bs.ID_SCHEME)
-    mdir = _manifest_dir(root)
-    os.makedirs(mdir, exist_ok=True)
-    name = f"{manifest['seq']:06d}_{manifest['batch']}.json"
-    tmp = os.path.join(mdir, f".{name}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-        f.write("\n")
-    os.replace(tmp, os.path.join(mdir, name))
-
-
-def _read(spark: SparkSession, root: str, name: str) -> DataFrame:
-    paths = [
-        _batch_path(root, name, m["batch"]) for m in committed_batches(root)
-    ]
-    return spark.read.schema(_SCHEMAS[name]).parquet(*paths)
-
 
 def read_codes(spark: SparkSession, root: str) -> DataFrame:
-    return _read(spark, root, "pq_codes")
+    return bs.read_union(spark, root, "pq_codes", _SCHEMAS["pq_codes"])
 
 
 def read_assignments(spark: SparkSession, root: str) -> DataFrame:
-    return _read(spark, root, "ivf_assign")
+    return bs.read_union(spark, root, "ivf_assign", _SCHEMAS["ivf_assign"])
 
 
 def frozen_codebooks(root: str) -> dict:
     with open(os.path.join(root, "codebooks.json")) as f:
         return json.load(f)
-
-
-def _legacy_batch_id_of(vectors: DataFrame) -> str:
-    """The scheme-1 id this store used before round 5 (sorted vec_id set,
-    numeric sort, no row hash) — kept so replays against pre-upgrade
-    manifests are still recognized (batch_store.ID_SCHEME)."""
-    row = vectors.agg(
-        F.sha2(
-            F.concat_ws(",", F.sort_array(F.collect_list(F.col("vec_id")))), 256
-        ).alias("h")
-    ).collect()[0]
-    return row["h"][:16]
-
-
-def _batch_id_of(vectors: DataFrame) -> str:
-    """Digest of the sorted (vec_id, xxhash64(row)) pairs — payload-aware,
-    so only byte-identical replays are skipped (see batch_store.batch_id_of
-    for the rationale)."""
-    cols = sorted(vectors.columns)
-    pair = F.concat_ws(
-        ":",
-        F.col("vec_id").cast("string"),
-        F.xxhash64(*[F.col(c) for c in cols]).cast("string"),
-    )
-    row = vectors.agg(
-        F.sha2(
-            F.concat_ws(",", F.sort_array(F.collect_list(pair))), 256
-        ).alias("h")
-    ).collect()[0]
-    return row["h"][:16]
 
 
 def _encode_and_write(
@@ -212,55 +143,42 @@ def _encode_and_write(
     batch_float = vecs.select(
         "vec_id", F.col("embedding").cast("array<float>").alias("embedding")
     )
-    # corpus size BEFORE this delivery, from manifests/footers — sizes
-    # the batch's self-sample rate (None on unsizeable pre-upgrade
-    # stores: the sample and the measurement are skipped, never guessed)
-    prior = committed_batches(root)
-    try:
-        n_prior = index_size(root) if prior else 0
-    except ValueError:  # pre-upgrade manifests, unreadable footers
-        n_prior = None
+    # corpus size BEFORE this delivery, from the manifests — sizes the
+    # batch's self-sample rate
+    prior = bs.committed_batches(root)
+    n_prior = index_size(root)
     agg = codes.agg(
         F.count("*").alias("n"), F.avg("qerr").alias("mean_qerr")
     ).collect()[0]
     n_batch = int(agg["n"])
-    artifacts = [
-        ("pq_codes", codes.select("vec_id", "codes", "approx_norm2")),
-        ("ivf_assign", assign),
-        ("delivered", vectors.select("vec_id")),
-        # the store CARRIES its corpus (like the embedding store): raw
-        # vectors are what a retrain re-trains and re-encodes against —
-        # codes from the frozen books cannot be transcoded to new books
-        ("vectors", batch_float),
-    ]
-    if n_prior is not None:
-        # each delivery samples ITSELF at the commit-time corpus rate
-        # (cap / running total): the truth pass then reads the union of
-        # these per-batch samples — ~cap rows per committed epoch of
-        # corpus doubling, never the corpus itself — so appends stay
-        # delivery-linear in I/O, not just in compute. Older batches are
-        # oversampled relative to later ones (their rate was set when
-        # the corpus was smaller); the monitor's reference coverage is
-        # measured under the same scheme, so the comparison is apples
-        # to apples.
-        artifacts.append(
-            (
-                "recall_sample",
-                _hash_subsample(
-                    batch_float,
-                    n_prior + n_batch,
-                    PROBE_RECALL_CORPUS_CAP,
-                    "vec_id",
-                ),
-            )
-        )
+    # each delivery samples ITSELF at the commit-time corpus rate
+    # (cap / running total): the truth pass then reads the union of
+    # these per-batch samples — ~cap rows per committed epoch of corpus
+    # doubling, never the corpus itself — so appends stay
+    # delivery-linear in I/O, not just in compute. Older batches are
+    # oversampled relative to later ones (their rate was set when the
+    # corpus was smaller); the monitor's reference coverage is measured
+    # under the same scheme, so the comparison is apples to apples.
+    sample = _hash_subsample(
+        batch_float, n_prior + n_batch, PROBE_RECALL_CORPUS_CAP, "vec_id"
+    )
+    bs.write_artifacts(
+        root,
+        batch,
+        {
+            "pq_codes": codes.select("vec_id", "codes", "approx_norm2"),
+            "ivf_assign": assign,
+            "delivered": vectors.select("vec_id"),
+            # the store CARRIES its corpus (like the embedding store): raw
+            # vectors are what a retrain re-trains and re-encodes against
+            # — codes from the frozen books cannot be transcoded to new
+            # books
+            "vectors": batch_float,
+            "recall_sample": sample,
+        },
+    )
     from ph_ee_nats_importer_rdbms_spark.sources.files import compact_for_write
 
-    # AQE-sized files (r13, guide §6) — see batch_store.write_artifacts
-    for name, df in artifacts:
-        compact_for_write(df).write.mode("overwrite").parquet(
-            _batch_path(root, name, batch)
-        )
     # the serving layout: codes joined into their inverted lists, one
     # partition dir per cluster — probes become a partition-pruned read
     # (search_store), the IndexIVFPQ shape save_ivf_store(with_codes=True)
@@ -274,71 +192,25 @@ def _encode_and_write(
         codes.select("vec_id", "codes", "approx_norm2").join(assign, "vec_id"),
         "cluster_id",
     ).write.mode("overwrite").partitionBy("cluster_id").parquet(
-        _batch_path(root, "lists", batch)
+        bs.batch_path(root, "lists", batch)
     )
     occ = {
         str(r["cluster_id"]): r["c"]
         for r in assign.groupBy("cluster_id").agg(F.count("*").alias("c")).collect()
     }
-    # measured serving-recall input. Preferred path: the union of the
-    # per-batch recall_sample artifacts (this delivery's included) —
-    # corpus-FREE I/O, with the sampled neighbors' cluster ids
-    # recomputed in-flight against the frozen centroids (deterministic:
-    # ivf_assign_of), so neither the vectors nor the ivf_assign union is
-    # ever scanned at append time. Fallback for pre-upgrade stores whose
-    # batches carry vectors/ but no recall_sample/: the full-union
-    # measurement (documented corpus-proportional cost). Stores that
-    # cannot be sized record None — unknown, same contract as missing
-    # drift. Detection is explicit (never a broad except): any real
-    # failure inside the measurement must propagate, not silently blind
-    # the monitor forever (the manifest is immutable once committed).
-    if n_prior is None:
-        probe_recall = None
-    elif all(
-        os.path.isdir(_batch_path(root, "recall_sample", m["batch"]))
-        for m in prior
-    ):
-        parts = [
-            spark.read.schema(_SCHEMAS["recall_sample"]).parquet(
-                _batch_path(root, "recall_sample", m["batch"])
-            )
-            for m in prior
-        ]
-        from functools import reduce
-
-        sample_union = reduce(
-            DataFrame.unionByName,
-            parts,
-            _hash_subsample(
-                batch_float, n_prior + n_batch, PROBE_RECALL_CORPUS_CAP,
-                "vec_id",
-            ),
-        ).localCheckpoint(eager=True)
-        samp_assign = ivf_assign_of(
-            spark, sample_union, books["ivf"]
-        ).select("vec_id", "cluster_id")
-        probe_recall = _probe_coverage_stats(
-            spark, vecs, n_batch, sample_union,
-            # the union IS the (already-capped) truth corpus: pass a
-            # size at the cap so the stats helper's subsample is the
-            # identity map
-            PROBE_RECALL_CORPUS_CAP, samp_assign, books["ivf"],
-        )
-    elif all(
-        os.path.isdir(_batch_path(root, "vectors", m["batch"]))
-        for m in prior
-    ):
-        if prior:
-            all_vec = _read(spark, root, "vectors").unionByName(batch_float)
-            all_assign = _read(spark, root, "ivf_assign").unionByName(assign)
-        else:
-            all_vec, all_assign = batch_float, assign
-        probe_recall = _probe_coverage_stats(
-            spark, vecs, n_batch, all_vec, n_prior + n_batch,
-            all_assign, books["ivf"],
-        )
-    else:
-        probe_recall = None
+    # measured serving-recall input: the union of the committed
+    # recall_sample artifacts and this delivery's sample — corpus-FREE
+    # I/O, with the sampled neighbors' cluster ids recomputed in-flight
+    # against the frozen centroids (deterministic: ivf_assign_of), so
+    # neither the vectors nor the ivf_assign union is ever scanned at
+    # append time
+    if prior:
+        sample = bs.read_union(
+            spark, root, "recall_sample", _SCHEMAS["recall_sample"]
+        ).unionByName(sample)
+    probe_recall = _probe_coverage_stats(
+        spark, vecs, n_batch, sample.localCheckpoint(eager=True), books["ivf"]
+    )
     return {
         "n": int(agg["n"]),
         "mean_qerr": float(agg["mean_qerr"]) if agg["mean_qerr"] is not None else None,
@@ -360,8 +232,8 @@ def build_vector_index(
     books = {"ivf": ivf_codebook, "pq": pq_books}
     with open(os.path.join(root, "codebooks.json"), "w") as f:
         json.dump(books, f)
-    drift = _encode_and_write(spark, vectors, root, _BASE_BATCH, books)
-    _commit(root, {"seq": 0, "batch": _BASE_BATCH, "drift": drift})
+    drift = _encode_and_write(spark, vectors, root, bs.BASE_BATCH, books)
+    bs.commit(root, {"seq": 0, "batch": bs.BASE_BATCH, "drift": drift})
 
 
 def append_vectors(
@@ -376,32 +248,17 @@ def append_vectors(
     already-committed identical batch — unless ``skip_committed``, which
     turns the exact-batch replay into a no-op (the checkpoint-replay
     semantics the streaming sink needs for exactly-once)."""
-    committed = committed_batches(root)
-    batch = _batch_id_of(new_vectors)
-    if bs.replayed_manifest(
-        committed, batch, lambda: _legacy_batch_id_of(new_vectors)
-    ):
-        if skip_committed:
-            return {"new_vectors": 0, "skipped": True}
-        raise ValueError(
-            f"append_vectors: batch {batch} already committed — "
-            "this exact delivery has been applied (retry after success?)"
-        )
-    dup = (
-        new_vectors.select("vec_id")
-        .join(_read(spark, root, "delivered"), "vec_id", "leftsemi")
-        .limit(1)
-        .collect()
+    began = bs.begin_append(
+        spark, new_vectors, root, "vec_id", "append_vectors",
+        "already in the index", skip_committed,
     )
-    if dup:
-        raise ValueError(
-            f"append_vectors: vec_id {dup[0][0]} already in the index — "
-            "deliveries must carry new vec_ids"
-        )
+    if began is None:
+        return {"new_vectors": 0, "skipped": True}
+    committed, batch = began
     drift = _encode_and_write(
         spark, new_vectors, root, batch, frozen_codebooks(root)
     )
-    _commit(root, {"seq": len(committed), "batch": batch, "drift": drift})
+    bs.commit(root, {"seq": len(committed), "batch": batch, "drift": drift})
     return {"new_vectors": drift["n"], "drift": drift}
 
 
@@ -456,15 +313,15 @@ def _probe_coverage_stats(
     spark: SparkSession,
     batch_vecs: DataFrame,
     n_batch: int,
-    all_vec: DataFrame,
-    n_total: int,
-    all_assign: DataFrame,
+    sample: DataFrame,
     ivf_cb,
 ) -> dict:
     """{queries, k, corpus_cap, possible, covered} for one delivery — the
     manifest's measured serving-recall input (see the constants block).
-    ``n_batch``/``n_total`` come from counts the caller already has, so
-    the measurement adds no cardinality jobs."""
+    ``sample`` is the union of the per-batch recall samples, already
+    capped, so it is the truth corpus as is; ``n_batch`` comes from a
+    count the caller already has, so the measurement adds no
+    cardinality jobs."""
     from pyspark.sql import Window
 
     from ph_ee_nats_importer_rdbms_spark.analytics.dedup import _dot, _norm
@@ -482,12 +339,7 @@ def _probe_coverage_stats(
         )
         .localCheckpoint(eager=True)
     )
-    corpus = _hash_subsample(
-        all_vec.select("vec_id", "embedding"),
-        n_total,
-        PROBE_RECALL_CORPUS_CAP,
-        "vec_id",
-    )
+    corpus = sample.select("vec_id", "embedding")
     cent = F.broadcast(
         spark.createDataFrame(
             [(cid, [float(v) for v in vec]) for cid, vec in enumerate(ivf_cb)],
@@ -510,8 +362,9 @@ def _probe_coverage_stats(
         .select("query_id", "vec_id")
         .localCheckpoint(eager=True)
     )
+    assign = ivf_assign_of(spark, sample, ivf_cb).select("vec_id", "cluster_id")
     covered = (
-        truth.join(all_assign.select("vec_id", "cluster_id"), "vec_id")
+        truth.join(assign, "vec_id")
         .join(F.broadcast(probes), ["query_id", "cluster_id"], "leftsemi")
         .count()
     )
@@ -522,6 +375,7 @@ def _probe_coverage_stats(
         "possible": truth.count(),
         "covered": int(covered),
     }
+
 
 _DRIFT_SCHEMA = T.StructType(
     [
@@ -623,7 +477,7 @@ def drift_report(
     Deliveries committed by pre-upgrade code carry no drift stats and
     surface as NULL metrics with a NULL flag (unknown, not healthy)."""
     rows = []
-    manifests = committed_batches(root)
+    manifests = bs.committed_batches(root)
     base = next((m.get("drift") for m in manifests if m.get("drift")), None)
     _, base_recall = _probe_recall_of(base)
     for m in manifests:
@@ -706,45 +560,10 @@ def needs_retrain(
     )
 
 
-def streaming_append_sink(root: str):
-    """``foreachBatch`` sink: vector deliveries arriving as a STREAM
-    (readStream of (vec_id, embedding) rows — a landing zone the embedding
-    job drops files into) fold into the index micro-batch by micro-batch.
-
-    Exactly-once composition: Structured Streaming's checkpoint replays a
-    failed micro-batch with identical content, the batch id is a digest of
-    that content, and ``skip_committed`` turns the replay into a no-op —
-    so the index sees each delivery exactly once without any sink-side
-    offset bookkeeping (the same idempotent-sink pattern as the JDBC MERGE
-    sink, sinks/jdbc.py)."""
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if not batch_df.isEmpty():
-            append_vectors(
-                batch_df.sparkSession, batch_df, root, skip_committed=True
-            )
-
-    return sink
-
-
 def store_vectors(spark: SparkSession, root: str) -> DataFrame:
     """(vec_id, embedding) across committed batches — the corpus the
-    store carries for retraining. Raises ``ValueError`` on a store with
-    pre-upgrade batches (committed before the store carried vectors):
-    those cannot self-retrain; pass the corpus explicitly to
-    :func:`retrain_store`."""
-    missing = [
-        m["batch"]
-        for m in committed_batches(root)
-        if not os.path.isdir(_batch_path(root, "vectors", m["batch"]))
-    ]
-    if missing:
-        raise ValueError(
-            f"store at {root} carries no vectors for batches {missing} "
-            "(committed by pre-upgrade code) — pass retrain_store a "
-            "corpus relation instead"
-        )
-    return _read(spark, root, "vectors")
+    store carries for retraining and the exact re-rank."""
+    return bs.read_union(spark, root, "vectors", _SCHEMAS["vectors"])
 
 
 #: PQ sub-codebook training is SAMPLE-based by contract (the FAISS
@@ -852,7 +671,6 @@ def retrain_store(
     spark: SparkSession,
     old_root: str,
     new_root: str,
-    corpus: DataFrame | None = None,
     seeds=(7, 11, 13),
     sample_max: int = PQ_TRAIN_SAMPLE_MAX,
 ) -> None:
@@ -871,13 +689,10 @@ def retrain_store(
     ``needs_retrain(new_root)`` starts False and subsequent deliveries
     are judged against the re-trained reference. The old store stays
     intact until the caller swaps readers to ``new_root`` (a pointer
-    update, never an in-place mutation).
-
-    ``corpus``: override for pre-upgrade stores that don't carry their
-    vectors — any (vec_id, embedding) relation covering the store."""
-    vectors = (
-        corpus if corpus is not None else store_vectors(spark, old_root)
-    ).select("vec_id", "embedding").localCheckpoint(eager=False)
+    update, never an in-place mutation)."""
+    vectors = store_vectors(spark, old_root).select(
+        "vec_id", "embedding"
+    ).localCheckpoint(eager=False)
     old = frozen_codebooks(old_root)
     ivf_cb, pq_cb = train_codebooks(
         spark,
@@ -892,39 +707,11 @@ def retrain_store(
 
 
 def index_size(root: str) -> int:
-    """Corpus cardinality from the commit manifests / parquet footers —
-    zero Spark jobs (the refine-pool sizing must not pay a count per
-    query call, same contract as similarity.pq_corpus_size)."""
-    from ph_ee_nats_importer_rdbms_spark.plans import staging
-
-    total = 0
-    for m in committed_batches(root):
-        d = m.get("drift")
-        if d and d.get("n") is not None:
-            total += int(d["n"])
-            continue
-        # pre-upgrade manifest: fall back to the delivered relation's
-        # parquet footer
-        n = staging.parquet_row_count(
-            _batch_path(root, "delivered", m["batch"])
-        )
-        if n is None:
-            raise ValueError(
-                f"cannot size batch {m['batch']} at {root}: no drift stats "
-                "and unreadable delivered footer"
-            )
-        total += n
-    return total
-
-
-def has_lists(root: str) -> bool:
-    """True when every committed batch carries the partitioned serving
-    layout (pre-upgrade stores don't — their serving falls back to the
-    assignment join)."""
-    return all(
-        os.path.isdir(_batch_path(root, "lists", m["batch"]))
-        for m in committed_batches(root)
-    )
+    """Corpus cardinality from the commit manifests' drift stats (every
+    build and append records the batch's ``n``) — zero Spark jobs (the
+    refine-pool sizing must not pay a count per query call, same
+    contract as similarity.pq_corpus_size)."""
+    return sum(int(m["drift"]["n"]) for m in bs.committed_batches(root))
 
 
 def read_lists(
@@ -942,9 +729,9 @@ def read_lists(
     # cluster_id filter pushes through the union into every scan
     parts = [
         spark.read.schema(_SCHEMAS["lists"]).parquet(
-            _batch_path(root, "lists", m["batch"])
+            bs.batch_path(root, "lists", m["batch"])
         )
-        for m in committed_batches(root)
+        for m in bs.committed_batches(root)
     ]
     df = reduce(DataFrame.unionByName, parts)
     if cluster_ids is not None:
@@ -1010,13 +797,8 @@ def search_store(
         exclude_self=exclude_self,
         lut=lut,
         # partition-pruned candidate reads from the inverted-list layout
-        # (small-query ivf_pq route); pre-upgrade stores without lists/
-        # keep the assignment-join composition
-        lists=(
-            (lambda ids: read_lists(spark, root, ids))
-            if has_lists(root)
-            else None
-        ),
+        # (small-query ivf_pq route)
+        lists=lambda ids: read_lists(spark, root, ids),
     )
 
 

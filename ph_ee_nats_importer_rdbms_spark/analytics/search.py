@@ -214,19 +214,17 @@ def read_bm25_search(spark: SparkSession, root: str) -> DataFrame:
     :func:`_bm25_term_col` / :func:`_bm25_fold_rank`, so
     append-equals-rebuild parity lets the same DuckDB oracle gate both
     paths."""
-    from pyspark.sql import types as T
-
     from ph_ee_nats_importer_rdbms_spark.analytics import (
+        batch_store as bs,
         incremental_curation as icur,
-        incremental_docs,
     )
 
-    committed = incremental_docs.committed_batches(root)
+    committed = bs.committed_batches(root)
     missing = [
         m["batch"]
         for m in committed
         if not all(
-            os.path.isdir(os.path.join(root, art, m["batch"]))
+            os.path.isdir(bs.batch_path(root, art, m["batch"]))
             for art in ("bm25_plist", "bm25_df", "bm25_dl")
         )
     ]
@@ -236,32 +234,18 @@ def read_bm25_search(spark: SparkSession, root: str) -> DataFrame:
             f"(batches without compacted bm25 artifacts: {missing}) — "
             "rebuild the store (or re-deliver) to materialize the index"
         )
-    # Key on (session, root, manifest-file IDENTITY): the manifest part
-    # is name + size + mtime_ns, not name alone — a base build always
-    # commits batch name "base", so a store REBUILT at the same path in
-    # the same process would otherwise hit the stale entry and serve the
-    # old corpus's query terms and stats (every (re)build/append writes
-    # its manifests via os.replace, so mtime_ns changes even when names
-    # and sizes collide). The session part is the applicationId: the
-    # cached value includes a constructed DataFrame, which is bound to
-    # the SparkSession that built it — an entry from a stopped session
-    # must never be served to a new one.
-    mdir = incremental_docs._manifest_dir(os.path.abspath(root))
+    # Key on (session, root, manifest-file IDENTITY): name + size +
+    # mtime_ns, not name alone (batch_store.manifest_fingerprint) — a
+    # store REBUILT at the same path in the same process must not hit
+    # the stale entry and serve the old corpus's query terms and stats.
+    # The session part is the applicationId: the cached value includes
+    # a constructed DataFrame, which is bound to the SparkSession that
+    # built it — an entry from a stopped session must never be served to
+    # a new one.
     key = (
         spark.sparkContext.applicationId,
         os.path.abspath(root),
-        tuple(
-            (name, st.st_size, st.st_mtime_ns)
-            for name, st in (
-                (
-                    f"{m['seq']:06d}_{m['batch']}.json",
-                    os.stat(
-                        os.path.join(mdir, f"{m['seq']:06d}_{m['batch']}.json")
-                    ),
-                )
-                for m in committed
-            )
-        ),
+        bs.manifest_fingerprint(os.path.abspath(root), committed),
     )
     cached = _BM25_READ_CACHE.get(key)
     if cached is not None:
@@ -276,18 +260,14 @@ def read_bm25_search(spark: SparkSession, root: str) -> DataFrame:
     qtokens = [t for _, t in qt]
     dfmap = {
         r["token"]: int(r["df"])
-        for r in incremental_docs.read_artifact(
-            spark, root, "bm25_df", icur.BM25_DF_SCHEMA
-        )
+        for r in bs.read_union(spark, root, "bm25_df", icur.BM25_DF_SCHEMA)
         .filter(F.col("token").isin(qtokens))
         .groupBy("token")
         .agg(F.sum("df").alias("df"))
         .collect()
     }
     srow = (
-        incremental_docs.read_artifact(
-            spark, root, "bm25_dl", icur.BM25_DL_SCHEMA
-        )
+        bs.read_union(spark, root, "bm25_dl", icur.BM25_DL_SCHEMA)
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.avg(F.col("dl").cast("double")).alias("avgdl"),
@@ -307,7 +287,7 @@ def read_bm25_search(spark: SparkSession, root: str) -> DataFrame:
     df_map = F.create_map(
         *[F.lit(x) for _qid, tok, df in qrows for x in (tok, df)]
     )
-    plist = incremental_docs.read_artifact(
+    plist = bs.read_union(
         spark, root, "bm25_plist", icur.BM25_PLIST_SCHEMA
     ).filter(F.col("token").isin([t for _, t, _df in qrows]))
     terms = plist.withColumn(

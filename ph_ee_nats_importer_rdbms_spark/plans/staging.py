@@ -152,8 +152,9 @@ _DOMAINS: dict[str, tuple[tuple[str, ...], tuple[str, ...]]] = {
     ),
     # the incremental vector store staged as a SERVING artifact (registry
     # entry ann_search_store): its layout semantics live in
-    # incremental_vectors.py, so edits there rebuild the store without
-    # invalidating the flat emb-domain artifacts (and vice versa)
+    # incremental_vectors.py and the manifest layer batch_store.py, so
+    # edits there rebuild the store without invalidating the flat
+    # emb-domain artifacts (and vice versa)
     "vstore": (
         ("embeddings.parquet",),
         (
@@ -162,6 +163,7 @@ _DOMAINS: dict[str, tuple[tuple[str, ...], tuple[str, ...]]] = {
             # encode kernels, so query-plan edits in similarity.py no
             # longer force the 20+-second store rebuild
             "analytics/vector_kernels.py",
+            "analytics/batch_store.py",
             "analytics/incremental_vectors.py",
             "analytics/ivf_centroids.json",
             "analytics/pq_codebooks.json",

@@ -6,8 +6,14 @@ Reference behavior being reproduced:
   (AbstractPersistableCustom.java:34-52). The natural key is
   ``workflow_instance_key``; the Spark sink upserts on it directly with
   ``INSERT ... ON DUPLICATE KEY UPDATE`` (MySQL, as the reference targets)
-  — idempotent, so checkpoint replays are exactly-once effective.
-- S5 append: ph_tasks / ph_variables are insert-only logs.
+  — idempotent, so a checkpoint replay leaves the upserted tables as they
+  were.
+- S5 append: ph_tasks / ph_variables are insert-only logs, written with
+  plain ``INSERT``s. They are AT-LEAST-ONCE, not exactly-once: each
+  (tenant, executor call) commits on its own and ``epoch_id`` is not
+  used, so a micro-batch replayed after a partial sink commit inserts
+  the already-committed log rows again. ROADMAP item 1's sink-fault
+  test is the open work that pins and fixes this.
 - S6 batched writes, size 1000 (EclipselinkJpaConfiguration.java:49-50).
 - S7 tenant routing: tenant -> JDBC url resolved through the master
   ``tenant_server_connections`` table (DataSourcePerTenantService.java:64-128,

@@ -437,9 +437,13 @@ def run_deployment(
     pass ``distributed=False`` for the driver-collect topology (small
     deployments, py4j ``jvm_executor``).
     The landing files and every hop and the sink query are checkpointed
-    under ``work_dir`` — restart resumes with exactly-once delivery into
-    the idempotent MERGE. The state-store provider is the session's
-    (:func:`configure_state_store`)."""
+    under ``work_dir`` — a restart resumes from the checkpoints, and a
+    replayed micro-batch re-runs the idempotent MERGE, so the upserted
+    tables are exactly-once. The ph_tasks / ph_variables append logs are
+    plain INSERTs and only at-least-once: a micro-batch replayed after a
+    partial sink commit inserts its committed log rows again (see
+    sinks/jdbc.py; ROADMAP item 1's sink-fault test). The state-store
+    provider is the session's (:func:`configure_state_store`)."""
     from ph_ee_nats_importer_rdbms_spark.sinks.jdbc import changes_foreach_batch
 
     if source_dir is None and nats_options is None:

@@ -176,13 +176,16 @@ def _build(spark: SparkSession, sf_dir: str, root: str) -> None:
 
 def _build_streaming(spark: SparkSession, sf_dir: str, root: str) -> None:
     """The pre-r14 staging build: ordered envelope chunks -> the real
-    3-hop Structured Streaming topology (one file per trigger, so keyed
-    state genuinely hands off across micro-batches) -> change-log fold ->
-    typed tables. Kept as the STREAMING ORACLE for the batch build
-    (tests/test_batch_replay.py A/Bs the two table stores hash-identical);
-    not on the staging path — the native batch form computes the same
-    fixed point at scan speed instead of ~11k env/s through Python
-    stateful stages."""
+    3-hop Structured Streaming topology -> change-log fold -> typed
+    tables. Chunk k is dropped into the source directory and drained
+    before chunk k+1 lands, one ``run_multi_hop`` drain per chunk, so
+    EVERY hop runs one micro-batch per chunk and the keyed state of all
+    three (C5 buffers, C4 links, entity folds) hands off across
+    micro-batches. Kept as the STREAMING ORACLE for the batch build
+    (tests/test_batch_replay.py A/Bs the two table stores
+    hash-identical); not on the staging path — the native batch form
+    computes the same fixed point at scan speed instead of ~11k env/s
+    through Python stateful stages."""
     from ph_ee_nats_importer_rdbms_spark.plans.queries import flat_events_staged
     from ph_ee_nats_importer_rdbms_spark.streaming import pipeline as sp
     from ph_ee_nats_importer_rdbms_spark.streaming.batch_replay import (
@@ -190,17 +193,22 @@ def _build_streaming(spark: SparkSession, sf_dir: str, root: str) -> None:
     )
 
     flat = flat_events_staged(spark, sf_dir)
+    chunk_dir = os.path.join(root, "chunks")
     src_dir = os.path.join(root, "source")
     work_dir = os.path.join(root, "work")
-    write_ordered_chunks(flat, src_dir)
-    events = sp.read_raw_stream(spark, src_dir, max_files_per_trigger=1)
-    paths = sp.run_multi_hop(spark, events, work_dir)
+    write_ordered_chunks(flat, chunk_dir)
+    os.makedirs(src_dir, exist_ok=True)
+    for name in sorted(os.listdir(chunk_dir)):
+        os.rename(os.path.join(chunk_dir, name), os.path.join(src_dir, name))
+        paths = sp.run_multi_hop(
+            spark, sp.read_raw_stream(spark, src_dir), work_dir
+        )
     tables = sp.materialize_tables(spark, paths["changes"])
     for name in _ENTITY_SCHEMAS:
         tables[name] = _typed_entity(tables[name], _ENTITY_SCHEMAS[name])
     _write_tables(tables, os.path.join(root, "tables"))
-    shutil.rmtree(src_dir, ignore_errors=True)
-    shutil.rmtree(work_dir, ignore_errors=True)
+    for d in (chunk_dir, src_dir, work_dir):
+        shutil.rmtree(d, ignore_errors=True)
 
 
 #: publish/land waves for the wire replay — each wave lands the broker's

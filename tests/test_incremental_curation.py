@@ -138,7 +138,7 @@ def test_metrics_ride_the_same_transaction(spark, tmp_path):
     """A crashed append (no manifest) must leave metrics invisible along
     with everything else — simulated by writing artifacts without the
     commit step via a batch that raises on the re-delivery guard."""
-    from ph_ee_nats_importer_rdbms_spark.analytics import incremental_docs as inc
+    from ph_ee_nats_importer_rdbms_spark.analytics import batch_store as bs
 
     schema = "doc_id long, text string, lang string"
     root = str(tmp_path / "cur")
@@ -153,7 +153,7 @@ def test_metrics_ride_the_same_transaction(spark, tmp_path):
     batch_docs = spark.createDataFrame(
         [(2, "the quick alpha beta delta", "en")], schema
     )
-    inc._write_artifacts(
+    bs.write_artifacts(
         root,
         "deadbeefdeadbeef",
         {
@@ -173,9 +173,7 @@ def test_streaming_deliveries_fold_into_curation_store(
     a no-op (exactly-once under checkpoint replay)."""
     import os
 
-    from ph_ee_nats_importer_rdbms_spark.analytics import (
-        incremental_docs as inc,
-    )
+    from ph_ee_nats_importer_rdbms_spark.analytics import batch_store as bs
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang"
@@ -190,7 +188,9 @@ def test_streaming_deliveries_fold_into_curation_store(
     stream = (
         spark.readStream.schema(rest.schema)
         .parquet(landing)
-        .writeStream.foreachBatch(cur.streaming_curation_sink(root))
+        .writeStream.foreachBatch(
+            bs.foreach_batch_sink(cur.append_curation_batch, root)
+        )
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
@@ -205,7 +205,7 @@ def test_streaming_deliveries_fold_into_curation_store(
 
     # committed-batch replay (what a checkpoint replay delivers) is a no-op
     replay = next(
-        b for b in inc.committed_batches(root) if b["batch"] != "base"
+        b for b in bs.committed_batches(root) if b["batch"] != "base"
     )
     replay_df = spark.read.parquet(
         os.path.join(root, "delivered", replay["batch"])
@@ -288,7 +288,7 @@ def test_bm25_postings_ride_the_same_transaction(spark, tmp_path):
     """A re-delivered (already-committed) batch is a no-op for the BM25
     partials too — postings can never double-count a delivery whose
     band entries were deduplicated by the store's guard."""
-    from ph_ee_nats_importer_rdbms_spark.analytics import incremental_docs
+    from ph_ee_nats_importer_rdbms_spark.analytics import batch_store as bs
 
     docs = spark.createDataFrame(
         [
@@ -306,7 +306,7 @@ def test_bm25_postings_ride_the_same_transaction(spark, tmp_path):
     cur.append_curation_batch(spark, batch, root)
     before = {
         tuple(r)
-        for r in incremental_docs.read_artifact(
+        for r in bs.read_union(
             spark, root, "bm25_plist", cur.BM25_PLIST_SCHEMA
         ).collect()
     }
@@ -315,7 +315,7 @@ def test_bm25_postings_ride_the_same_transaction(spark, tmp_path):
 
     dfs = {
         r["token"]: int(r["sum(df)"])
-        for r in incremental_docs.read_artifact(
+        for r in bs.read_union(
             spark, root, "bm25_df", cur.BM25_DF_SCHEMA
         )
         .groupBy("token")
@@ -328,7 +328,7 @@ def test_bm25_postings_ride_the_same_transaction(spark, tmp_path):
     cur.append_curation_batch(spark, batch, root, skip_committed=True)
     after = {
         tuple(r)
-        for r in incremental_docs.read_artifact(
+        for r in bs.read_union(
             spark, root, "bm25_plist", cur.BM25_PLIST_SCHEMA
         ).collect()
     }

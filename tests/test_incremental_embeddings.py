@@ -14,6 +14,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from ph_ee_nats_importer_rdbms_spark.analytics import (
+    batch_store as bs,
     incremental_embeddings as ie,
 )
 from ph_ee_nats_importer_rdbms_spark.sources.files import load_table, spread
@@ -41,41 +42,6 @@ def _labels(spark, root) -> set:
     return {
         (r["node"], r["label"]) for r in ie.read_labels(spark, root).collect()
     }
-
-
-def test_legacy_plane_list_store_reads_and_appends(spark, sf_dir, tmp_path):
-    """A pre-round-6 store (plain plane LIST in planes.json, single-band
-    buckets carrying embedding+norm, no vectors artifact) must stay
-    readable AND appendable by the banded code, producing the same pairs
-    and labels as a round-6 store frozen to the identical single-band
-    structure."""
-    from ph_ee_nats_importer_rdbms_spark.analytics.dedup import (
-        EMBED_DIM,
-        EMBED_PLANES,
-        hyperplanes,
-    )
-
-    planes = hyperplanes(EMBED_PLANES, EMBED_DIM)
-    v = _vectors(spark, sf_dir)
-    first = v.filter(v.vec_id % 2 == 0)
-    second = v.filter(v.vec_id % 2 == 1)
-
-    legacy = str(tmp_path / "legacy")
-    ie.build_embedding_store(spark, first, legacy, planes=planes)  # list -> legacy layout
-    assert ie._is_legacy(legacy)
-    ie.append_embedding_batch(spark, second, legacy)
-
-    modern = str(tmp_path / "modern")
-    ie.build_embedding_store(
-        spark, first, modern,
-        planes={"bands": 1, "planes_per_band": EMBED_PLANES, "planes": planes},
-    )
-    assert not ie._is_legacy(modern)
-    ie.append_embedding_batch(spark, second, modern)
-
-    assert _pairs(spark, legacy) == _pairs(spark, modern)
-    assert _labels(spark, legacy) == _labels(spark, modern)
-    assert _pairs(spark, legacy), "corpus contains embedding near-dups"
 
 
 def test_store_build_matches_registry_queries(spark, sf_dir, tmp_path):
@@ -172,7 +138,9 @@ def test_streaming_deliveries_fold_into_store(spark, sf_dir, tmp_path):
     stream = (
         spark.readStream.schema(rest.schema)
         .parquet(landing)
-        .writeStream.foreachBatch(ie.streaming_append_sink(root))
+        .writeStream.foreachBatch(
+            bs.foreach_batch_sink(ie.append_embedding_batch, root)
+        )
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
@@ -278,7 +246,7 @@ def test_rebuild_resolves_structure_drift(spark, tmp_path):
     row = ie.structure_drift_report(spark, new).collect()[0]
     assert row["n_total"] == 768
     assert not row["structure_changed"]
-    s = ie._structure_of(ie.frozen_planes(new))
+    s = ie.frozen_planes(new)
     assert s["planes_per_band"] == 5  # re-sized for 768, was 4 for 256
 
     old_ids = {r["vec_id"] for r in

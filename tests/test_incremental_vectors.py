@@ -16,6 +16,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from ph_ee_nats_importer_rdbms_spark.analytics import batch_store as bs
 from ph_ee_nats_importer_rdbms_spark.analytics import incremental_vectors as iv
 from ph_ee_nats_importer_rdbms_spark.analytics.similarity import (
     ivf_assign_of,
@@ -78,7 +79,7 @@ def test_append_matches_full_build_and_encodes_only_new(spark, sf_dir, tmp_path)
     assert _codes(spark, root) == want_codes
 
     # only the delivery's vec_ids live in its batch dirs (structural)
-    batches = iv.committed_batches(root)
+    batches = bs.committed_batches(root)
     assert len(batches) == 2
     second_ids = {r["vec_id"] for r in second.select("vec_id").collect()}
     batch_dir = os.path.join(root, "pq_codes", batches[1]["batch"])
@@ -179,7 +180,7 @@ def test_drift_detection_trips_on_distribution_shift(spark, sf_dir, tmp_path):
     assert rows[-1]["qerr_ratio"] > 1.5 or rows[-1]["occupancy_tvd"] > 0.25
     assert iv.needs_retrain(spark, root)
     # the signal rides the commit manifest — no corpus rescan involved
-    assert all("drift" in m for m in iv.committed_batches(root))
+    assert all("drift" in m for m in bs.committed_batches(root))
 
 
 def test_drift_report_surfaces_pre_upgrade_batches_as_unknown(
@@ -235,7 +236,7 @@ def test_streaming_deliveries_fold_into_index(spark, sf_dir, tmp_path):
     stream = (
         spark.readStream.schema(rest.schema)
         .parquet(landing)
-        .writeStream.foreachBatch(iv.streaming_append_sink(root))
+        .writeStream.foreachBatch(bs.foreach_batch_sink(iv.append_vectors, root))
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
@@ -249,7 +250,7 @@ def test_streaming_deliveries_fold_into_index(spark, sf_dir, tmp_path):
 
     # committed-batch replay (what a checkpoint replay delivers) is a no-op
     replay = next(
-        b for b in iv.committed_batches(root) if b["batch"] != "base"
+        b for b in bs.committed_batches(root) if b["batch"] != "base"
     )
     replay_df = spark.read.parquet(
         os.path.join(root, "delivered", replay["batch"])
@@ -291,7 +292,9 @@ def test_streaming_retrain_drill_swaps_reader_and_keeps_serving(
         stream = (
             spark.readStream.schema(base.schema)
             .parquet(landing)
-            .writeStream.foreachBatch(iv.streaming_append_sink(sink_root))
+            .writeStream.foreachBatch(
+                bs.foreach_batch_sink(iv.append_vectors, sink_root)
+            )
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
@@ -415,8 +418,6 @@ def test_retrain_resolves_codebook_drift(spark, sf_dir, tmp_path):
     corpus as it now is — the flag clears, the corpus carries over
     intact, and the new codes equal a fresh encode against the new
     books."""
-    import shutil
-
     e = spread(load_table(spark, sf_dir, "embeddings")).select(
         "vec_id", "embedding"
     )
@@ -456,19 +457,6 @@ def test_retrain_resolves_codebook_drift(spark, sf_dir, tmp_path):
         for r in iv.read_codes(spark, new).collect()
     }
     assert got == want
-
-    # pre-upgrade stores (no carried vectors) fail loud and retrain via
-    # an explicit corpus relation instead
-    shutil.rmtree(os.path.join(root, "vectors"))
-    with pytest.raises(ValueError, match="carries no vectors"):
-        iv.store_vectors(spark, root)
-    legacy_corpus = e.filter(F.col("vec_id") < 200).unionByName(shifted)
-    new2 = str(tmp_path / "new2")
-    iv.retrain_store(spark, root, new2, corpus=legacy_corpus, seeds=(7,))
-    assert not iv.needs_retrain(spark, new2)
-    assert {
-        r["vec_id"] for r in iv.store_vectors(spark, new2).collect()
-    } == old_ids
 
 
 def test_small_in_distribution_delivery_does_not_false_trip(
@@ -548,10 +536,7 @@ def test_search_store_prunes_inverted_list_partitions(
     """The store's serving layout: each delivery's codes live INSIDE
     their inverted lists (lists/<batch>/cluster_id=N/), so the ivf_pq
     serving route reads ONLY the probed partitions — PartitionFilters on
-    cluster_id in the scan — with results identical to the
-    assignment-join fallback a pre-upgrade store (no lists/) uses."""
-    import shutil
-
+    cluster_id in the scan."""
     e = spread(load_table(spark, sf_dir, "embeddings")).select(
         "vec_id", "embedding"
     )
@@ -561,7 +546,6 @@ def test_search_store_prunes_inverted_list_partitions(
         spark, e.filter(F.col("vec_id") % 2 == 0), root, ivf_cb, pq_cb
     )
     iv.append_vectors(spark, e.filter(F.col("vec_id") % 2 == 1), root)
-    assert iv.has_lists(root)
 
     queries = e.filter(F.col("vec_id") < 4).select(
         (F.col("vec_id") + 800_000).alias("query_id"),
@@ -573,18 +557,7 @@ def test_search_store_prunes_inverted_list_partitions(
     )
     pf = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
     assert any("cluster_id" in ln for ln in pf), plan
-    got = sorted(tuple(r) for r in df.collect())
-
-    # pre-upgrade layout (no lists/): assignment-join fallback, same rows
-    shutil.rmtree(os.path.join(root, "lists"))
-    assert not iv.has_lists(root)
-    fallback = sorted(
-        tuple(r)
-        for r in iv.search_store(
-            spark, root, queries, variant="ivf_pq"
-        ).collect()
-    )
-    assert got == fallback and got
+    assert df.collect()
 
 
 def test_probe_coverage_recall_recorded_and_healthy(spark, sf_dir, tmp_path):
@@ -602,7 +575,7 @@ def test_probe_coverage_recall_recorded_and_healthy(spark, sf_dir, tmp_path):
     )
     iv.append_vectors(spark, e.filter(F.col("vec_id") % 2 == 1), root)
 
-    for m in iv.committed_batches(root):
+    for m in bs.committed_batches(root):
         pr = m["drift"]["probe_recall"]
         assert pr["queries"] == iv.PROBE_RECALL_QUERY_SAMPLE
         assert pr["k"] == iv.PROBE_RECALL_K

@@ -129,11 +129,12 @@ def test_sq16_meta_error_is_exact_even_under_clamping(spark):
 def test_estore_prefiltered_pairs_equal_exact_path(spark, sf_dir, tmp_path):
     """The embedding store's SQ16-prefiltered candidate path produces
     the identical verified-pair relation as the meta-less exact path
-    over the same frozen bands — and appends to a store with the
-    sketch keep writing it (uniform shape)."""
+    over the same frozen bands — and the build and every append write
+    the sketch (uniform shape)."""
     import os
 
     from ph_ee_nats_importer_rdbms_spark.analytics import (
+        batch_store as bs,
         incremental_embeddings as ie,
     )
     from ph_ee_nats_importer_rdbms_spark.sources.files import load_table
@@ -145,11 +146,14 @@ def test_estore_prefiltered_pairs_equal_exact_path(spark, sf_dir, tmp_path):
     ie.build_embedding_store(
         spark, vecs.filter(F.col("vec_id") % 2 == 0), root
     )
-    assert ie._sq16_available(root)
     ie.append_embedding_batch(
         spark, vecs.filter(F.col("vec_id") % 2 == 1), root
     )
-    assert ie._sq16_available(root)
+    batches = [m["batch"] for m in bs.committed_batches(root)]
+    assert len(batches) == 2
+    assert all(
+        os.path.isdir(bs.batch_path(root, "sq16", b)) for b in batches
+    )
 
     got = {
         (r["vec_a"], r["vec_b"], r["cosine"])
@@ -162,50 +166,6 @@ def test_estore_prefiltered_pairs_equal_exact_path(spark, sf_dir, tmp_path):
         for r in ie._verified_pairs(slim, slim, vec).collect()
     }
     assert got == want and got
-
-
-def test_estore_pre_upgrade_store_appends_via_exact_path(
-    spark, sf_dir, tmp_path
-):
-    """A store whose committed batches predate the sketch (simulated by
-    deleting the sq16 dirs) keeps working: the append runs the exact
-    path, does NOT write a lone sketch dir (no mixed shape), and the
-    pair relation still matches a fresh full rebuild."""
-    import os
-    import shutil
-
-    from ph_ee_nats_importer_rdbms_spark.analytics import (
-        incremental_embeddings as ie,
-    )
-    from ph_ee_nats_importer_rdbms_spark.sources.files import load_table
-
-    vecs = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    )
-    root = str(tmp_path / "old")
-    ie.build_embedding_store(
-        spark, vecs.filter(F.col("vec_id") % 2 == 0), root
-    )
-    shutil.rmtree(os.path.join(root, "sq16"))
-    assert not ie._sq16_available(root)
-    ie.append_embedding_batch(
-        spark, vecs.filter(F.col("vec_id") % 2 == 1), root
-    )
-    assert not os.path.isdir(os.path.join(root, "sq16"))
-
-    fresh_root = str(tmp_path / "fresh")
-    ie.build_embedding_store(
-        spark, vecs, fresh_root, planes=ie.frozen_planes(root)
-    )
-    got = {
-        (r["vec_a"], r["vec_b"], r["cosine"])
-        for r in ie.read_pairs(spark, root).collect()
-    }
-    want = {
-        (r["vec_a"], r["vec_b"], r["cosine"])
-        for r in ie.read_pairs(spark, fresh_root).collect()
-    }
-    assert got == want
 
 
 def test_ivf_assign_argmax_is_hash_aggregate(spark, sf_dir):

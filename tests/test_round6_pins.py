@@ -1,7 +1,10 @@
 """Regression pins for the round-5 advice fixes (VERDICT r5 task #2).
 
 Three of the five round-5 fixes shipped without a test that fails on the
-pre-fix code shape. This module pins them:
+pre-fix code shape. This module pins two of them; the third,
+payload-aware batch ids (a same-ids-different-payload delivery is
+rejected by the re-delivery guard, not skipped as a replay), is pinned
+with the rest of the shared store layer in tests/test_batch_store.py:
 
 - the pipelined ranged reader's distinctive semantics — reply reordering
   across the window, duplicate replies, 404 mid-window under both
@@ -9,12 +12,6 @@ pre-fix code shape. This module pins them:
   double with deterministic reorder/duplicate chaos knobs (the plain
   double replies strictly in order, so the reorder buffer never ran in
   the suite before);
-- payload-aware batch ids — a same-ids-different-payload delivery must
-  be REJECTED by the re-delivery guard (not skipped as a replay) while a
-  byte-identical replay skips, for batch_store-backed stores AND the
-  incremental_docs / incremental_vectors copies — plus the round-6
-  id-scheme versioning: a replay against a store committed under the
-  pre-upgrade key-set scheme is still recognized as a replay;
 - registry-in-WAL refresh recovery — crash a REGISTRY-parameterized
   refresh mid-merge, resume with no registry argument, and require the
   result to match a full rebuild under that registry (and to differ from
@@ -25,7 +22,6 @@ pre-fix code shape. This module pins them:
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
@@ -142,203 +138,6 @@ def test_wire_transport_rejects_nonpositive_window():
         _transport(
             {"transport": "wire", "pipeline_window": "-3"}
         )
-
-
-# ---------------------------------------------------------------------------
-# payload-aware batch ids + id-scheme versioning (batch_store and copies)
-# ---------------------------------------------------------------------------
-
-
-def _rewrite_manifest_to_legacy(root: str, new_id: str, legacy_id: str) -> None:
-    """Simulate a store committed by PRE-round-5 code: rename the batch's
-    manifest and artifact dirs to the legacy (key-set) id and strip the
-    id_scheme field from the manifest."""
-    mdir = os.path.join(root, "_batches")
-    for name in os.listdir(mdir):
-        if name.endswith(f"_{new_id}.json"):
-            path = os.path.join(mdir, name)
-            with open(path) as f:
-                m = json.load(f)
-            m.pop("id_scheme", None)
-            m["batch"] = legacy_id
-            os.remove(path)
-            with open(
-                os.path.join(mdir, f"{m['seq']:06d}_{legacy_id}.json"), "w"
-            ) as f:
-                json.dump(m, f)
-    for dirpath, dirs, _files in os.walk(root):
-        for d in list(dirs):
-            if d == new_id:
-                os.rename(
-                    os.path.join(dirpath, d), os.path.join(dirpath, legacy_id)
-                )
-
-
-def _docs_df(spark, rows):
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-_DOC_ROWS = [
-    (1, "alpha beta gamma delta epsilon zeta eta theta"),
-    (2, "alpha beta gamma delta epsilon zeta eta iota"),
-    (3, "one two three four five six seven eight"),
-]
-_DOC_BATCH2 = [
-    (10, "alpha beta gamma delta epsilon zeta eta theta"),
-    (11, "red orange yellow green blue indigo violet ultraviolet"),
-]
-
-
-def test_docs_store_same_ids_different_payload_rejected(spark, tmp_path):
-    from ph_ee_nats_importer_rdbms_spark.analytics import incremental_docs as inc
-
-    root = str(tmp_path / "docs")
-    inc.build_index(spark, _docs_df(spark, _DOC_ROWS), root)
-    inc.append_batch(spark, _docs_df(spark, _DOC_BATCH2), root)
-
-    # byte-identical replay: skipped under skip_committed
-    stats = inc.append_batch(
-        spark, _docs_df(spark, _DOC_BATCH2), root, skip_committed=True
-    )
-    assert stats.get("skipped") is True
-
-    # same doc_ids, DIFFERENT text: must raise even with skip_committed —
-    # this is a conflicting delivery, not a replay (the r5 advice bug)
-    mutated = [(10, "totally different content here now"), _DOC_BATCH2[1]]
-    with pytest.raises(ValueError, match="already in the store"):
-        inc.append_batch(
-            spark, _docs_df(spark, mutated), root, skip_committed=True
-        )
-
-
-def test_docs_store_recognizes_legacy_scheme_replay(spark, tmp_path):
-    from ph_ee_nats_importer_rdbms_spark.analytics import incremental_docs as inc
-
-    root = str(tmp_path / "docs")
-    inc.build_index(spark, _docs_df(spark, _DOC_ROWS), root)
-    batch2 = _docs_df(spark, _DOC_BATCH2)
-    inc.append_batch(spark, batch2, root)
-    _rewrite_manifest_to_legacy(
-        root, inc._batch_id_of(batch2), inc._legacy_batch_id_of(batch2)
-    )
-    # checkpoint replay against the pre-upgrade store: recognized, skipped
-    stats = inc.append_batch(spark, batch2, root, skip_committed=True)
-    assert stats.get("skipped") is True
-    # and without skip_committed it is the already-committed error, not
-    # the (misleading) delivered-ids error
-    with pytest.raises(ValueError, match="already committed"):
-        inc.append_batch(spark, batch2, root)
-
-
-def _vec_df(spark, ids, scale=1.0):
-    import math
-
-    rows = [
-        (
-            int(i),
-            [
-                float(scale) * math.sin(0.1 * i * (d + 1))
-                for d in range(64)
-            ],
-        )
-        for i in ids
-    ]
-    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-
-def test_vector_index_same_ids_different_payload_rejected(spark, tmp_path):
-    from ph_ee_nats_importer_rdbms_spark.analytics import incremental_vectors as iv
-    from ph_ee_nats_importer_rdbms_spark.analytics.similarity import (
-        IVF_CODEBOOKS,
-        PQ_CODEBOOKS,
-    )
-
-    root = str(tmp_path / "vec")
-    iv.build_vector_index(
-        spark,
-        _vec_df(spark, range(100, 120)),
-        root,
-        IVF_CODEBOOKS["default"],
-        PQ_CODEBOOKS["default"],
-    )
-    batch2 = _vec_df(spark, range(200, 210))
-    iv.append_vectors(spark, batch2, root)
-    assert iv.append_vectors(spark, batch2, root, skip_committed=True) == {
-        "new_vectors": 0,
-        "skipped": True,
-    }
-    mutated = _vec_df(spark, range(200, 210), scale=2.0)
-    with pytest.raises(ValueError, match="already in the index"):
-        iv.append_vectors(spark, mutated, root, skip_committed=True)
-
-
-def test_vector_index_recognizes_legacy_scheme_replay(spark, tmp_path):
-    from ph_ee_nats_importer_rdbms_spark.analytics import incremental_vectors as iv
-    from ph_ee_nats_importer_rdbms_spark.analytics.similarity import (
-        IVF_CODEBOOKS,
-        PQ_CODEBOOKS,
-    )
-
-    root = str(tmp_path / "vec")
-    iv.build_vector_index(
-        spark,
-        _vec_df(spark, range(100, 120)),
-        root,
-        IVF_CODEBOOKS["default"],
-        PQ_CODEBOOKS["default"],
-    )
-    batch2 = _vec_df(spark, range(200, 210))
-    iv.append_vectors(spark, batch2, root)
-    _rewrite_manifest_to_legacy(
-        root, iv._batch_id_of(batch2), iv._legacy_batch_id_of(batch2)
-    )
-    assert iv.append_vectors(spark, batch2, root, skip_committed=True) == {
-        "new_vectors": 0,
-        "skipped": True,
-    }
-
-
-def test_embedding_store_same_ids_different_payload_rejected(spark, tmp_path):
-    from ph_ee_nats_importer_rdbms_spark.analytics import (
-        incremental_embeddings as ie,
-    )
-
-    root = str(tmp_path / "emb")
-    ie.build_embedding_store(spark, _vec_df(spark, range(1, 31)), root)
-    batch2 = _vec_df(spark, range(50, 60))
-    ie.append_embedding_batch(spark, batch2, root)
-    stats = ie.append_embedding_batch(spark, batch2, root, skip_committed=True)
-    assert stats.get("skipped") is True
-    mutated = _vec_df(spark, range(50, 60), scale=3.0)
-    with pytest.raises(ValueError, match="already in the"):
-        ie.append_embedding_batch(spark, mutated, root, skip_committed=True)
-
-
-def test_embedding_store_recognizes_legacy_scheme_replay(spark, tmp_path):
-    from ph_ee_nats_importer_rdbms_spark.analytics import batch_store as bs
-    from ph_ee_nats_importer_rdbms_spark.analytics import (
-        incremental_embeddings as ie,
-    )
-
-    root = str(tmp_path / "emb")
-    ie.build_embedding_store(spark, _vec_df(spark, range(1, 31)), root)
-    batch2 = _vec_df(spark, range(50, 60))
-    ie.append_embedding_batch(spark, batch2, root)
-    _rewrite_manifest_to_legacy(
-        root,
-        bs.batch_id_of(batch2, "vec_id"),
-        bs.legacy_batch_id_of(batch2, "vec_id"),
-    )
-    stats = ie.append_embedding_batch(spark, batch2, root, skip_committed=True)
-    assert stats.get("skipped") is True
-
-
-def test_commit_manifests_record_id_scheme(spark, tmp_path):
-    from ph_ee_nats_importer_rdbms_spark.analytics import batch_store as bs
-
-    root = str(tmp_path / "s")
-    bs.commit(root, {"seq": 0, "batch": "base"})
-    assert bs.committed_batches(root)[0]["id_scheme"] == bs.ID_SCHEME
 
 
 # ---------------------------------------------------------------------------

@@ -173,6 +173,7 @@ def test_stores_carry_per_batch_recall_samples(spark, sf_dir, tmp_path):
     import pyarrow.parquet as _pq
 
     from ph_ee_nats_importer_rdbms_spark.analytics import (
+        batch_store as bs,
         incremental_embeddings as ie,
         incremental_vectors as iv,
     )
@@ -200,13 +201,13 @@ def test_stores_carry_per_batch_recall_samples(spark, sf_dir, tmp_path):
         _codebook(sf_dir), _pq_books(sf_dir),
     )
     iv.append_vectors(spark, e.filter(F.col("vec_id") >= 300), vroot)
-    sizes = {m["batch"]: m["drift"]["n"] for m in iv.committed_batches(vroot)}
+    sizes = {m["batch"]: m["drift"]["n"] for m in bs.committed_batches(vroot)}
     for b, n in sizes.items():
         assert rows_in(f"{vroot}/recall_sample/{b}") == n
 
     eroot = str(tmp_path / "emb")
     ie.build_embedding_store(spark, e.filter(F.col("vec_id") < 300), eroot)
     ie.append_embedding_batch(spark, e.filter(F.col("vec_id") >= 300), eroot)
-    for m in ie.bs.committed_batches(eroot):
+    for m in bs.committed_batches(eroot):
         n = m["structure_drift"]["n"]
         assert rows_in(f"{eroot}/recall_sample/{m['batch']}") == n

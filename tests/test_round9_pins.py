@@ -1,115 +1,17 @@
-"""Round-9 pins (VERDICT r8 task #4): delivery-time sizing on the
-footer/manifest discipline.
+"""Round-9 pins for the JDBC change-log writers.
 
-Store appends used to launch a count() job per reported number. Sizing
-now folds from the written artifacts' parquet footers (zero Spark jobs);
-the only count() jobs a delivery may run are the ones whose numbers NO
-footer carries — the CC size-router (one, on the staged edge list), the
-measured-recall statistics (two: they ARE the measurement), and the
-training store's distinct-sequence count (one). These tests pin the
-budget per store by instrumenting DataFrame.count, so a re-introduced
-sizing count busts the budget instead of regressing silently.
+The driver-collect writer must refuse a micro-batch over its cap (and
+stay bounded while checking), and the distributed writer's salted
+partitioning must bound a dominant tenant's per-task share while still
+delivering every change row exactly once. The round's other pins — the
+stores' delivery-time count() budgets and ``artifact_count`` raising on
+a missing artifact — live with the shared store layer in
+tests/test_batch_store.py.
 """
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
-
-from ph_ee_nats_importer_rdbms_spark.sources.files import load_table, spread
-
-
-@pytest.fixture()
-def count_recorder(monkeypatch):
-    """Instrument DataFrame.count: every call still runs, but is
-    recorded. Returns the call list (len == number of count jobs)."""
-    calls: list[str] = []
-    import pyspark.sql.classic.dataframe as cdf
-
-    orig = cdf.DataFrame.count
-
-    def recording(self, *a, **k):
-        calls.append("count")
-        return orig(self, *a, **k)
-
-    monkeypatch.setattr(cdf.DataFrame, "count", recording, raising=True)
-    return calls
-
-
-def _docs(spark, sf_dir):
-    return load_table(spark, sf_dir, "documents").select("doc_id", "text")
-
-
-def test_docs_store_delivery_counting_budget(
-    spark, sf_dir, tmp_path, count_recorder
-):
-    """A doc-store append runs at most ONE count job (the CC size-router
-    on the staged pair edges); the delivery stats come from footers."""
-    from ph_ee_nats_importer_rdbms_spark.analytics import incremental_docs as idc
-
-    d = _docs(spark, sf_dir)
-    root = str(tmp_path / "docs")
-    idc.build_index(spark, d.filter(F.col("doc_id") % 2 == 0), root)
-
-    count_recorder.clear()
-    second = d.filter(F.col("doc_id") % 2 == 1)
-    stats = idc.append_batch(spark, second, root)
-    assert len(count_recorder) <= 1, (
-        f"{len(count_recorder)} count jobs in a doc-store delivery "
-        "(budget: 1 — the CC size-router)"
-    )
-    # footer-derived stats are the true cardinalities
-    assert stats["new_docs"] == second.count()
-
-
-def test_training_store_delivery_counting_budget(
-    spark, sf_dir, tmp_path, count_recorder
-):
-    """A pack-store append runs at most ONE count job — the distinct
-    (shard, seq) count, the one number no footer carries."""
-    from ph_ee_nats_importer_rdbms_spark.analytics import (
-        incremental_training as it,
-    )
-
-    d = _docs(spark, sf_dir)
-    root = str(tmp_path / "pack")
-    it.build_pack_store(spark, d.filter(F.col("doc_id") % 2 == 0), root)
-
-    count_recorder.clear()
-    second = d.filter(F.col("doc_id") % 2 == 1)
-    stats = it.append_pack_batch(spark, second, root)
-    assert len(count_recorder) <= 1, (
-        f"{len(count_recorder)} count jobs in a pack-store delivery "
-        "(budget: 1 — the distinct-sequence count)"
-    )
-    assert stats["new_docs"] == second.count()
-
-
-def test_embedding_store_delivery_counting_budget(
-    spark, sf_dir, tmp_path, count_recorder
-):
-    """An embedding-store append runs at most THREE count jobs: the CC
-    size-router plus the two measured-recall statistics (true pairs /
-    caught pairs — the measurement itself). Sizing (n, n_prior,
-    new_pairs) folds from footers."""
-    from ph_ee_nats_importer_rdbms_spark.analytics import (
-        incremental_embeddings as ie,
-    )
-
-    v = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", "embedding"
-    )
-    root = str(tmp_path / "emb")
-    ie.build_embedding_store(spark, v.filter(F.col("vec_id") % 2 == 0), root)
-
-    count_recorder.clear()
-    second = v.filter(F.col("vec_id") % 2 == 1)
-    stats = ie.append_embedding_batch(spark, second, root)
-    assert len(count_recorder) <= 3, (
-        f"{len(count_recorder)} count jobs in an embedding-store delivery "
-        "(budget: 3 — CC router + 2 recall measurements)"
-    )
-    assert stats["new_vectors"] == second.count()
 
 
 def _changes_df(spark, rows):
@@ -235,12 +137,3 @@ def test_salted_writer_delivers_every_row_exactly_once(spark, tmp_path):
                 "SELECT count(*) FROM ph_variables"
             ).fetchone()[0]
     assert got == 500
-
-
-def test_artifact_count_raises_on_missing_artifact(tmp_path):
-    """A sizing read against a never-written artifact is a bug, not an
-    empty store — artifact_count must raise, never return 0."""
-    from ph_ee_nats_importer_rdbms_spark.analytics import batch_store as bs
-
-    with pytest.raises(FileNotFoundError):
-        bs.artifact_count(str(tmp_path), "delivered", "nope")

@@ -485,9 +485,11 @@ def test_multi_hop_restart_resumes_state(spark, tmp_path):
 def test_multi_hop_matches_batch_at_corpus_scale(spark, tmp_path):
     """The fixture-corpus parity test, scaled to the sf0.001 synthetic
     corpus (~11k events, ~3.7k instances): every D1/D2/C2-C5 path at
-    corpus density, split across micro-batches so keyed state carries
-    thousands of in-flight instances between triggers. The batch fixed
-    point is the specification."""
+    corpus density. The time-ordered corpus is cut into three drops, and
+    each drop is drained before the next lands (one ``run_multi_hop`` per
+    drop, as in ``_three_drains``), so every hop runs three micro-batches
+    and keyed state carries thousands of in-flight instances across
+    them. The batch fixed point is the specification."""
     from ph_ee_nats_importer_rdbms_spark.operators.pipeline import (
         run_import_pipeline,
     )
@@ -507,12 +509,11 @@ def test_multi_hop_matches_batch_at_corpus_scale(spark, tmp_path):
         (src / f"drop_{i}.jsonl").write_text(
             "\n".join(_raw_json(e) for e in chunk) + "\n"
         )
-
-    paths = sp.run_multi_hop(
-        spark,
-        sp.read_raw_stream(spark, str(src), max_files_per_trigger=1),
-        str(tmp_path / "cs_work"),
-    )
+        paths = sp.run_multi_hop(
+            spark,
+            sp.read_raw_stream(spark, str(src)),
+            str(tmp_path / "cs_work"),
+        )
     got = sp.materialize_tables(spark, paths["changes"])
     want = run_import_pipeline(corpus_df)
 

@@ -15,13 +15,14 @@ envelopes/second with per-hop attribution:
   entity   hop 3 — D1-D4/C1-C3 keyed entity fold
   sink     change-log → five typed tables, parquet commit
 
-Knobs: ``--partitions`` (spark.sql.shuffle.partitions — the state-store
-shard count of the three stateful hops; comma list sweeps it),
-``--transport file|wire``. Each run uses a fresh work dir (state
-shards are fixed at first checkpoint, so a sweep must not reuse
-checkpoints).
+Knobs: ``--transport file|wire``. The state-store shard count of the
+three stateful hops is spark.sql.shuffle.partitions, which
+``build_session`` derives from ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` or
+else ``SPARK_GRAFT_CPUS`` (default 32); set ``SPARK_GRAFT_CPUS`` to the
+host's core count, or the run mostly measures empty state shards. The
+run uses a fresh work dir (state shards are fixed at first checkpoint).
 
-Prints one JSON line per run:
+Prints one JSON line ("partitions" is the session's shuffle width):
   {"metric": "ingest_env_per_sec", "transport": ..., "partitions": N,
    "envelopes": N, "pipeline_sec": s, "eps": N,
    "hops": {"source": s, ["land": s,] "resolve": s, "rekey": s,
@@ -76,14 +77,13 @@ def _sink(spark, changes_path: str, out_root: str) -> float:
     return time.perf_counter() - t0
 
 
-def run_file(spark, sf_dir, work, partitions, chunks) -> dict:
+def run_file(spark, sf_dir, work, chunks) -> dict:
     flat, n = _flat_corpus(spark, sf_dir)
     src = os.path.join(work, "source")
     t0 = time.perf_counter()
     replay.write_ordered_chunks(flat, src, chunks=chunks)
     source_sec = time.perf_counter() - t0
     hops: dict = {}
-    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
     paths = sp.run_multi_hop(
         spark,
         sp.read_raw_stream(spark, src, max_files_per_trigger=1),
@@ -95,7 +95,7 @@ def run_file(spark, sf_dir, work, partitions, chunks) -> dict:
     return {"envelopes": n, "hops": hops}
 
 
-def run_wire(spark, sf_dir, work, partitions, waves) -> dict:
+def run_wire(spark, sf_dir, work, waves) -> dict:
     from tests.nats_mini_server import MiniNatsServer
 
     flat, n = _flat_corpus(spark, sf_dir)
@@ -106,7 +106,6 @@ def run_wire(spark, sf_dir, work, partitions, waves) -> dict:
     )
     hops: dict = {"source": 0.0, "land": 0.0}
     waves_sec: list[float] = []
-    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
     landing = os.path.join(work, "landing")
     with MiniNatsServer() as s:
         options = {"transport": "wire", "servers": s.url, "stream": s.js.stream}
@@ -136,7 +135,6 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     ap.add_argument("--transport", default="file", choices=["file", "wire"])
-    ap.add_argument("--partitions", default="32")
     ap.add_argument("--chunks", type=int, default=replay.REPLAY_CHUNKS)
     ap.add_argument("--waves", type=int, default=replay.WIRE_WAVES)
     args = ap.parse_args()
@@ -146,38 +144,34 @@ def main() -> int:
         extra_conf={"spark.driver.extraJavaOptions": "-Xlog:disable"},
     )
     sf = args.sf.rstrip("/").rsplit("sf", 1)[-1]
-    for p in [int(x) for x in str(args.partitions).split(",")]:
-        work = tempfile.mkdtemp(prefix=f"ingest_{args.transport}_{p}_")
-        try:
-            if args.transport == "file":
-                r = run_file(spark, args.sf, work, p, args.chunks)
-            else:
-                r = run_wire(spark, args.sf, work, p, args.waves)
-        finally:
-            shutil.rmtree(work, ignore_errors=True)
-        hops = {k: round(v, 2) for k, v in r["hops"].items()}
-        pipeline_sec = round(
-            sum(v for k, v in r["hops"].items() if k != "source"), 2
+    partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    work = tempfile.mkdtemp(prefix=f"ingest_{args.transport}_")
+    try:
+        if args.transport == "file":
+            r = run_file(spark, args.sf, work, args.chunks)
+        else:
+            r = run_wire(spark, args.sf, work, args.waves)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+    hops = {k: round(v, 2) for k, v in r["hops"].items()}
+    pipeline_sec = round(
+        sum(v for k, v in r["hops"].items() if k != "source"), 2
+    )
+    print(
+        json.dumps(
+            {
+                "metric": "ingest_env_per_sec",
+                "transport": args.transport,
+                "partitions": partitions,
+                "envelopes": r["envelopes"],
+                "pipeline_sec": pipeline_sec,
+                "eps": round(r["envelopes"] / pipeline_sec),
+                "hops": hops,
+                **({"waves_sec": r["waves_sec"]} if "waves_sec" in r else {}),
+                "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+            }
         )
-        print(
-            json.dumps(
-                {
-                    "metric": "ingest_env_per_sec",
-                    "transport": args.transport,
-                    "partitions": p,
-                    "envelopes": r["envelopes"],
-                    "pipeline_sec": pipeline_sec,
-                    "eps": round(r["envelopes"] / pipeline_sec),
-                    "hops": hops,
-                    **(
-                        {"waves_sec": r["waves_sec"]}
-                        if "waves_sec" in r
-                        else {}
-                    ),
-                    "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-                }
-            )
-        )
+    )
     return 0
 
 
