@@ -7,11 +7,20 @@ whole chain inside one whole-stage-codegen span:
 
 - F1/F2  drop DEPLOYMENT / VARIABLE_DOCUMENT records  (NatsConsumer.java:39-47)
 - F3     drop records with neither bpmnProcessId nor processDefinitionKey
-         (NatsConsumer.java:56-59)
+         (NatsConsumer.java:56-59), and after C5 those still without one
 - C5     resolve a missing bpmnProcessId through other records that carry the
-         same processDefinitionKey (TempDocumentStore.java:16-42). Batch mode
-         resolves set-wide with a definition-key dimension join; the
-         streaming path buffers in keyed state instead.
+         same processDefinitionKey (TempDocumentStore.java:16-42). The
+         FIRST carrier wins: the definition's earliest non-empty
+         bpmnProcessId in (timestamp, position, partition_id) order, nulls
+         last — the value the reference's set-once map learns first, and
+         what the streaming hop (state.resolve_step) keeps. A row no
+         carrier resolves is dropped (the stream buffers it forever).
+         Batch form: :func:`definition_dim` builds the definition ->
+         first-carrier dimension and :func:`fill_definitions` broadcast-
+         joins it back. This module is the only one that knows C5: the
+         batch importer, the replay build and the incremental store call
+         it, and the streaming resolve hop takes its input filter
+         (:func:`resolve_input`) from it.
 - F5     tenant / process-id split on the FIRST dash (NatsConsumer.java:73-75)
 - F6     process-registry enrichment with UNKNOWN fallback
          (BpmnProcessProperties.java:26-31) — broadcast join, never a shuffle.
@@ -74,88 +83,92 @@ def parse_envelope(raw_df: DataFrame, value_col: str = "value") -> DataFrame:
     )
 
 
-def with_routing(
-    events: DataFrame,
-    registry: DataFrame | None = None,
-    resolve_definitions: bool = True,
-) -> DataFrame:
-    """F1-F3 + C5 + F5 + F6 over a flat event relation.
+def _empty_bpmn():
+    return F.col("bpmn_process_id").isNull() | (F.col("bpmn_process_id") == "")
+
+
+def _first_truthy_order() -> list:
+    """Struct fields whose MIN is the first event in C5 order:
+    (timestamp, position, partition_id), nulls last per column (boolean
+    null-flags lead each column: false < true). The partition id breaks
+    a (timestamp, position) tie across Zeebe partitions, exactly like
+    ``streaming.pipeline._resolve_batch``'s sort key."""
+    return [
+        flag
+        for c in ("timestamp", "position", "partition_id")
+        for flag in (F.col(c).isNull(), F.coalesce(F.col(c), F.lit(0)))
+    ]
+
+
+def resolve_input(events: DataFrame) -> DataFrame:
+    """F1-F3 ahead of C5, shared by :func:`fill_definitions` and the
+    streaming resolve hop: the skipped value types are dropped, and so is
+    an event with neither a bpmnProcessId nor a definition key (nothing
+    could ever resolve it)."""
+    return events.filter(~F.col("value_type").isin(*DROPPED_VALUE_TYPES)).filter(
+        ~(_empty_bpmn() & F.col("process_definition_key").isNull())
+    )
+
+
+def definition_dim(events: DataFrame) -> DataFrame:
+    """The C5 dimension ``(process_definition_key, resolved_bpmn)``: per
+    definition key, the bpmnProcessId of its FIRST carrier in
+    :func:`_first_truthy_order`. A map-side-combined aggregate bounded
+    by the number of deployed process definitions — broadcastable by
+    construction, and small enough for the incremental store to persist
+    and diff."""
+    return (
+        resolve_input(events)
+        .filter(F.col("process_definition_key").isNotNull() & ~_empty_bpmn())
+        .groupBy("process_definition_key")
+        .agg(
+            F.min(F.struct(*_first_truthy_order(), F.col("bpmn_process_id")))[
+                "bpmn_process_id"
+            ].alias("resolved_bpmn")
+        )
+    )
+
+
+def fill_definitions(events: DataFrame, dim: DataFrame) -> DataFrame:
+    """Apply a C5 dimension (:func:`definition_dim`, possibly built over
+    a larger corpus than ``events``): an empty bpmnProcessId takes its
+    definition's resolution, and a row still empty after that is dropped
+    (the stream buffers it forever). Broadcast join, so the event pass
+    stays map-only; every input column is kept, in input order."""
+    return (
+        resolve_input(events)
+        .join(F.broadcast(dim), on="process_definition_key", how="left")
+        .withColumn(
+            "bpmn_process_id",
+            F.when(_empty_bpmn(), F.col("resolved_bpmn")).otherwise(
+                F.col("bpmn_process_id")
+            ),
+        )
+        .filter(~_empty_bpmn())
+        .select(*events.columns)
+    )
+
+
+def resolve_events(events: DataFrame) -> DataFrame:
+    """C5 over a bounded event relation: the fixed point of the streaming
+    resolve hop (:func:`streaming.state.resolve_step`)."""
+    return fill_definitions(events, definition_dim(events))
+
+
+def route(resolved: DataFrame, registry: DataFrame | None = None) -> DataFrame:
+    """F5 + F6 over C5-resolved events (:func:`fill_definitions`' output
+    or the streaming resolve hop's, where F1-F3 already dropped every
+    unroutable row).
 
     Adds: ``tenant``, ``process_id`` (tenant-less), ``process_type``,
-    ``process_direction``. Unroutable rows are dropped, mirroring the
-    reference's early returns.
-
-    ``resolve_definitions=False`` skips the batch-mode C5 join — used by the
-    streaming pipeline, where resolution already happened in keyed state
-    (an unwatermarked aggregation is illegal mid-stream anyway).
-    """
-    spark = events.sparkSession
+    ``process_direction``."""
+    spark = resolved.sparkSession
     registry = registry if registry is not None else cfg.registry_df(spark)
 
-    ev = events.filter(~F.col("value_type").isin(*DROPPED_VALUE_TYPES))
-
-    empty_bpmn = F.col("bpmn_process_id").isNull() | (F.col("bpmn_process_id") == "")
-
-    if resolve_definitions:
-        # C5 (batch form): resolve a missing bpmnProcessId from the latest
-        # record sharing the same processDefinitionKey that carries one. The
-        # reference replays buffered records once the mapping is learned
-        # (NatsConsumer.java:60-70,82-87); over a bounded batch the fixed
-        # point of that replay is exactly this per-definition-key maximum.
-        #
-        # Cost is proportional to the ANOMALY, not the corpus: the
-        # definition->id dimension is a map-side-combined aggregate, cut by
-        # semi-join to only the definitions some empty-bpmn row actually
-        # needs (bounded by deployed process definitions — broadcastable by
-        # construction), then broadcast-joined back. The main event pass
-        # stays map-only: no corpus shuffle, no sort. `max` over a
-        # (timestamp, position, bpmn) struct is the deterministic form of
-        # max_by(bpmn, (ts, pos)) — positions are unique, and struct-max
-        # ignores null candidates.
-        has_def = F.col("process_definition_key").isNotNull()
-        needs = empty_bpmn & has_def
-        # ONE corpus pass builds both "which definitions have a gap" and
-        # "what each definition resolves to"; keeping only gapped rows with
-        # a known resolution leaves the broadcastable repair dimension.
-        dim = (
-            ev.filter(has_def)
-            .groupBy("process_definition_key")
-            .agg(
-                F.max(
-                    F.when(
-                        ~empty_bpmn,
-                        F.struct(
-                            F.col("timestamp"),
-                            F.col("position"),
-                            F.col("bpmn_process_id"),
-                        ),
-                    )
-                )["bpmn_process_id"].alias("_c5_resolved"),
-                F.max(empty_bpmn).alias("_c5_needed"),
-            )
-            .filter(F.col("_c5_needed") & F.col("_c5_resolved").isNotNull())
-            .drop("_c5_needed")
-        )
-        ev = (
-            ev.join(F.broadcast(dim), on="process_definition_key", how="left")
-            .withColumn(
-                "bpmn_process_id",
-                F.when(needs, F.col("_c5_resolved")).otherwise(
-                    F.col("bpmn_process_id")
-                ),
-            )
-            .drop("_c5_resolved")
-        )
-
-    # F3: still unroutable after resolution -> drop.
-    ev = ev.filter(
-        F.col("bpmn_process_id").isNotNull() & (F.col("bpmn_process_id") != "")
-    )
-
     # F5: split "<processId>-<tenant>" on the FIRST dash.
-    ev = ev.withColumn("process_id", first_dash_prefix("bpmn_process_id")).withColumn(
-        "tenant", first_dash_suffix("bpmn_process_id")
-    )
+    ev = resolved.withColumn(
+        "process_id", first_dash_prefix("bpmn_process_id")
+    ).withColumn("tenant", first_dash_suffix("bpmn_process_id"))
 
     # F6: broadcast registry join with UNKNOWN fallback.
     ev = (
@@ -169,3 +182,10 @@ def with_routing(
         )
     )
     return ev
+
+
+def with_routing(events: DataFrame, registry: DataFrame | None = None) -> DataFrame:
+    """F1-F6 + C5 over a raw flat event relation: :func:`resolve_events`,
+    then :func:`route`. Unroutable rows are dropped, mirroring the
+    reference's early returns."""
+    return route(resolve_events(events), registry)

@@ -108,16 +108,14 @@ def _assemble(
     known_vars: DataFrame,
     specs: list[FieldSpec],
     end_specs: list[FieldSpec],
-    stage: bool = True,
 ) -> DataFrame:
     """Pivot known vars (+ completion pseudo-vars) and join lifecycle.
 
     ``known_vars`` is referenced by two subtrees (the first-touch gate and
-    the pivot input), so without staging its filter + C4 rekey join execute
-    twice per entity table; ``stage`` materializes it once (cluster
+    the pivot input), so without staging its filter + C4 rekey join would
+    execute twice per entity table; it is materialized once (cluster
     analogue: the staged hop table the streaming path writes anyway)."""
-    if stage:
-        known_vars = known_vars.localCheckpoint(eager=True)
+    known_vars = known_vars.localCheckpoint(eager=True)
     touch = _first_touch(lifecycle, known_vars)
     pseudo = _completion_pseudo_vars(lifecycle, touch)
 
@@ -133,7 +131,7 @@ def _assemble(
     return pivot.join(lifecycle, on="instance_key", how="full")
 
 
-def transfers_table(lifecycle: DataFrame, routed_vars: DataFrame, links: DataFrame, stage: bool = True) -> DataFrame:
+def transfers_table(lifecycle: DataFrame, routed_vars: DataFrame, links: DataFrame) -> DataFrame:
     """ph_transfers (entity/transfer/Transfer.java:18-85). Fresh entities
     start IN_PROGRESS (Transfer.java:90-93); ELEMENT_COMPLETED forces
     COMPLETED (InflightTransferManager.java:50)."""
@@ -141,7 +139,7 @@ def transfers_table(lifecycle: DataFrame, routed_vars: DataFrame, links: DataFra
     kv = _known_variables(
         routed_vars, links, cfg.TRANSFER_TYPE, mappers.KNOWN_TRANSFER_VARIABLES
     )
-    df = _assemble(lc, kv, mappers.TRANSFER_SPECS, _TRANSFER_COMPLETED_SPECS, stage=stage)
+    df = _assemble(lc, kv, mappers.TRANSFER_SPECS, _TRANSFER_COMPLETED_SPECS)
     # materialize only instances the reference would have created (C1)
     df = df.filter(
         F.col("started_at_ms").isNotNull() | (F.col("known_variable_events") > 0)
@@ -174,7 +172,7 @@ def transfers_table(lifecycle: DataFrame, routed_vars: DataFrame, links: DataFra
 
 
 def transaction_requests_table(
-    lifecycle: DataFrame, routed_vars: DataFrame, links: DataFrame, stage: bool = True
+    lifecycle: DataFrame, routed_vars: DataFrame, links: DataFrame
 ) -> DataFrame:
     """ph_transaction_requests (TransactionRequest.java:20-74). Fresh
     entities start IN_PROGRESS (:79-82); direction falls back to the
@@ -202,7 +200,7 @@ def transaction_requests_table(
             "process_type", F.coalesce("process_type", F.lit(cfg.TRANSACTION_REQUEST_TYPE))
         )
     )
-    df = _assemble(lc_dir, kv, mappers.TRANSACTION_REQUEST_SPECS, _ENDED_AT_SPEC, stage=stage)
+    df = _assemble(lc_dir, kv, mappers.TRANSACTION_REQUEST_SPECS, _ENDED_AT_SPEC)
     df = df.filter(
         F.col("started_at_ms").isNotNull() | (F.col("known_variable_events") > 0)
     )
@@ -231,7 +229,7 @@ def transaction_requests_table(
     )
 
 
-def batches_table(lifecycle: DataFrame, routed_vars: DataFrame, links: DataFrame, stage: bool = True) -> DataFrame:
+def batches_table(lifecycle: DataFrame, routed_vars: DataFrame, links: DataFrame) -> DataFrame:
     """ph_batches (entity/batch/Batch.java:16-57). The counter columns
     (total_transactions/ongoing/failed/completed) exist in the reference
     schema but are never written by the importer (SURVEY §1.4) — emitted as
@@ -246,7 +244,7 @@ def batches_table(lifecycle: DataFrame, routed_vars: DataFrame, links: DataFrame
         .groupBy(F.col("process_instance_key").alias("instance_key"))
         .agg(F.min_by("process_definition_key", _ord()).alias("workflow_key"))
     )
-    df = _assemble(lc, kv, mappers.BATCH_SPECS, _ENDED_AT_SPEC, stage=stage)
+    df = _assemble(lc, kv, mappers.BATCH_SPECS, _ENDED_AT_SPEC)
     df = df.filter(
         F.col("started_at_ms").isNotNull() | (F.col("known_variable_events") > 0)
     ).join(wf_keys, on="instance_key", how="left")

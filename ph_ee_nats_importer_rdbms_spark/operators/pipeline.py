@@ -27,55 +27,36 @@ from ph_ee_nats_importer_rdbms_spark.operators.classify import with_routing
 def run_import_pipeline(
     events: DataFrame,
     registry: DataFrame | None = None,
-    cache: bool = True,
 ) -> dict[str, DataFrame]:
     """``events`` is a flat event relation (schemas.FLAT_EVENT_SCHEMA shape,
     e.g. from classify.parse_envelope). Returns the five output tables.
 
-    ``cache`` stages the two relations every output re-reads (the routed
-    event stream and the D1-deduped variable stream) via an eager
+    The two relations every output re-reads (the routed event stream and
+    the D1-deduped variable stream) are staged via an eager
     ``localCheckpoint``: this both avoids re-executing the source scan and
-    C5 resolution shuffle per output subtree AND truncates the logical
-    plan, keeping Catalyst analysis of the ~8 downstream subtrees O(small)
+    C5 resolution per output subtree AND truncates the logical plan,
+    keeping Catalyst analysis of the ~8 downstream subtrees O(small)
     instead of O(full source plan each). At cluster scale the equivalent is
     staging to a table once (the streaming path does exactly that with its
     multi-hop parquet layers); use ``reliableCheckpoint``/Delta there if
     executor loss matters."""
-    routed = with_routing(events, registry)
-    if cache:
-        routed = routed.localCheckpoint(eager=True)
-    return run_import_pipeline_routed(routed, cache=cache)
+    routed = with_routing(events, registry).localCheckpoint(eager=True)
+    return run_import_pipeline_routed(routed)
 
 
-def run_import_pipeline_routed(
-    routed: DataFrame, cache: bool = True
-) -> dict[str, DataFrame]:
+def run_import_pipeline_routed(routed: DataFrame) -> dict[str, DataFrame]:
     """The pipeline from an already-routed (and ideally staged) event
     relation — lets callers that keep their own staged copy share it.
 
-    With ``cache`` the two independent staging chains — the D1 variable
-    dedup and the lifecycle chain (parent links -> lifecycle agg) — run as
-    CONCURRENT Spark jobs (thread-submitted; the scheduler interleaves
-    their stages), then the three entity assemblies (each staging its own
+    The two independent staging chains — the D1 variable dedup and the
+    lifecycle chain (parent links -> lifecycle agg) — run as CONCURRENT
+    Spark jobs (thread-submitted; the scheduler interleaves their
+    stages), then the three entity assemblies (each staging its own
     known-variable relation) run concurrently too. Serially these five
     materializations leave the cluster idle during each job's driver-side
     planning and shuffle tails; overlapping them fills those gaps — the
     standard multi-job pattern on a shared cluster."""
     proc = lifecycle.process_events(routed)
-
-    if not cache:
-        routed_vars = event_tables.variables_deduped(routed)
-        links = lifecycle.parent_links(proc)
-        lc = lifecycle.lifecycle_table(proc, links)
-        return {
-            "variables": event_tables.variables_table(routed),
-            "tasks": event_tables.tasks_table(routed),
-            "transfers": entities.transfers_table(lc, routed_vars, links, stage=False),
-            "transaction_requests": entities.transaction_requests_table(
-                lc, routed_vars, links, stage=False
-            ),
-            "batches": entities.batches_table(lc, routed_vars, links, stage=False),
-        }
 
     from concurrent.futures import ThreadPoolExecutor
 
@@ -99,15 +80,11 @@ def run_import_pipeline_routed(
         links, lc = f_lc.result()
 
     builders = {
-        "transfers": lambda: entities.transfers_table(
-            lc, routed_vars, links, stage=True
-        ),
+        "transfers": lambda: entities.transfers_table(lc, routed_vars, links),
         "transaction_requests": lambda: entities.transaction_requests_table(
-            lc, routed_vars, links, stage=True
+            lc, routed_vars, links
         ),
-        "batches": lambda: entities.batches_table(
-            lc, routed_vars, links, stage=True
-        ),
+        "batches": lambda: entities.batches_table(lc, routed_vars, links),
     }
     with ThreadPoolExecutor(len(builders)) as ex:
         futures = {name: ex.submit(fn) for name, fn in builders.items()}

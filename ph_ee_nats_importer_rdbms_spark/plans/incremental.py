@@ -20,16 +20,18 @@ rebuilding 100 TB because one day changed is the difference between a
 Correctness is defined as parity with a from-scratch rebuild on the
 post-refresh event log, which is subtle in exactly two places:
 
-1. **C5 definition resolution is corpus-global** (classify.py:99-148): an
+1. **C5 definition resolution is corpus-global**: an
    empty-``bpmnProcessId`` row in an UNTOUCHED day can resolve through a
-   definition row that the delta changed. The store therefore keeps the
-   full definition->id dimension (``c5_dim``, tiny by construction — one
-   row per deployed process definition) and a day-partitioned gap log
+   definition row that the delta changed. The store therefore persists
+   the full definition->first-carrier dimension that
+   ``classify.definition_dim`` builds (``c5_dim``, tiny by construction —
+   one row per deployed process definition) and a day-partitioned gap log
    (``c5_gaps``: which instances have rows needing resolution, per day).
    A refresh recomputes the dimension (one map-side-combinable aggregate
-   over a 4-column projection of the log — linear, cheap), diffs it against
-   the stored one, and pulls every gapped instance of a changed definition
-   into the affected set.
+   over the log — linear, cheap), diffs it against the stored one, and
+   pulls every gapped instance of a changed definition into the affected
+   set. ``classify.fill_definitions`` applies it to the gathered groups,
+   so a subset resolves exactly as the full corpus does.
 2. **C4 parent re-keying groups instances** (lifecycle.py:45-71): a child's
    events land in the parent's output rows, so the rebuild unit is the
    re-key GROUP. The affected closure maps touched raw keys to their group
@@ -64,8 +66,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from ph_ee_nats_importer_rdbms_spark.schemas import FLAT_EVENT_SCHEMA
 from ph_ee_nats_importer_rdbms_spark.operators import lifecycle
 from ph_ee_nats_importer_rdbms_spark.operators.classify import (
-    DROPPED_VALUE_TYPES,
-    with_routing,
+    definition_dim,
+    fill_definitions,
+    route,
 )
 from ph_ee_nats_importer_rdbms_spark.operators.pipeline import (
     run_import_pipeline_routed,
@@ -176,34 +179,6 @@ def _overwrite_day_partitions(
 # --- C5 global state ------------------------------------------------------
 
 
-def _c5_dim(flat: DataFrame) -> DataFrame:
-    """Full definition->bpmnProcessId map: for every definition key, the
-    latest (timestamp, position)-ordered non-empty id — the same struct-max
-    classify.py:121-137 uses, over the same F1/F2-filtered stream, but
-    unfiltered by "has a gap" because it must be diffable across refreshes."""
-    ev = flat.filter(~F.col("value_type").isin(*DROPPED_VALUE_TYPES))
-    nonempty = F.col("bpmn_process_id").isNotNull() & (
-        F.col("bpmn_process_id") != ""
-    )
-    return (
-        ev.filter(F.col("process_definition_key").isNotNull())
-        .groupBy("process_definition_key")
-        .agg(
-            F.max(
-                F.when(
-                    nonempty,
-                    F.struct(
-                        F.col("timestamp"),
-                        F.col("position"),
-                        F.col("bpmn_process_id"),
-                    ),
-                )
-            )["bpmn_process_id"].alias("resolved_bpmn")
-        )
-        .filter(F.col("resolved_bpmn").isNotNull())
-    )
-
-
 def _c5_gaps(flat: DataFrame, granularity: str = "day") -> DataFrame:
     """Instances owning rows that NEED C5 resolution, with the event day the
     gap row lives in (day-partitionable alongside the log). Anomaly-sized."""
@@ -216,23 +191,6 @@ def _c5_gaps(flat: DataFrame, granularity: str = "day") -> DataFrame:
             _day(granularity=granularity).alias("event_day"),
         )
         .distinct()
-    )
-
-
-def _resolve_c5(flat: DataFrame, dim: DataFrame) -> DataFrame:
-    """Apply an externally supplied (corpus-global) dimension — the refresh
-    twin of classify.py:140-148's inline join."""
-    empty = F.col("bpmn_process_id").isNull() | (F.col("bpmn_process_id") == "")
-    needs = empty & F.col("process_definition_key").isNotNull()
-    return (
-        flat.join(F.broadcast(dim), on="process_definition_key", how="left")
-        .withColumn(
-            "bpmn_process_id",
-            F.when(needs, F.col("resolved_bpmn")).otherwise(
-                F.col("bpmn_process_id")
-            ),
-        )
-        .drop("resolved_bpmn")
     )
 
 
@@ -252,17 +210,18 @@ def _derive_tables(
     granularity: str = "day",
 ) -> dict[str, DataFrame]:
     """The import pipeline over ``events`` with ``part_day`` attached:
-    C5 via the supplied global dimension (so a group subset resolves
-    identically to the full corpus), then the standard routed pipeline.
+    C5 via the supplied global dimension (``classify.fill_definitions``,
+    so a group subset resolves identically to the full corpus), then
+    ``classify.route`` and the standard routed pipeline.
 
     ``part_day`` of a raw key = day of its first event; of a group root =
     day of the root's own first event (children attach to the root's rows,
     so their partitions follow the root). Stable under any edit that keeps
     the instance's first event day, which is what keeps merges partition-
     local."""
-    routed = with_routing(
-        _resolve_c5(events, dim), registry, resolve_definitions=False
-    ).localCheckpoint(eager=True)
+    routed = route(fill_definitions(events, dim), registry).localCheckpoint(
+        eager=True
+    )
     tables = run_import_pipeline_routed(routed)
 
     raw_first = events.groupBy(
@@ -330,7 +289,7 @@ def build_store(
     ).write.mode("overwrite").partitionBy("event_day").parquet(
         _events_path(root)
     )
-    dim = _c5_dim(flat).localCheckpoint(eager=True)
+    dim = definition_dim(flat).localCheckpoint(eager=True)
     dim.write.mode("overwrite").parquet(os.path.join(root, "c5_dim"))
     _c5_gaps(flat, granularity).repartition(F.col("event_day")).write.mode(
         "overwrite"
@@ -564,7 +523,7 @@ def _apply_refresh(
     )
 
     # 2. C5 dimension diff -> instances whose resolution input changed
-    new_dim = _c5_dim(flat).localCheckpoint(eager=True)
+    new_dim = definition_dim(flat).localCheckpoint(eager=True)
     changed_defs = (
         old_dim.withColumnRenamed("resolved_bpmn", "_old")
         .join(

@@ -13,22 +13,22 @@ Python stateful stage (guide §4: the measured bound was ~11k env/s per
   first truthy bpmn in (timestamp, position, partition_id) order; every
   falsy-bpmn event is emitted with that value once it is known anywhere
   in the stream (buffered rows flush the moment resolution arrives), and
-  with no resolution the falsy rows buffer forever (never emitted). Batch
-  form: one map-side aggregate builds the (definition -> first truthy
-  bpmn) dimension, broadcast-joined back — NO corpus shuffle (the
-  window-fill form would sort the whole corpus by definition key).
+  with no resolution the falsy rows buffer forever (never emitted). The
+  batch form is ``classify.resolve_events``, the same first-carrier
+  dimension join every batch path uses.
 - **rekey (C4)**: the only state write is a PROCESS ELEMENT_ACTIVATING
   with parent > 0; an instance that never registers a link maps every
   event to itself (effective_key = own key, child_start = false). Batch
-  form: broadcast anti-join routes the bulk through a pure projection;
-  only the linked-instance slice replays :func:`state.rekey_step` in
-  Python (guide §4 — Python on the slice, not the corpus). The linked
-  set has the same cardinality as the reference's single-JVM
-  inflightCallActivities map, i.e. broadcastable by the reference's own
-  operating assumption.
+  form: the linked instances are ``lifecycle.parent_links``' children
+  (the batch importer's link set); a broadcast anti-join routes the bulk
+  through a pure projection, and only the linked-instance slice replays
+  :func:`state.rekey_step` in Python (guide §4 — Python on the slice,
+  not the corpus). The linked set has the same cardinality as the
+  reference's single-JVM inflightCallActivities map, i.e. broadcastable
+  by the reference's own operating assumption.
 - **entity (D1-D4/C6)**: variable-insert acceptance (D1) reduces to
   "timestamp strictly greater than the previous event's in the
-  (effective_key, name) group" — with events sorted ascending the
+  (process_instance_key, name) group" — with events sorted ascending the
   running max of accepted timestamps IS the previous row's timestamp —
   and task acceptance (D2) is plain first-occurrence per (effective_key,
   element_id, intent): both are native windows over disjoint slices.
@@ -52,9 +52,10 @@ from pyspark.sql import types as T
 
 from ph_ee_nats_importer_rdbms_spark import config as cfg
 from ph_ee_nats_importer_rdbms_spark import schemas
+from ph_ee_nats_importer_rdbms_spark.operators import lifecycle
 from ph_ee_nats_importer_rdbms_spark.operators.classify import (
-    DROPPED_VALUE_TYPES,
-    with_routing,
+    resolve_events,
+    route,
 )
 from ph_ee_nats_importer_rdbms_spark.operators.mappers import (
     KNOWN_BATCH_VARIABLES,
@@ -256,105 +257,22 @@ def _fold_sorted_groups(
     )
 
 
-def _first_truthy_order() -> list:
-    """Struct whose MIN is the first event in the resolve hop's order:
-    (timestamp, position, partition_id), nulls last per column (boolean
-    null-flags lead each column: false < true). The partition id breaks
-    a (timestamp, position) tie across Zeebe partitions, exactly like
-    ``pipeline._resolve_batch``'s sort key."""
-    return [
-        flag
-        for c in ("timestamp", "position", "partition_id")
-        for flag in (F.col(c).isNull(), F.coalesce(F.col(c), F.lit(0)))
-    ]
-
-
-def _empty_bpmn():
-    return F.col("bpmn_process_id").isNull() | (F.col("bpmn_process_id") == "")
-
-
-def resolve_input(events: DataFrame) -> DataFrame:
-    """Hop 1's input, shared by :func:`resolve_events` and
-    ``pipeline.resolve_stage``: the skipped value types are dropped, and
-    so is an event with neither a bpmnProcessId nor a definition key
-    (nothing could ever resolve it)."""
-    return events.filter(~F.col("value_type").isin(*DROPPED_VALUE_TYPES)).filter(
-        ~(_empty_bpmn() & F.col("process_definition_key").isNull())
-    )
-
-
-# ---------------------------------------------------------------------------
-# Hop 1 — C5 resolve
-# ---------------------------------------------------------------------------
-
-
-def resolve_events(events: DataFrame) -> DataFrame:
-    """Batch fixed point of :func:`pipeline.resolve_stage` (set-once
-    first-truthy-bpmn semantics of :func:`state.resolve_step`).
-
-    The (definition -> resolution) dimension is a map-side-combined
-    aggregate bounded by the number of deployed process definitions —
-    broadcastable by construction — so the corpus pass stays map-only:
-    no shuffle, no sort (guide §2.4)."""
-    ev = resolve_input(events)
-    dim = (
-        ev.filter(F.col("process_definition_key").isNotNull())
-        .groupBy("process_definition_key")
-        .agg(
-            F.min(
-                F.when(
-                    ~_empty_bpmn(),
-                    F.struct(
-                        *_first_truthy_order(),
-                        F.col("bpmn_process_id"),
-                    ),
-                )
-            )["bpmn_process_id"].alias("_resolved_bpmn")
-        )
-        .filter(F.col("_resolved_bpmn").isNotNull())
-    )
-    out = (
-        ev.join(F.broadcast(dim), on="process_definition_key", how="left")
-        .withColumn(
-            "bpmn_process_id",
-            F.when(_empty_bpmn(), F.col("_resolved_bpmn")).otherwise(
-                F.col("bpmn_process_id")
-            ),
-        )
-        .drop("_resolved_bpmn")
-        # still-falsy rows are the never-resolved buffer: never emitted
-        .filter(~_empty_bpmn())
-    )
-    return out.select(*[f.name for f in FLAT_SCHEMA.fields])
-
-
 # ---------------------------------------------------------------------------
 # Hop 2 — C4 rekey
 # ---------------------------------------------------------------------------
 
-def _link_event():
-    """rekey_step's only state write (RecordParser.java:184-194)."""
-    return (
-        (F.col("value_type") == "PROCESS_INSTANCE")
-        & (F.col("bpmn_element_type") == "PROCESS")
-        & (F.col("intent") == "ELEMENT_ACTIVATING")
-        & (F.col("parent_process_instance_key") > 0)
-    )
-
-
 def rekey_events(routed: DataFrame) -> DataFrame:
     """Batch form of :func:`pipeline.rekey_stage`: instances that never
-    register a call-activity link take a pure projection (the bulk);
+    register a call-activity link (not a child in
+    :func:`lifecycle.parent_links`) take a pure projection (the bulk);
     only the linked slice replays :func:`state.rekey_step` in Python.
 
     Joins use null-safe equality so a (degenerate) null instance key
     routes to the Python slice, exactly like the streaming null key
     group."""
     cols = [f.name for f in REKEYED_SCHEMA.fields]
-    linked = (
-        routed.filter(_link_event())
-        .select(F.col("process_instance_key").alias("_linked_key"))
-        .distinct()
+    linked = lifecycle.parent_links(lifecycle.process_events(routed)).select(
+        F.col("child_key").alias("_linked_key")
     )
     on = F.col("process_instance_key").eqNullSafe(F.col("_linked_key"))
     bulk = (
@@ -408,13 +326,18 @@ _SNAPSHOT_SCHEMA = T.StructType(
 
 
 def _accepted_variables(rekeyed: DataFrame) -> DataFrame:
-    """D1 acceptance, natively: events sorted ascending per
-    (effective_key, name) means the running max of accepted timestamps
-    equals the previous row's timestamp — accept iff there is no
-    previous row or ``timestamp`` strictly exceeds it (a null-timestamp
-    predecessor resets the max exactly like ``var_max_ts[name] = None``
-    does in :func:`state.entity_step`)."""
-    w = Window.partitionBy("effective_key", "name").orderBy(*_event_order())
+    """D1 acceptance, natively, keyed like the reference by the
+    variable's OWN instance and name (RecordParser.java:133-145 runs
+    before the :87-91 re-key), so a call-activity child's variable never
+    dedups against its parent's. Events sorted ascending per
+    (process_instance_key, name) means the running max of accepted
+    timestamps equals the previous row's timestamp — accept iff there is
+    no previous row or ``timestamp`` strictly exceeds it (a
+    null-timestamp predecessor resets the max exactly like storing a
+    None max does in :func:`state.entity_step`)."""
+    w = Window.partitionBy("process_instance_key", "name").orderBy(
+        *_event_order()
+    )
     prev_ts = F.lag("timestamp").over(w)
     rn = F.row_number().over(w)
     return (
@@ -559,8 +482,6 @@ def replay_tables(
     twice), ``routed`` three times by the rekey split, and ``rekeyed``
     feeds three output branches."""
     events = events.localCheckpoint(eager=True)
-    routed = with_routing(
-        resolve_events(events), registry, resolve_definitions=False
-    ).localCheckpoint(eager=True)
+    routed = route(resolve_events(events), registry).localCheckpoint(eager=True)
     rekeyed = rekey_events(routed).localCheckpoint(eager=True)
     return entity_tables(rekeyed)

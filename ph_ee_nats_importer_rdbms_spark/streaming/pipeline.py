@@ -33,7 +33,8 @@ from pyspark.sql.types import StringType, StructField, StructType
 from ph_ee_nats_importer_rdbms_spark import schemas
 from ph_ee_nats_importer_rdbms_spark.operators.classify import (
     parse_envelope,
-    with_routing,
+    resolve_input,
+    route,
 )
 from ph_ee_nats_importer_rdbms_spark.sources.nats_source import NATS_SCHEMA, land
 from ph_ee_nats_importer_rdbms_spark.streaming import state as sm
@@ -51,7 +52,6 @@ from ph_ee_nats_importer_rdbms_spark.streaming.batch_replay import (  # noqa: F4
     _concat,
     _event_sort_key,
     _records,
-    resolve_input,
 )
 
 _STATE_SCHEMA = StructType([StructField("blob", StringType(), True)])
@@ -79,10 +79,10 @@ def _resolve_batch(
     moment it becomes known), and with no resolution the whole batch
     buffers. Output rows, order, and state are identical to
     resolve_step's — pinned against randomized multi-batch replays in
-    tests/test_round13_opts.py."""
+    tests/test_streaming.py."""
     cols = _columns(FLAT_SCHEMA)
     # the partition id breaks a (timestamp, position) tie across Zeebe
-    # partitions, like batch_replay.resolve_events' first-truthy min
+    # partitions, like classify.definition_dim's first-carrier min
     pdf = pdf.sort_values(
         ["timestamp", "position", "partition_id"],
         kind="mergesort",
@@ -122,7 +122,7 @@ def _rekey_batch(
     empty — pure column ops, no per-event dict replay, no sort (rows
     are independent). Only instances that ARE call-activity children
     take the dict path. Parity pinned against randomized replays in
-    tests/test_round13_opts.py."""
+    tests/test_streaming.py."""
     cols = _columns(REKEYED_SCHEMA)
     if parent0 is None:
         # cheapest discriminator first: a link needs a POSITIVE parent key
@@ -359,7 +359,7 @@ def run_multi_hop(
     drain(resolve_stage(events), "resolved", "resolve")
     resolved = spark.readStream.schema(FLAT_SCHEMA).parquet(paths["resolved"])
     drain(
-        rekey_stage(with_routing(resolved, registry, resolve_definitions=False)),
+        rekey_stage(route(resolved, registry)),
         "rekeyed",
         "rekey",
     )

@@ -267,7 +267,15 @@ class EntityState:
     entity_type: str | None = None
     started: bool = False
     completed: bool = False
-    var_max_ts: dict = field(default_factory=dict)  # D1: name -> max ts seen
+    #: D1 is keyed by the variable's OWN (instance, name), before the C4
+    #: re-key (RecordParser.java:133-145 precedes :87-91). ``var_max_ts``
+    #: holds the effective key's own variables (name -> max ts seen);
+    #: ``child_var_max_ts`` those of re-keyed call-activity children
+    #: (str(child key) -> name -> max ts), so a child never dedups
+    #: against its parent. Blobs written before the split load with an
+    #: empty child map.
+    var_max_ts: dict = field(default_factory=dict)
+    child_var_max_ts: dict = field(default_factory=dict)
     tasks_seen: list = field(default_factory=list)  # D2: [element_id, intent]
     seq: int = 0  # micro-batches processed; orders snapshots in the change log
     #: first tenant observed for this instance (time order). Persisted so a
@@ -286,6 +294,7 @@ class EntityState:
                 "started": self.started,
                 "completed": self.completed,
                 "var_max_ts": self.var_max_ts,
+                "child_var_max_ts": self.child_var_max_ts,
                 "tasks_seen": self.tasks_seen,
                 "seq": self.seq,
                 "tenant": self.tenant,
@@ -303,6 +312,7 @@ class EntityState:
             started=d["started"],
             completed=d["completed"],
             var_max_ts=d["var_max_ts"],
+            child_var_max_ts=d.get("child_var_max_ts", {}),
             tasks_seen=d["tasks_seen"],
             seq=d.get("seq", 0),
             tenant=d.get("tenant"),
@@ -333,17 +343,24 @@ def entity_step(
         ts = ev["timestamp"]
         if vt == "VARIABLE":
             name = ev.get("name")
+            inst = ev["process_instance_key"]
             # D1 (RecordParser.java:133-145): drop if an already-processed
-            # event for (instance, name) had timestamp >= this one
-            prior = state.var_max_ts.get(name)
+            # event for the variable's own (instance, name) had
+            # timestamp >= this one
+            seen = (
+                state.var_max_ts
+                if ev.get("effective_key", inst) == inst
+                else state.child_var_max_ts.setdefault(str(inst), {})
+            )
+            prior = seen.get(name)
             if prior is not None and prior >= ts:
                 continue
-            state.var_max_ts[name] = ts
+            seen[name] = ts
             out.append(
                 {
                     "kind": "variable",
                     "workflow_key": ev.get("process_definition_key"),
-                    "workflow_instance_key": ev["process_instance_key"],
+                    "workflow_instance_key": inst,
                     "timestamp": ts,
                     "name": name,
                     "value": ev.get("value"),

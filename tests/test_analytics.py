@@ -269,6 +269,24 @@ def test_ann_lsh_is_subset_of_bruteforce_candidates(spark, sf_dir):
         assert r["cosine"] <= bf[(r["query_id"], 1)] + 1e-9
 
 
+def test_plan_memo_purges_dead_session_entries(spark, sf_dir) -> None:
+    """An entry keyed by a stopped session's applicationId can never be
+    served again (the DataFrame is bound to its dead session) — any
+    insert must purge it, or a session-restarting process (pytest,
+    notebooks) grows the dict without bound."""
+    app = spark.sparkContext.applicationId
+    dead = ("app-DEAD-0000", "q_ann_bruteforce", "/nowhere", None, ("fp",))
+    similarity._PLAN_MEMO[dead] = "sentinel"
+    # drop any same-session cached entry first: the sweep runs on
+    # INSERT, so the call below must be a memo MISS regardless of which
+    # tests (and plans) ran earlier in this session
+    for k in [k for k in similarity._PLAN_MEMO if k[0] == app]:
+        del similarity._PLAN_MEMO[k]
+    similarity.q_ann_lsh(spark, sf_dir)
+    assert dead not in similarity._PLAN_MEMO
+    assert all(k[0] == app for k in similarity._PLAN_MEMO)
+
+
 def test_lang_id_covers_all_docs_with_known_labels(spark, sf_dir, n_docs):
     res = text.q_lang_id(spark, sf_dir)
     assert res.count() == n_docs

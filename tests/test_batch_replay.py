@@ -18,6 +18,7 @@ import random
 
 import pytest
 
+from ph_ee_nats_importer_rdbms_spark.operators.classify import resolve_events
 from ph_ee_nats_importer_rdbms_spark.streaming import batch_replay as br
 from ph_ee_nats_importer_rdbms_spark.streaming import state as sm
 
@@ -123,7 +124,7 @@ def test_resolve_events_matches_streaming_topology(spark) -> None:
         df = spark.createDataFrame(
             [tuple(r[c] for c in cols) for r in rows], br.FLAT_SCHEMA
         )
-        got = [r.asDict() for r in br.resolve_events(df).collect()]
+        got = [r.asDict() for r in resolve_events(df).collect()]
         from collections import Counter
 
         assert Counter(map(_norm, got)) == Counter(

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from ph_ee_nats_importer_rdbms_spark.operators.pipeline import run_import_pipeline
@@ -322,3 +323,60 @@ def test_registry_df_is_a_local_relation(spark):
     assert sorted(tuple(r) for r in df.collect()) == sorted(
         (pid, t, d) for pid, (t, d) in cfg.DEFAULT_PROCESS_REGISTRY.items()
     )
+
+
+def _conflicting_carriers():
+    # definition 6101's first carrier names a batch process, a later one a
+    # transfer: the gapped batchId takes the FIRST carrier's id (C5)
+    return [
+        zf.process_event(
+            210, "ELEMENT_ACTIVATING", ts=1_000, bpmn="bulk_processor-tn02",
+            definition=6101,
+        ),
+        zf.variable_event(
+            210, "batchId", '"B-210"', ts=2_000, bpmn="", definition=6101
+        ),
+        zf.process_event(
+            211, "ELEMENT_ACTIVATING", ts=3_000, bpmn="PayeeQuoteTransfer-tn01",
+            definition=6101,
+        ),
+    ]
+
+
+def _d1_across_link():
+    # parent 110 and its live call-activity child 111 both write amount at
+    # ts 3000: D1 keys on each variable's own instance, so both rows stay
+    # and the child's later position wins the parent's amount
+    return [
+        zf.process_event(110, "ELEMENT_ACTIVATING", ts=1_000),
+        zf.process_event(
+            111, "ELEMENT_ACTIVATING", ts=2_000, parent=110, definition=5002
+        ),
+        zf.variable_event(110, "amount", '"10.00"', ts=3_000),
+        zf.variable_event(111, "amount", '"20.00"', ts=3_000, definition=5002),
+        zf.job_event(110, "svc", "T1", "CREATED", ts=3_100),
+    ]
+
+
+@pytest.mark.parametrize(
+    "case", [_conflicting_carriers, _d1_across_link], ids=lambda f: f.__name__[1:]
+)
+def test_batch_importer_matches_batch_replay(spark, case):
+    """The batch importer and the replay build (the stream's batch fixed
+    point) agree on all five tables, every shared column."""
+    from ph_ee_nats_importer_rdbms_spark.streaming import batch_replay as br
+
+    events = zf.to_df(spark, case())
+    want = run_import_pipeline(events)
+    got = br.replay_tables(spark, events)
+    for name, w_df in want.items():
+        cols = [c for c in w_df.columns if c in got[name].columns]
+        w = sorted(map(tuple, w_df.select(*cols).collect()), key=repr)
+        g = sorted(map(tuple, got[name].select(*cols).collect()), key=repr)
+        assert g == w, f"{name} diverges"
+    if case is _conflicting_carriers:
+        assert [r.workflow_instance_key for r in want["transfers"].collect()] == [211]
+        assert _one(want["batches"]).batch_id == "B-210"
+    else:
+        assert want["variables"].count() == 2
+        assert str(_one(want["transfers"]).amount) == "20.0000"

@@ -200,25 +200,52 @@ def test_refresh_matches_full_rebuild(utc_session, tmp_path):
 def test_refresh_c5_closure_rebuilds_untouched_days_gap_rows(
     utc_session, tmp_path
 ):
-    """Editing day3's resolving row re-routes instance 400 (whose gap rows
-    live on day1) — the C5 dimension diff must pull 400 into the rebuild."""
+    """Editing day3's FIRST carrier of definition 7001 re-routes instance
+    400 (whose gap rows live on day1) — the C5 dimension diff must pull
+    400 into the rebuild. A later carrier that keeps the old id changes
+    nothing: the first carrier wins."""
     spark = utc_session
     root = str(tmp_path / "inc")
     incremental.build_store(spark, to_df(spark, _corpus()), root)
 
+    def dim_7001() -> list:
+        return [
+            r["resolved_bpmn"]
+            for r in spark.read.parquet(os.path.join(root, "c5_dim"))
+            .filter(F.col("process_definition_key") == 7001)
+            .collect()
+        ]
+
+    def transfer_keys() -> set:
+        t = incremental.read_table(spark, root, "transfers")
+        return {r["workflow_instance_key"] for r in t.collect()}
+
     # before: 400 resolved through def 7001 -> PayeeQuoteTransfer-tn02
     v = incremental.read_table(spark, root, "variables")
     assert v.filter(F.col("workflow_instance_key") == 400).count() == 1
+    assert dim_7001() == ["PayeeQuoteTransfer-tn02"]
+    assert 400 in transfer_keys()
 
-    day3_new = [
-        process_event(
-            410, "ELEMENT_ACTIVATING", DAY3 + 1000, bpmn="OtherFlow-tn09",
-            definition=7001,
-        ),
-    ]
+    day3_new = _det_positions(
+        [
+            process_event(
+                410, "ELEMENT_ACTIVATING", DAY3 + 1000, bpmn="OtherFlow-tn09",
+                definition=7001,
+            ),
+            process_event(
+                411, "ELEMENT_ACTIVATING", DAY3 + 2000,
+                bpmn="PayeeQuoteTransfer-tn02", definition=7001,
+            ),
+        ]
+    )
     incremental.refresh_days(
         spark, root, to_df(spark, day3_new), changed_days=["2024-03-03"]
     )
+
+    # after: the stored dimension follows the edited first carrier, and
+    # 400 now routes to the unregistered OtherFlow (no transfer row)
+    assert dim_7001() == ["OtherFlow-tn09"]
+    assert 400 not in transfer_keys() and 411 in transfer_keys()
 
     full_root = str(tmp_path / "full")
     post = [r for r in _corpus() if (r["timestamp"] or 0) < DAY3] + day3_new

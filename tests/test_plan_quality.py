@@ -114,6 +114,24 @@ def test_bm25_store_read_is_single_exchange_with_group_limit(spark, sf_dir):
     assert "BroadcastExchange" not in plan, plan
 
 
+def test_bm25_read_cache_purges_dead_session_entries(spark, sf_dir) -> None:
+    from ph_ee_nats_importer_rdbms_spark.analytics import search as srch
+    from ph_ee_nats_importer_rdbms_spark.analytics.incremental_curation import (
+        staged_curation_store_root,
+    )
+
+    app = spark.sparkContext.applicationId
+    dead = ("app-DEAD-0000", "/nowhere", (("000001_base.json", 1, 1),))
+    srch._BM25_READ_CACHE[dead] = ((), 0, 0.0, "sentinel")
+    root = staged_curation_store_root(spark, sf_dir)
+    # drop any same-session cached entry so the read is a cache MISS
+    for k in [k for k in srch._BM25_READ_CACHE if k[0] == app]:
+        del srch._BM25_READ_CACHE[k]
+    srch.read_bm25_search(spark, root)
+    assert dead not in srch._BM25_READ_CACHE
+    assert all(k[0] == app for k in srch._BM25_READ_CACHE)
+
+
 def test_ann_search_store_prunes_probed_list_partitions(spark, sf_dir):
     """The store-backed serving entry (VERDICT r7 task #2): probes must
     reach the staged store's inverted-list layout as PartitionFilters on

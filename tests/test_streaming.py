@@ -95,6 +95,31 @@ def test_entity_d1_d3_d4_semantics():
     assert [r["timestamp"] for r in out if r["kind"] == "variable"] == [10, 20]
 
 
+def test_entity_d1_keys_on_the_variables_own_instance():
+    """D1 dedups per (own instance, name): a re-keyed child's variable at
+    the parent's timestamp is kept, a repeat of it is not, and a state
+    blob written before the child map existed loads with bare-name keys
+    still meaning the effective key's own variables."""
+    old_blob = json.dumps(
+        {
+            "entity": {}, "entity_type": None, "started": False,
+            "completed": False, "var_max_ts": {"amount": 10},
+            "tasks_seen": [], "seq": 1, "tenant": None,
+        }
+    )
+    st = sm.EntityState.from_json(old_blob)
+    mk = lambda inst, ts: {  # noqa: E731
+        "value_type": "VARIABLE", "process_instance_key": inst,
+        "effective_key": 9, "timestamp": ts, "name": "amount",
+        "value": '"1.00"', "process_type": "UNKNOWN",
+    }
+    st, out = sm.entity_step(st, [mk(9, 10), mk(12, 10), mk(12, 10)])
+    assert [r["workflow_instance_key"] for r in out] == [12]
+    st = sm.EntityState.from_json(st.to_json())
+    assert st.var_max_ts == {"amount": 10}
+    assert st.child_var_max_ts == {"12": {"amount": 10}}
+
+
 def test_entity_task_dedup_and_null_type_guard():
     st = sm.EntityState()
     job = lambda intent, ts, jt="svc": {
@@ -162,6 +187,135 @@ def test_fold_carries_null_key_group_across_arrow_batches():
 
 
 # ---------------------------------------------------------------------------
+# Replay-wrapper parity: the vectorized resolve batch core and the rekey
+# fast path (pipeline._resolve_batch / _rekey_batch) must replay
+# sm.resolve_step / sm.rekey_step exactly — same emitted rows (order
+# included), same carried state — across randomized multi-batch event
+# sequences.
+# ---------------------------------------------------------------------------
+
+
+def _random_flat_events(rng, n, with_parents: bool):
+    """n flat-schema events for ONE key group, shuffled timestamps,
+    mixed null/empty/real bpmn and (optionally) call-activity links."""
+    from ph_ee_nats_importer_rdbms_spark.streaming.pipeline import (
+        FLAT_SCHEMA,
+        ROUTED_SCHEMA,
+    )
+
+    schema = ROUTED_SCHEMA if with_parents else FLAT_SCHEMA
+    cols = [f.name for f in schema.fields]
+    rows = []
+    for i in range(n):
+        bpmn = rng.choice([None, "", "proc-a", "proc-b"])
+        vt = rng.choice(["PROCESS_INSTANCE", "VARIABLE", "JOB"])
+        rows.append(
+            {
+                **{c: None for c in cols},
+                "partition_id": 1,
+                "position": i,
+                "key": 100 + i,
+                "timestamp": int(rng.choice(range(1000, 1020))),
+                "record_type": "EVENT",
+                "value_type": vt,
+                "intent": rng.choice(
+                    ["ELEMENT_ACTIVATING", "ELEMENT_COMPLETED", "CREATED"]
+                ),
+                "bpmn_process_id": bpmn,
+                "process_instance_key": 7,
+                "process_definition_key": 42,
+                "parent_process_instance_key": (
+                    int(rng.choice([0, 3, 9])) if with_parents and rng.random() < 0.4 else None
+                ),
+                "bpmn_element_type": rng.choice(["PROCESS", "SERVICE_TASK"]),
+                "element_id": f"el{i % 3}",
+                "name": f"v{i % 4}",
+                "value": '"x"',
+                "job_type": "jt",
+            }
+        )
+    return cols, rows
+
+
+def _batches(rng, rows, k):
+    """Split rows into k contiguous batches."""
+    cuts = sorted(rng.sample(range(1, len(rows)), k - 1))
+    return [rows[a:b] for a, b in zip([0] + cuts, cuts + [len(rows)])]
+
+
+def test_resolve_batch_matches_resolve_step() -> None:
+    import random
+
+    import pandas as pd
+
+    from ph_ee_nats_importer_rdbms_spark.streaming import pipeline as sp
+    from ph_ee_nats_importer_rdbms_spark.streaming import state as sm
+
+    rng = random.Random(1307)
+    for trial in range(40):
+        cols, rows = _random_flat_events(rng, rng.randint(1, 30), False)
+        nb = rng.randint(1, 4)
+        batches = (
+            [rows]
+            if nb == 1 or len(rows) < 2
+            else _batches(rng, rows, min(nb, len(rows)))
+        )
+        ref_state = sm.ResolveState()
+        vec_resolved, vec_buffered = None, []
+        for batch in batches:
+            pdf = pd.DataFrame(batch, columns=cols)
+            srt = sorted(batch, key=lambda e: (e["timestamp"], e["position"]))
+            ref_state, ref_out = sm.resolve_step(
+                ref_state, [dict(e) for e in srt]
+            )
+            vec_resolved, vec_buffered, vec_pdf = sp._resolve_batch(
+                vec_resolved, vec_buffered, pdf
+            )
+            got = sp._records(vec_pdf)
+            assert got == ref_out, f"trial {trial}: emitted rows diverge"
+        assert vec_resolved == ref_state.resolved_bpmn
+        assert vec_buffered == ref_state.buffered
+
+
+def test_rekey_batch_matches_rekey_step() -> None:
+    import random
+
+    import pandas as pd
+
+    from ph_ee_nats_importer_rdbms_spark.streaming import pipeline as sp
+    from ph_ee_nats_importer_rdbms_spark.streaming import state as sm
+
+    rng = random.Random(4113)
+    fast_hits = 0
+    for trial in range(40):
+        cols, rows = _random_flat_events(rng, rng.randint(1, 30), True)
+        nb = rng.randint(1, 4)
+        batches = (
+            [rows]
+            if nb == 1 or len(rows) < 2
+            else _batches(rng, rows, min(nb, len(rows)))
+        )
+        ref_state = sm.RekeyState()
+        vec_parent = None
+        for batch in batches:
+            pdf = pd.DataFrame(batch, columns=cols)
+            srt = sorted(batch, key=lambda e: (e["timestamp"], e["position"]))
+            ref_state, ref_out = sm.rekey_step(
+                ref_state, [dict(e) for e in srt]
+            )
+            if vec_parent is None:
+                fast_hits += 1  # counts candidates; the path itself decides
+            vec_parent, vec_pdf = sp._rekey_batch(vec_parent, pdf)
+            got = sp._records(vec_pdf)
+            key = lambda e: (e["timestamp"], e["position"])  # noqa: E731
+            assert sorted(got, key=key) == sorted(ref_out, key=key), (
+                f"trial {trial}: emitted rows diverge"
+            )
+        assert vec_parent == ref_state.parent_key
+    assert fast_hits > 0
+
+
+# ---------------------------------------------------------------------------
 # End-to-end multi-hop streaming vs batch pipeline
 # ---------------------------------------------------------------------------
 
@@ -171,11 +325,25 @@ def _corpus() -> list[dict]:
     and all three entity types."""
     ev = []
     # transfer with call-activity child (parent 100, child 101)
+    child_start = process_event(
+        101, "ELEMENT_ACTIVATING", 3_000, parent=100, definition=5002
+    )
+    pos = child_start["position"]
     ev += [
         process_event(100, "ELEMENT_ACTIVATING", 1_000),
         variable_event(100, "transactionId", '"tx-A"', 2_000),
         variable_event(100, "channelRequest", escaped_json(CHANNEL_REQUEST), 2_500),
-        process_event(101, "ELEMENT_ACTIVATING", 3_000, parent=100, definition=5002),
+        child_start,
+        # D1 across the live link: parent and child both write amount at
+        # ts 3000. The child's record (partition 2) arrives first; the
+        # parent's (partition 1) arrives later but sorts first by
+        # position. D1 keys on each variable's own instance, so both rows
+        # are kept whatever the arrival order.
+        variable_event(
+            101, "amount", '"20.00"', 3_000, definition=5002,
+            partition_id=2, position=pos + 2,
+        ),
+        variable_event(100, "amount", '"10.00"', 3_000, position=pos + 1),
         variable_event(101, "amount", '"77.70"', 3_500, definition=5002),
         process_event(101, "ELEMENT_COMPLETED", 4_000, parent=100, definition=5002),
         job_event(100, "svc-a", "T1", "CREATED", 4_200),
@@ -235,14 +403,15 @@ def _three_drains(spark, root) -> str:
     the corpus is cut into contiguous, time-ordered chunks so that state
     crosses both boundaries: the C4 child activates in drop 0 and
     completes in drop 1, instance 100 starts in drop 0 and completes in
-    drop 1, and the C5 gapped row (drop 1) waits for its carrier
-    (drop 2)."""
+    drop 1, the child's amount at ts 3000 (drop 0) precedes the parent's
+    same-timestamp amount (drop 1), and the C5 gapped row (drop 1) waits
+    for its carrier (drop 2)."""
     from ph_ee_nats_importer_rdbms_spark.streaming import pipeline as sp
 
     corpus = _corpus()
     src = root / "events"
     src.mkdir()
-    for i, chunk in enumerate([corpus[0:4], corpus[4:10], corpus[10:]]):
+    for i, chunk in enumerate([corpus[0:5], corpus[5:12], corpus[12:]]):
         (src / f"drop_{i}.jsonl").write_text(
             "\n".join(_raw_json(e) for e in chunk) + "\n"
         )
@@ -348,10 +517,11 @@ def test_resolve_partition_tie_breaks_on_partition_id(spark):
     """Two truthy events for one definition key share (timestamp,
     position) on partitions 2 and 1 and arrive in that order; the
     partition-2 id sorts after the partition-1 id. The streaming resolve
-    batch and the native ``resolve_events`` both resolve the key to the
-    partition-1 id."""
+    batch and the native ``classify.resolve_events`` both resolve the key
+    to the partition-1 id."""
     import pandas as pd
 
+    from ph_ee_nats_importer_rdbms_spark.operators.classify import resolve_events
     from ph_ee_nats_importer_rdbms_spark.streaming import batch_replay as br
     from ph_ee_nats_importer_rdbms_spark.streaming import pipeline as sp
 
@@ -388,7 +558,7 @@ def test_resolve_partition_tie_breaks_on_partition_id(spark):
     df = spark.createDataFrame(
         [tuple(r[c] for c in cols) for r in rows], br.FLAT_SCHEMA
     )
-    native = br.resolve_events(df).filter("timestamp = 2000").collect()
+    native = resolve_events(df).filter("timestamp = 2000").collect()
     assert [r["bpmn_process_id"] for r in native] == ["flow-p1"]
 
 
@@ -481,33 +651,90 @@ def test_multi_hop_restart_resumes_state(spark, tmp_path):
     assert w["status"] == t[100]["status"]
 
 
+def _crossing_cuts(flat: list[dict], fractions=(1 / 3, 2 / 3)) -> list[int]:
+    """For each fraction, the first cut index at or after it across which
+    BOTH a live call-activity link (the child's activation before the cut,
+    its re-keyed completion after it) and an in-flight entity (a process
+    activation before the cut, its completion after it) carry state.
+    ``flat`` is in arrival order; a cut ``i`` splits ``flat[:i]`` from
+    ``flat[i:]``."""
+    n = len(flat)
+    link_at: dict = {}
+    start_at: dict = {}
+    link_cover = [0] * (n + 2)
+    entity_cover = [0] * (n + 2)
+
+    def cover(arr, a, b):  # cuts a+1 .. b see the span (a, b]
+        arr[a + 1] += 1
+        arr[b + 1] -= 1
+
+    for i, e in enumerate(flat):
+        if (e["value_type"], e["bpmn_element_type"]) != ("PROCESS_INSTANCE", "PROCESS"):
+            continue
+        k = e["process_instance_key"]
+        if e["intent"] == "ELEMENT_ACTIVATING":
+            start_at.setdefault(k, i)
+            if (e["parent_process_instance_key"] or 0) > 0:
+                link_at.setdefault(k, i)
+        elif e["intent"] == "ELEMENT_COMPLETED":
+            if k in link_at:
+                cover(link_cover, link_at.pop(k), i)
+            if k in start_at:
+                cover(entity_cover, start_at.pop(k), i)
+    cuts = []
+    live_links = live_entities = 0
+    wanted = iter(sorted(int(f * n) for f in fractions))
+    target = next(wanted)
+    for i in range(n + 1):
+        live_links += link_cover[i]
+        live_entities += entity_cover[i]
+        if i >= target and live_links and live_entities:
+            cuts.append(i)
+            target = next(wanted, None)
+            if target is None:
+                break
+    return cuts
+
+
 @pytest.mark.slow
 def test_multi_hop_matches_batch_at_corpus_scale(spark, tmp_path):
     """The fixture-corpus parity test, scaled to the sf0.001 synthetic
     corpus (~11k events, ~3.7k instances): every D1/D2/C2-C5 path at
     corpus density. The time-ordered corpus is cut into three drops, and
     each drop is drained before the next lands (one ``run_multi_hop`` per
-    drop, as in ``_three_drains``), so every hop runs three micro-batches
-    and keyed state carries thousands of in-flight instances across
-    them. The batch fixed point is the specification."""
+    drop, as in ``_three_drains``), so every hop runs three micro-batches.
+    Each cut is placed (and asserted) where a live call-activity link and
+    an in-flight entity cross it, so the hop-2 and hop-3 state carried
+    across drains decides the output. The batch importer is the
+    specification for the business fields, and the replay build
+    (``batch_replay.replay_tables``) for all five typed tables, row for
+    row."""
+    from ph_ee_nats_importer_rdbms_spark.operators.classify import parse_envelope
     from ph_ee_nats_importer_rdbms_spark.operators.pipeline import (
         run_import_pipeline,
     )
     from ph_ee_nats_importer_rdbms_spark.plans.queries import zeebe_events_df
+    from ph_ee_nats_importer_rdbms_spark.streaming import batch_replay as br
     from ph_ee_nats_importer_rdbms_spark.streaming import pipeline as sp
+    from ph_ee_nats_importer_rdbms_spark.streaming.replay import (
+        _ENTITY_SCHEMAS,
+        TABLES,
+    )
     import pyspark.sql.functions as F
 
     corpus_df = zeebe_events_df(spark, "/root/testdata/sf0.001")
     flat = [r.asDict() for r in corpus_df.collect()]
     flat.sort(key=lambda e: (e["timestamp"], e["position"]))
 
+    cuts = _crossing_cuts(flat)
+    assert len(cuts) == 2 and cuts[1] < len(flat), cuts
+    assert cuts[0] < len(flat) // 2 < cuts[1], cuts
+
     src = tmp_path / "cs_events"
     src.mkdir()
-    third = (len(flat) + 2) // 3
-    for i in range(3):
-        chunk = flat[i * third : (i + 1) * third]
+    for i, (a, b) in enumerate(zip([0] + cuts, cuts + [len(flat)])):
         (src / f"drop_{i}.jsonl").write_text(
-            "\n".join(_raw_json(e) for e in chunk) + "\n"
+            "\n".join(_raw_json(e) for e in flat[a:b]) + "\n"
         )
         paths = sp.run_multi_hop(
             spark,
@@ -573,6 +800,18 @@ def test_multi_hop_matches_batch_at_corpus_scale(spark, tmp_path):
     assert batch_snap(want["batches"], b_fields) == stream_snap(
         got["batches"].collect(), b_fields
     )
+
+    # all five typed tables, row for row, against the replay build over
+    # the same envelopes
+    replayed = br.replay_tables(spark, parse_envelope(spark.read.text(str(src))))
+    for name, schema in _ENTITY_SCHEMAS.items():
+        got[name] = br._typed_entity(got[name], schema)
+    for name in TABLES:
+        cols = replayed[name].columns
+        w = sorted(map(tuple, replayed[name].collect()), key=repr)
+        g = sorted(map(tuple, got[name].select(*cols).collect()), key=repr)
+        assert w, f"{name}: empty on both sides proves nothing"
+        assert g == w, f"{name} diverges from the replay build"
 
 
 def test_run_deployment_requires_a_source(spark, tmp_path):
