@@ -12,8 +12,8 @@ Reference behavior being reproduced:
   plain ``INSERT``s. They are AT-LEAST-ONCE, not exactly-once: each
   (tenant, executor call) commits on its own and ``epoch_id`` is not
   used, so a micro-batch replayed after a partial sink commit inserts
-  the already-committed log rows again. ROADMAP item 1's sink-fault
-  test is the open work that pins and fixes this.
+  the already-committed log rows again. ROADMAP direction 3 is the
+  open work that pins and fixes this.
 - S6 batched writes, size 1000 (EclipselinkJpaConfiguration.java:49-50).
 - S7 tenant routing: tenant -> JDBC url resolved through the master
   ``tenant_server_connections`` table (DataSourcePerTenantService.java:64-128,

@@ -1,5 +1,6 @@
-"""Native (DataFrame) replay of the three stateful hops over a BOUNDED
-corpus — the batch form of streaming/pipeline.py's topology.
+"""Native (DataFrame) replay of the three stateful stages (C5, C4,
+entity) over a BOUNDED corpus — the batch form of streaming/pipeline.py's
+topology, whose hop A runs the first two in one keyed operator.
 
 The availableNow streaming replay processes each key's events in
 (timestamp, position) order with state carried across micro-batches.
@@ -262,8 +263,8 @@ def _fold_sorted_groups(
 # ---------------------------------------------------------------------------
 
 def rekey_events(routed: DataFrame) -> DataFrame:
-    """Batch form of :func:`pipeline.rekey_stage`: instances that never
-    register a call-activity link (not a child in
+    """Batch form of hop A's C4 step (:func:`pipeline._rekey_linked`):
+    instances that never register a call-activity link (not a child in
     :func:`lifecycle.parent_links`) take a pure projection (the bulk);
     only the linked slice replays :func:`state.rekey_step` in Python.
 

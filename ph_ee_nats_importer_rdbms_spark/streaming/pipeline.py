@@ -1,14 +1,16 @@
-"""Structured Streaming wiring: stateful stage wrappers + multi-hop
-topology (see package docstring for the stage map).
+"""Structured Streaming wiring: the stateful stage wrappers and the
+two-query topology (the package docstring has the stage map).
 
-Each stage keys on a different column, and chaining arbitrary stateful
-operators inside one streaming query is not supported — so the pipeline is
-a standard multi-hop (bronze→silver→gold) DAG: every hop is its own
-checkpointed streaming query writing parquet, giving per-hop exactly-once
-and independent scaling. Every hop runs with an ``availableNow`` trigger:
-one call drains what has arrived since the last one, then stops. A
-deployment is a loop of :func:`run_deployment` drains; each resumes from
-the hops' checkpoints.
+A drain runs two checkpointed ``availableNow`` queries, one stateful
+operator each. Hop A (:func:`resolve_rekey_stage`) resolves C5 and
+re-keys C4 per definition key, routes the rows (F5/F6) and writes them
+to ``resolved/`` (``REKEYED_SCHEMA``). Hop B (:func:`entity_stage`)
+folds the entities per effective key into a ``foreachBatch`` body that
+writes ``changes/`` and then runs the sink, if any: a stateful operator
+feeding an idempotent ``foreachBatch`` sink keeps exactly-once (SIGMOD
+2018). Each query costs about a second per trigger whatever its rows,
+so the query count sets a wave's floor. A deployment is a loop of
+:func:`run_deployment` drains, each resuming from the checkpoints.
 
 Scale notes: state lives in the Spark state store (RocksDB provider on a
 real cluster — :func:`configure_state_store`), hash partitioned by the
@@ -25,6 +27,7 @@ import os
 import time
 from typing import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -41,14 +44,11 @@ from ph_ee_nats_importer_rdbms_spark.streaming import state as sm
 
 # Hop schemas and the per-group row helpers define replay SEMANTICS, so
 # they live in batch_replay.py (fingerprinted by the stream staging
-# domains) and are re-exported here for the wrappers and their callers —
-# this module is wrapper/engine code whose edits must not invalidate
-# staged replay artifacts (VERDICT r13 task #3).
+# domains); this wrapper module's edits must not invalidate them.
 from ph_ee_nats_importer_rdbms_spark.streaming.batch_replay import (  # noqa: F401
     CHANGES_SCHEMA,
     FLAT_SCHEMA,
     REKEYED_SCHEMA,
-    ROUTED_SCHEMA,
     _concat,
     _event_sort_key,
     _records,
@@ -70,98 +70,88 @@ def _resolve_batch(
     resolved: str | None, buffered: list[dict], pdf: pd.DataFrame
 ) -> tuple[str | None, list[dict], pd.DataFrame]:
     """One micro-batch of the C5 resolve state machine, vectorized — the
-    column-op replay of :func:`state.resolve_step` (r13, guide §1.2: this
-    hop moves EVERY envelope through Python; the dict-per-event path cost
-    ~44s per sf0.1 replay build). The per-key semantics are narrow enough
-    for column ops: ``resolved`` is SET-ONCE (the first truthy bpmn in
-    stream order), every falsy-bpmn event is emitted with the resolved
-    value if known by its time (buffered rows flush in arrival order the
-    moment it becomes known), and with no resolution the whole batch
-    buffers. Output rows, order, and state are identical to
-    resolve_step's — pinned against randomized multi-batch replays in
-    tests/test_streaming.py."""
-    cols = _columns(FLAT_SCHEMA)
-    # the partition id breaks a (timestamp, position) tie across Zeebe
-    # partitions, like classify.definition_dim's first-carrier min
-    pdf = pdf.sort_values(
-        ["timestamp", "position", "partition_id"],
-        kind="mergesort",
-        ignore_index=True,
+    column-op replay of :func:`state.resolve_step`. ``resolved`` is
+    SET-ONCE (the first truthy bpmn in stream order), every falsy-bpmn
+    event takes it once known (buffered rows flush first, in arrival
+    order), and with no resolution the whole batch buffers."""
+    # the partition id breaks a (timestamp, position) tie, like
+    # classify.definition_dim; a stable lexsort (NaN last, like
+    # sort_values) of a mostly sorted group: pandas' costs ~1 ms/group
+    order = np.lexsort(
+        [pd.to_numeric(pdf[c]).to_numpy() for c in ("partition_id", "position", "timestamp")]
     )
-    bp = pdf["bpmn_process_id"]
-    known = bp.notna() & (bp != "")
-    if resolved is None and bool(known.any()):
-        resolved = bp.iat[int(known.to_numpy().argmax())]
-    if resolved is not None:
-        if not bool(known.all()):
-            pdf["bpmn_process_id"] = bp.where(known, resolved)
-        out = pdf[cols]
-        if buffered:
-            for r in buffered:
-                r["bpmn_process_id"] = resolved
-            out = pd.concat(
-                [pd.DataFrame(buffered, columns=cols), out],
-                ignore_index=True,
-            )
-            buffered = []
-    else:
-        buffered = buffered + _records(pdf)
-        out = pd.DataFrame([], columns=cols)
-    return resolved, buffered, out
+    if (order != np.arange(len(order))).any():
+        pdf = pdf.take(order)
+    bp = pdf["bpmn_process_id"].to_numpy(dtype=object)
+    known = np.fromiter((isinstance(v, str) and v != "" for v in bp), bool, len(bp))
+    if resolved is None and known.any():
+        resolved = bp[known.argmax()]
+    if resolved is None:
+        return None, buffered + _records(pdf), pdf.iloc[:0]
+    if not known.all():
+        pdf = pdf.assign(bpmn_process_id=np.where(known, bp, resolved))
+    if buffered:
+        for r in buffered:
+            r["bpmn_process_id"] = resolved
+        pdf = pd.concat([pd.DataFrame(buffered, columns=pdf.columns), pdf], ignore_index=True)
+    return resolved, [], pdf
 
 
-def _rekey_batch(
-    parent0: int | None, pdf: pd.DataFrame
-) -> tuple[int | None, pd.DataFrame]:
-    """One micro-batch of the C4 re-key state machine. Fast path (r13,
-    guide §1.2): with no live call-activity link, an instance's events
-    only ever re-key when one of THIS batch's events registers a link
-    (PROCESS ELEMENT_ACTIVATING with parent > 0 — rekey_step's only
-    state write). Absent that, every event maps to itself:
-    effective_key = own instance key, child_start = false, state stays
-    empty — pure column ops, no per-event dict replay, no sort (rows
-    are independent). Only instances that ARE call-activity children
-    take the dict path. Parity pinned against randomized replays in
-    tests/test_streaming.py."""
-    cols = _columns(REKEYED_SCHEMA)
-    if parent0 is None:
-        # cheapest discriminator first: a link needs a POSITIVE parent key
-        # somewhere in the batch — most instances are not call-activity
-        # children, so one numpy compare settles the common case without
-        # building the 3-way string mask
-        ppik = pdf["parent_process_instance_key"]
-        arr = ppik.to_numpy()
-        if arr.dtype == object:
-            arr = pd.to_numeric(ppik, errors="coerce").to_numpy()
-        pos = arr > 0
-        links_possible = bool(pos.any())
-        if links_possible:
-            links = (
-                (pdf["value_type"] == "PROCESS_INSTANCE")
-                & (pdf["bpmn_element_type"] == "PROCESS")
-                & (pdf["intent"] == "ELEMENT_ACTIVATING")
-                & pos
-            )
-            links_possible = bool(links.any())
-        if not links_possible:
-            if list(pdf.columns) == cols[:-2]:
-                # input arrives in ROUTED order and REKEYED appends the
-                # two new columns at the end: one shallow copy instead of
-                # assign+reorder (2.5x on the ~1ms per-group fast path)
-                out = pdf.copy(deep=False)
-                out["effective_key"] = out["process_instance_key"]
-                out["child_start"] = False
-            else:
-                out = pdf.assign(
-                    effective_key=pdf["process_instance_key"],
-                    child_start=False,
-                )[cols]
-            return None, out
-    records = _records(pdf)
+#: hop A's operator rows: flat events + the C4 columns (route adds F5/F6)
+_KEYED_SCHEMA = StructType(FLAT_SCHEMA.fields + REKEYED_SCHEMA.fields[-2:])
+
+
+def _instance(k) -> int | None:
+    return None if pd.isna(k) else int(k)
+
+
+def _rekey_linked(links: dict, pdf: pd.DataFrame) -> tuple[dict, pd.DataFrame]:
+    """C4 over one definition's resolved rows. ``links`` holds the
+    definition's live call-activity links ``{child_key: parent_key}``: a
+    child's PROCESS ELEMENT_ACTIVATING with parent > 0 adds its link, its
+    ELEMENT_COMPLETED pops it (:func:`state.rekey_step`). The other
+    instances keep the unlinked C4 values their rows arrive with; only
+    the linked ones replay rekey_step, each in :func:`_event_sort_key`
+    order."""
+    inst = pdf["process_instance_key"]
+    maybe = pd.to_numeric(pdf["parent_process_instance_key"]).to_numpy() > 0
+    if not links and not maybe.any():
+        return links, pdf
+    registers = (
+        maybe
+        & (pdf["value_type"] == "PROCESS_INSTANCE").to_numpy()
+        & (pdf["bpmn_element_type"] == "PROCESS").to_numpy()
+        & (pdf["intent"] == "ELEMENT_ACTIVATING").to_numpy()
+    )
+    linked = set(links) | {_instance(k) for k in inst[registers]}
+    mask = inst.isin([k for k in linked if k is not None]).to_numpy()
+    if None in linked:
+        mask |= inst.isna().to_numpy()
+    records = _records(pdf[mask])
     records.sort(key=_event_sort_key)
-    st = sm.RekeyState(parent_key=parent0)
-    st, out = sm.rekey_step(st, records)
-    return st.parent_key, pd.DataFrame(out, columns=cols)
+    by_instance: dict = {}
+    for r in records:
+        by_instance.setdefault(_instance(r["process_instance_key"]), []).append(r)
+    rows: list[dict] = []
+    for k, events in by_instance.items():
+        st, emitted = sm.rekey_step(sm.RekeyState(parent_key=links.pop(k, None)), events)
+        if st.parent_key is not None:
+            links[k] = int(st.parent_key)
+        rows += emitted
+    return links, pd.concat([pdf[~mask], pd.DataFrame(rows, columns=pdf.columns)], ignore_index=True)
+
+
+def _resolve_rekey_batch(blob: str | None, pdf: pd.DataFrame) -> tuple[pd.DataFrame, str]:
+    """Hop A's step for one definition key: :func:`_resolve_batch`, then
+    :func:`_rekey_linked` over the rows it emits. The state blob is
+    ``{resolved_bpmn, buffered, links}``, the links as ``[child, parent]``
+    pairs, which keeps a null child key."""
+    d = json.loads(blob) if blob else {"resolved_bpmn": None, "buffered": [], "links": []}
+    resolved, buffered, out = _resolve_batch(d["resolved_bpmn"], d["buffered"], pdf)
+    links, out = _rekey_linked(dict(d["links"]), out)
+    return out, json.dumps(
+        {"resolved_bpmn": resolved, "buffered": buffered, "links": list(links.items())}
+    )
 
 
 def _keyed_stage(
@@ -170,7 +160,7 @@ def _keyed_stage(
     schema: StructType,
     step: Callable[[tuple, str | None, pd.DataFrame], tuple[pd.DataFrame, str]],
 ) -> DataFrame:
-    """One stateful hop: ``applyInPandasWithState`` grouped by ``key``,
+    """One stateful operator: ``applyInPandasWithState`` grouped by ``key``,
     holding one JSON blob per key. ``step(key, blob, pdf)`` gets the
     key's stored blob (None for a new key) and its micro-batch rows, and
     returns the rows to emit and the blob to store."""
@@ -187,32 +177,28 @@ def _keyed_stage(
     )
 
 
-def resolve_stage(events: DataFrame) -> DataFrame:
-    """C5: resolve empty bpmnProcessIds through per-definition-key state
-    (never evicted, like the reference's TempDocumentStore.java:16-17)."""
+def resolve_rekey_stage(events: DataFrame) -> DataFrame:
+    """Hop A's operator: C5 and C4 in one keyed pass, grouped by
+    process_definition_key. One key's state holds the C5 resolution with
+    its buffered rows (never evicted, like the reference's
+    TempDocumentStore.java:16-17) and the definition's live links. The
+    rows enter with the unlinked C4 values (effective_key = own key,
+    child_start = false), which a definition without live links keeps.
 
-    def step(_key, blob, pdf):
-        d = json.loads(blob) if blob else {"resolved_bpmn": None, "buffered": []}
-        resolved, buffered, out = _resolve_batch(
-            d["resolved_bpmn"], d["buffered"], pdf
-        )
-        return out, json.dumps({"resolved_bpmn": resolved, "buffered": buffered})
-
+    Contract: a child's rows carry its definition key, as Zeebe writes
+    it on process-instance, variable and job records. A child row
+    without one falls in the null-definition group, which holds no
+    link, and stays on the child's own key where the batch replay
+    re-keys it to the parent (pinned by test_streaming.py's
+    test_linked_child_row_without_definition_key_stays_on_the_child)."""
     return _keyed_stage(
-        resolve_input(events), "process_definition_key", FLAT_SCHEMA, step
+        resolve_input(events)
+        .withColumn("effective_key", F.col("process_instance_key"))
+        .withColumn("child_start", F.lit(False)),
+        "process_definition_key",
+        _KEYED_SCHEMA,
+        lambda _key, blob, pdf: _resolve_rekey_batch(blob, pdf),
     )
-
-
-def rekey_stage(routed: DataFrame) -> DataFrame:
-    """C4: add effective_key via per-instance call-activity link state."""
-
-    def step(_key, blob, pdf):
-        parent, out = _rekey_batch(
-            json.loads(blob)["parent_key"] if blob else None, pdf
-        )
-        return out, json.dumps({"parent_key": parent})
-
-    return _keyed_stage(routed, "process_instance_key", REKEYED_SCHEMA, step)
 
 
 def entity_stage(rekeyed: DataFrame) -> DataFrame:
@@ -265,11 +251,8 @@ def configure_state_store(spark: SparkSession, provider: str = "rocksdb") -> Non
     """Select the state-store backend for subsequently started queries.
 
     ``rocksdb`` is the at-scale choice: state lives off-heap/on-disk per
-    executor instead of in the JVM heap (the reference's unbounded in-heap
-    maps are exactly what this replaces), and changelog checkpointing
-    uploads per-batch deltas rather than full snapshots, so checkpoint cost
-    is O(changed keys) — the difference between a 10-minute and a
-    sub-second commit once entity state reaches 100 TB-scale cardinality.
+    executor instead of in the JVM heap, and changelog checkpointing
+    uploads per-batch deltas, so checkpoint cost is O(changed keys).
     ``hdfs`` (Spark's default in-memory provider) suits tests/small state.
     """
     if provider == "rocksdb":
@@ -289,9 +272,9 @@ def read_raw_stream(
 ) -> DataFrame:
     """Raw Zeebe envelope JSON strings from a file-drop directory — the
     NATS-bridge ingestion pattern (sources/nats.py writes this layout).
-    ``max_files_per_trigger`` bounds hop 1's micro-batch size. Hops 2 and
-    3 read each drain's hop output as one micro-batch, so only a new
-    drain splits their state across batches."""
+    ``max_files_per_trigger`` bounds hop A's micro-batch size. Hop B
+    reads each drain's ``resolved/`` output as one micro-batch, so only a
+    new drain splits its state across batches."""
     return (
         spark.readStream.format("text")
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -313,6 +296,61 @@ def read_landed_stream(spark: SparkSession, landing_dir: str) -> DataFrame:
     )
 
 
+def _run_hops(
+    spark: SparkSession,
+    events: DataFrame,
+    work_dir: str,
+    registry: DataFrame | None,
+    hop_timings: dict | None,
+    sink: Callable[[DataFrame, int], None] | None,
+) -> dict[str, str]:
+    stale = [n for n in ("ckpt_rekeyed", "ckpt_jdbc") if os.path.exists(f"{work_dir}/{n}")]
+    if stale:
+        raise ValueError(
+            f"{work_dir} holds checkpoints of the four-query topology "
+            f"({', '.join(stale)}): its hop state and change log do not "
+            "carry over to the two-query one. Drain into a new work_dir."
+        )
+    paths = {n: os.path.join(work_dir, n) for n in ("resolved", "changes")}
+    os.makedirs(paths["changes"], exist_ok=True)
+
+    def drain(writer, name: str, hop: str) -> None:
+        t0 = time.perf_counter()
+        (
+            writer.option("checkpointLocation", os.path.join(work_dir, f"ckpt_{name}"))
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+        if hop_timings is not None:
+            hop_timings[hop] = hop_timings.get(hop, 0.0) + time.perf_counter() - t0
+
+    def write_changes(batch_df: DataFrame, epoch_id: int) -> None:
+        # materialized once, so the entity operator runs (and commits its
+        # state) once per epoch; the epoch's rows appear by an atomic
+        # rename, which a replayed epoch finds done
+        batch = batch_df.localCheckpoint(eager=True)
+        final = os.path.join(paths["changes"], f"batch-{epoch_id:020d}")
+        if not os.path.exists(final):
+            tmp = os.path.join(paths["changes"], "_tmp", os.path.basename(final))
+            batch.write.mode("overwrite").parquet(tmp)
+            os.replace(tmp, final)
+        if sink is not None:
+            sink(batch, epoch_id)
+
+    keyed = route(resolve_rekey_stage(events), registry).select(*_columns(REKEYED_SCHEMA))
+    drain(
+        keyed.writeStream.format("parquet").option("path", paths["resolved"]),
+        "resolved",
+        "resolve_rekey",
+    )
+    rekeyed = spark.readStream.schema(REKEYED_SCHEMA).parquet(paths["resolved"])
+    entities = entity_stage(rekeyed).writeStream.foreachBatch(write_changes)
+    drain(entities, "changes", "entity_sink")
+    return paths
+
+
 def run_multi_hop(
     spark: SparkSession,
     events: DataFrame,
@@ -320,52 +358,20 @@ def run_multi_hop(
     registry: DataFrame | None = None,
     hop_timings: dict | None = None,
 ) -> dict[str, str]:
-    """Run the 3-hop pipeline over the parsed event stream ``events``
-    (:func:`read_raw_stream` or :func:`read_landed_stream`); returns
-    output paths.
+    """Drain the two-query topology over the parsed event stream
+    ``events`` (:func:`read_raw_stream` or :func:`read_landed_stream`);
+    returns output paths. Each hop is checkpointed and restart-safe:
 
-    Hops (each checkpointed, restart-safe, exactly-once into parquet):
-      resolved/  flat events after F1-F3 + C5
-      rekeyed/   + routing (F5/F6) + effective_key (C4)
-      changes/   typed change rows (variable/task inserts, entity upserts)
+      resolved/  hop A: F1-F3 + C5 + C4 (effective_key) + routing (F5/F6),
+                 in REKEYED_SCHEMA
+      changes/   hop B: typed change rows (variable/task inserts, entity
+                 upserts), one ``batch-<epoch>/`` directory per epoch
 
-    The hops run on the session's state-store provider
-    (:func:`configure_state_store` selects RocksDB).
-
+    A ``work_dir`` holding the older four-query checkpoints is refused.
     ``hop_timings`` (optional dict) accumulates wall seconds per hop
-    (``resolve``/``rekey``/``entity``, += so multi-wave callers fold) —
-    the ingest throughput bench's per-hop attribution
-    (tools/bench_ingest.py)."""
-    paths = {
-        n: os.path.join(work_dir, n) for n in ("resolved", "rekeyed", "changes")
-    }
-
-    def drain(df: DataFrame, name: str, hop: str) -> None:
-        t0 = time.perf_counter()
-        (
-            df.writeStream.format("parquet")
-            .option("path", paths[name])
-            .option("checkpointLocation", os.path.join(work_dir, f"ckpt_{name}"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        if hop_timings is not None:
-            hop_timings[hop] = hop_timings.get(hop, 0.0) + (
-                time.perf_counter() - t0
-            )
-
-    drain(resolve_stage(events), "resolved", "resolve")
-    resolved = spark.readStream.schema(FLAT_SCHEMA).parquet(paths["resolved"])
-    drain(
-        rekey_stage(route(resolved, registry)),
-        "rekeyed",
-        "rekey",
-    )
-    rekeyed = spark.readStream.schema(REKEYED_SCHEMA).parquet(paths["rekeyed"])
-    drain(entity_stage(rekeyed), "changes", "entity")
-    return paths
+    (``resolve_rekey``/``entity_sink``, += so multi-wave callers fold)
+    for tools/bench_ingest.py."""
+    return _run_hops(spark, events, work_dir, registry, hop_timings, None)
 
 
 def materialize_tables(spark: SparkSession, changes_path: str) -> dict[str, DataFrame]:
@@ -373,8 +379,13 @@ def materialize_tables(spark: SparkSession, changes_path: str) -> dict[str, Data
     the latest snapshot per instance wins; variables/tasks are appends).
     In production this folding runs inside foreachBatch straight into JDBC
     (sinks/jdbc.py); reading the parquet change log gives the same tables
-    for verification."""
-    ch = spark.read.schema(CHANGES_SCHEMA).parquet(changes_path)
+    for verification. The log is one directory per epoch, read
+    recursively; the hidden ``_tmp/`` is skipped."""
+    ch = (
+        spark.read.schema(CHANGES_SCHEMA)
+        .option("recursiveFileLookup", "true")
+        .parquet(changes_path)
+    )
     # snapshots carry a per-key micro-batch sequence (_seq); the upsert fold
     # is max_by(_seq) per key — exactly what a MERGE sink applies per batch.
     ent = ch.filter(F.col("kind").isin("transfer", "transaction_request", "batch"))
@@ -418,14 +429,14 @@ def run_deployment(
     reference runs instead of the Spring Boot importer:
 
         NATS JetStream -> landing (sources/nats_source.land) -> file
-        source, or a file-drop bridge dir -> resolve -> route/rekey ->
-        entity state machine -> change log -> per-tenant JDBC
-        MERGE/append (sinks/jdbc.changes_foreach_batch).
+        source, or a file-drop bridge dir -> hop A (resolve + rekey +
+        route) -> hop B (entity state machine -> change log -> per-tenant
+        JDBC MERGE/append, sinks/jdbc.changes_foreach_batch).
 
-    One call is one drain: with ``nats_options`` it first lands the
-    stream's new sequences into ``<work_dir>/landing`` on the driver, then
-    every hop and the sink run to the end of their input and stop. A
-    deployment calls this in a loop.
+    One call is one drain of two streaming queries: with
+    ``nats_options`` it first lands the stream's new sequences into
+    ``<work_dir>/landing`` on the driver, then both hops run to the end
+    of their input and stop. A deployment calls this in a loop.
 
     ``resolve_url`` maps tenant -> JDBC url (sinks/jdbc.tenant_url_resolver
     over the master tenant_server_connections table); ``executor`` runs
@@ -436,14 +447,12 @@ def run_deployment(
     never traverse the driver — which requires a picklable executor;
     pass ``distributed=False`` for the driver-collect topology (small
     deployments, py4j ``jvm_executor``).
-    The landing files and every hop and the sink query are checkpointed
-    under ``work_dir`` — a restart resumes from the checkpoints, and a
-    replayed micro-batch re-runs the idempotent MERGE, so the upserted
-    tables are exactly-once. The ph_tasks / ph_variables append logs are
-    plain INSERTs and only at-least-once: a micro-batch replayed after a
-    partial sink commit inserts its committed log rows again (see
-    sinks/jdbc.py; ROADMAP item 1's sink-fault test). The state-store
-    provider is the session's (:func:`configure_state_store`)."""
+    The landing files and both hops are checkpointed under ``work_dir``;
+    a replayed epoch re-runs the idempotent MERGE, so the upserted tables
+    are exactly-once. The ph_tasks / ph_variables append logs are plain
+    INSERTs and only at-least-once: an epoch replayed after a partial
+    sink commit inserts its committed log rows again (sinks/jdbc.py;
+    ROADMAP direction 3)."""
     from ph_ee_nats_importer_rdbms_spark.sinks.jdbc import changes_foreach_batch
 
     if source_dir is None and nats_options is None:
@@ -457,19 +466,7 @@ def run_deployment(
         events = read_landed_stream(spark, landing)
     else:
         events = read_raw_stream(spark, source_dir)
-    paths = run_multi_hop(spark, events, work_dir, registry=registry)
-
-    changes = spark.readStream.schema(CHANGES_SCHEMA).parquet(paths["changes"])
-    (
-        changes.writeStream.foreachBatch(
-            changes_foreach_batch(
-                resolve_url, executor, distributed=distributed, dialect=dialect
-            )
-        )
-        .option("checkpointLocation", os.path.join(work_dir, "ckpt_jdbc"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    sink = changes_foreach_batch(
+        resolve_url, executor, distributed=distributed, dialect=dialect
     )
-    return paths
+    return _run_hops(spark, events, work_dir, registry, None, sink)

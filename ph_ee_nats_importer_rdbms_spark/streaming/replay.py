@@ -15,7 +15,7 @@ envelope round trip for a real publish over the in-repo NATS protocol
 double and the deployment's landing (sources/nats_source.land), then
 runs the same fixed point.
 
-The 3-hop Structured Streaming topology (streaming/pipeline.run_multi_hop)
+The two-query Structured Streaming topology (streaming/pipeline.run_multi_hop)
 is NOT on the staging path. Its agreement with the native fixed point is
 pinned by the ``slow`` A/B tests in tests/test_batch_replay.py: per-hop
 randomized multi-batch corpora, and :func:`_build_streaming` (ordered
@@ -53,7 +53,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from ph_ee_nats_importer_rdbms_spark import schemas
 from ph_ee_nats_importer_rdbms_spark.plans import staging
 
-#: micro-batch count for hop 1 — enough to force cross-batch keyed-state
+#: micro-batch count for hop A — enough to force cross-batch keyed-state
 #: handoff at corpus scale, small enough that per-trigger overhead stays
 #: a staging-time constant.
 REPLAY_CHUNKS = 4
@@ -154,7 +154,7 @@ def _write_tables(tables: dict[str, DataFrame], out_root: str) -> None:
 def _build(spark: SparkSession, sf_dir: str, root: str) -> None:
     """One-time staging build, NATIVE batch form (r14, guide §4/§2.4):
     flat corpus -> raw envelope JSON -> parse_envelope -> the batch fixed
-    point of the three hops (streaming/batch_replay.py: native C5 fill,
+    point of the streaming stages (streaming/batch_replay.py: native C5 fill,
     native no-link rekey with Python only on the linked slice, native
     D1/D2 insert dedup with Python only on the entity-snapshot slice) ->
     typed tables under ``root/tables/``.
@@ -176,11 +176,11 @@ def _build(spark: SparkSession, sf_dir: str, root: str) -> None:
 
 def _build_streaming(spark: SparkSession, sf_dir: str, root: str) -> None:
     """The pre-r14 staging build: ordered envelope chunks -> the real
-    3-hop Structured Streaming topology -> change-log fold -> typed
+    two-query Structured Streaming topology -> change-log fold -> typed
     tables. Chunk k is dropped into the source directory and drained
     before chunk k+1 lands, one ``run_multi_hop`` drain per chunk, so
-    EVERY hop runs one micro-batch per chunk and the keyed state of all
-    three (C5 buffers, C4 links, entity folds) hands off across
+    EVERY hop runs one micro-batch per chunk and the keyed state of
+    both (C5 buffers and C4 links, entity folds) hands off across
     micro-batches. Kept as the STREAMING ORACLE for the batch build
     (tests/test_batch_replay.py A/Bs the two table stores
     hash-identical); not on the staging path — the native batch form
@@ -311,7 +311,7 @@ def streaming_table_wire(
     """A business table built from envelopes ingested through the NATS
     wire transport and the landing (no file bridge anywhere on the event
     path — pinned by test), then folded by ``batch_replay``'s native
-    batch fixed point of the three hops (see :func:`_build_wire`; the
+    batch fixed point of the streaming stages (see :func:`_build_wire`; the
     streaming topology does not run here). Staged once per (dataset, code) fingerprint in its own
     ``streamwire`` domain, which additionally keys the source adapter
     modules: an edit to nats_source.py/nats_wire.py rebuilds this
@@ -332,8 +332,8 @@ def streaming_table_wire(
 
 def streaming_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """A business table as computed by ``batch_replay``'s native batch
-    fixed point of the three streaming hops (see :func:`_build`; the
-    3-hop topology itself runs only in the ``slow`` A/B tests that pin
+    fixed point of the streaming stages (see :func:`_build`; the
+    streaming topology itself runs only in the ``slow`` A/B tests that pin
     parity), staged once per (dataset, streaming-code) fingerprint. Read
     path is a plain committed-parquet scan — warm cost is corpus-shaped
     table I/O, the build itself is ingest (paid once)."""

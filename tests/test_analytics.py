@@ -610,6 +610,49 @@ def test_ivf_codebooks_are_learned_per_corpus(spark):
     assert similarity.IVF_CODEBOOKS["sf0.01"] != similarity.IVF_CODEBOOKS["sf0.1"]
 
 
+def test_check_oracles_labels_scale_bound_oracles(tmp_path):
+    """tools/check_oracles.py finds the oracles that embed artifacts
+    trained on ORACLE_SF_BASE (ANN codebooks, BPE merges, the quality
+    classifier) and labels a mismatch of one on a corpus of another scale
+    as valid only at that scale, not as a failure; on a corpus of its own
+    scale the mismatch still fails, whatever the directory is called,
+    and other entries are unaffected."""
+    import os
+    import sys
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
+    from check_oracles import QUERIES, corpus_scale, label, oracle_scale
+
+    base = similarity.ORACLE_SF_BASE
+    bound = {n for n, (_fn, oracle) in QUERIES.items() if oracle_scale(oracle)}
+    assert {"ann_search_store", "ann_ivf", "ann_pq", "bpe_encode", "quality_classifier"} <= bound
+    assert "vocabulary_store" not in bound
+
+    def corpus(name: str, scale: float) -> str:
+        d = tmp_path / name
+        d.mkdir()
+        rows = round(1_500_000 * scale)
+        pq.write_table(pa.table({"o_orderkey": list(range(rows))}), d / "orders.parquet")
+        return str(d)
+
+    small = corpus_scale(corpus("sf0.01", 0.001))
+    assert small == "sf0.001"
+    at_base = corpus_scale(corpus("renamed_corpus", float(base[2:])))
+    assert at_base == base
+    miss = "74/100 rows differ"
+    line, failed = label("ann_search_store", False, miss, small)
+    assert not failed
+    assert line.startswith(f"ONLY ann_search_store: oracle valid only at {base}, corpus is sf0.001")
+    assert label("ann_search_store", False, miss, at_base) == (
+        f"FAIL ann_search_store: {miss}", True
+    )
+    assert label("vocabulary_store", False, miss, small)[1]
+    assert label("ann_search_store", False, "spark error: boom", small)[1]
+
+
 def test_pq_codebooks_and_codes_contract(spark, sf_dir):
     """PQ artifact shape (m subspaces x k centroids x dsub dims, float32-
     exact — the oracle literal contract) and the staged code table's

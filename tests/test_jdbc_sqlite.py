@@ -12,6 +12,9 @@ checkpointed-restart idempotency are verified on real rows.
 from __future__ import annotations
 
 import json
+import os
+
+import pytest
 
 from tests.test_streaming import _corpus, _raw_json
 
@@ -121,6 +124,80 @@ def test_run_deployment_distributed_sqlite_upserts_real_rows(spark, tmp_path):
     deploy()
     after = ex.fetchall(conns["tn01"], "SELECT count(*) FROM ph_variables")
     assert before == after
+
+
+def test_sink_failure_after_change_log_write_recovers(spark, tmp_path, monkeypatch):
+    """Hop B raises inside its foreachBatch after the epoch's change rows
+    are written and before the MERGE. The restarted drain replays the
+    epoch: the sqlite tables equal a clean run's, and changes/ holds each
+    epoch once."""
+    from ph_ee_nats_importer_rdbms_spark.sinks import jdbc
+    from ph_ee_nats_importer_rdbms_spark.streaming import pipeline as sp
+
+    corpus = _corpus()
+    columns = {  # every column but the autoincrement ids
+        "ph_transfers": "*",
+        "ph_transaction_requests": "*",
+        "ph_batches": "*",
+        "ph_tasks": "workflow_key, workflow_instance_key, timestamp, intent,"
+        " record_type, type, element_id",
+        "ph_variables": "workflow_key, workflow_instance_key, timestamp, name,"
+        " value",
+    }
+
+    def run(name: str, fail_first: bool) -> tuple[dict, str]:
+        root = tmp_path / name
+        root.mkdir()
+        conns, resolve, ex = _setup(root)
+        src = root / "events"
+        src.mkdir()
+        work = str(root / "work")
+
+        def deploy():
+            return sp.run_deployment(
+                spark, work, resolve, ex, source_dir=str(src),
+                distributed=True, dialect="sqlite",
+            )
+
+        (src / "drop_0.jsonl").write_text(
+            "\n".join(_raw_json(e) for e in corpus[:5]) + "\n"
+        )
+        if fail_first:
+            def down(*a, **k):
+                def write(batch_df, epoch_id):
+                    raise RuntimeError("MERGE down")
+                return write
+
+            monkeypatch.setattr(jdbc, "changes_foreach_batch", down)
+            with pytest.raises(Exception, match="MERGE down"):
+                deploy()
+            monkeypatch.undo()
+            assert os.listdir(os.path.join(work, "changes", "_tmp")) == []
+            assert ex.fetchall(conns["tn01"], "SELECT * FROM ph_transfers") == []
+        deploy()
+        (src / "drop_1.jsonl").write_text(
+            "\n".join(_raw_json(e) for e in corpus[5:]) + "\n"
+        )
+        paths = deploy()
+        rows = {
+            (t, table): sorted(ex.fetchall(url, f"SELECT {cols} FROM {table}"), key=repr)
+            for t, url in conns.items()
+            for table, cols in columns.items()
+        }
+        return rows, paths["changes"]
+
+    got, changes = run("faulty", fail_first=True)
+    want, clean_changes = run("clean", fail_first=False)
+    assert got == want
+    assert want[("tn01", "ph_transfers")], "the corpus imports transfers"
+    batches = sorted(n for n in os.listdir(changes) if not n.startswith("_"))
+    assert batches == sorted(
+        n for n in os.listdir(clean_changes) if not n.startswith("_")
+    ) == ["batch-00000000000000000000", "batch-00000000000000000001"]
+    log = sp.materialize_tables(spark, changes)
+    for name in ("variables", "tasks"):
+        rows = log[name].collect()
+        assert rows and len(rows) == len(set(map(tuple, rows))), name
 
 
 def test_sqlite_upsert_sql_dialect():

@@ -257,9 +257,10 @@ def test_full_deployment_over_wire_to_sqlite(spark, tmp_path):
 def test_deployment_hop_failure_after_landing_recovers_exactly_once(
     spark, tmp_path, monkeypatch
 ):
-    """A hop raises after the landing: the next run_deployment lands only
-    the new tail (nothing twice), the hops resume from their checkpoints,
-    and the sqlite rows equal those of a clean run."""
+    """Hop A (resolve + rekey) raises after the landing: the next
+    run_deployment lands only the new tail (nothing twice), the hops
+    resume from their checkpoints, and the sqlite rows equal those of a
+    clean run."""
     from tests.test_streaming import _corpus, _raw_json
     from ph_ee_nats_importer_rdbms_spark.sinks import dbapi, jdbc
     from ph_ee_nats_importer_rdbms_spark.streaming import pipeline as sp
@@ -319,10 +320,10 @@ def test_deployment_hop_failure_after_landing_recovers_exactly_once(
         publish(s, corpus[:5])
 
         def boom(*a, **k):
-            raise RuntimeError("rekey hop down")
+            raise RuntimeError("resolve/rekey hop down")
 
-        monkeypatch.setattr(sp, "rekey_stage", boom)
-        with pytest.raises(RuntimeError, match="rekey hop down"):
+        monkeypatch.setattr(sp, "resolve_rekey_stage", boom)
+        with pytest.raises(RuntimeError, match="resolve/rekey hop down"):
             deploy("faulty_work", faulty)
         monkeypatch.undo()
         landing = tmp_path / "faulty_work" / "landing"

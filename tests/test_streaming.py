@@ -14,6 +14,7 @@ from tests.zeebe_fixtures import (
     CHANNEL_REQUEST,
     escaped_json,
     flat_event,
+    fresh_positions,
     job_event,
     process_event,
     to_df,
@@ -187,28 +188,22 @@ def test_fold_carries_null_key_group_across_arrow_batches():
 
 
 # ---------------------------------------------------------------------------
-# Replay-wrapper parity: the vectorized resolve batch core and the rekey
-# fast path (pipeline._resolve_batch / _rekey_batch) must replay
-# sm.resolve_step / sm.rekey_step exactly — same emitted rows (order
-# included), same carried state — across randomized multi-batch event
-# sequences.
+# Replay-wrapper parity: the vectorized resolve batch core
+# (pipeline._resolve_batch) and hop A's step (_resolve_rekey_batch) must
+# replay sm.resolve_step / sm.rekey_step exactly — same emitted rows,
+# same carried state — across randomized multi-batch event sequences.
 # ---------------------------------------------------------------------------
 
 
-def _random_flat_events(rng, n, with_parents: bool):
-    """n flat-schema events for ONE key group, shuffled timestamps,
-    mixed null/empty/real bpmn and (optionally) call-activity links."""
-    from ph_ee_nats_importer_rdbms_spark.streaming.pipeline import (
-        FLAT_SCHEMA,
-        ROUTED_SCHEMA,
-    )
+def _random_flat_events(rng, n):
+    """n flat-schema events of ONE definition key over a few instances
+    (now and then a null one): mixed null/empty/real bpmn, and
+    call-activity children that register and complete links."""
+    from ph_ee_nats_importer_rdbms_spark.streaming.pipeline import FLAT_SCHEMA
 
-    schema = ROUTED_SCHEMA if with_parents else FLAT_SCHEMA
-    cols = [f.name for f in schema.fields]
+    cols = [f.name for f in FLAT_SCHEMA.fields]
     rows = []
     for i in range(n):
-        bpmn = rng.choice([None, "", "proc-a", "proc-b"])
-        vt = rng.choice(["PROCESS_INSTANCE", "VARIABLE", "JOB"])
         rows.append(
             {
                 **{c: None for c in cols},
@@ -217,17 +212,17 @@ def _random_flat_events(rng, n, with_parents: bool):
                 "key": 100 + i,
                 "timestamp": int(rng.choice(range(1000, 1020))),
                 "record_type": "EVENT",
-                "value_type": vt,
+                "value_type": rng.choice(
+                    ["PROCESS_INSTANCE", "PROCESS_INSTANCE", "VARIABLE", "JOB"]
+                ),
                 "intent": rng.choice(
                     ["ELEMENT_ACTIVATING", "ELEMENT_COMPLETED", "CREATED"]
                 ),
-                "bpmn_process_id": bpmn,
-                "process_instance_key": 7,
+                "bpmn_process_id": rng.choice([None, "", "proc-a", "proc-b"]),
+                "process_instance_key": rng.choice([7, 8, 9, 7, 8, 9, None]),
                 "process_definition_key": 42,
-                "parent_process_instance_key": (
-                    int(rng.choice([0, 3, 9])) if with_parents and rng.random() < 0.4 else None
-                ),
-                "bpmn_element_type": rng.choice(["PROCESS", "SERVICE_TASK"]),
+                "parent_process_instance_key": rng.choice([None, -1, 0, 3, 3, 9]),
+                "bpmn_element_type": rng.choice(["PROCESS", "PROCESS", "SERVICE_TASK"]),
                 "element_id": f"el{i % 3}",
                 "name": f"v{i % 4}",
                 "value": '"x"',
@@ -253,7 +248,7 @@ def test_resolve_batch_matches_resolve_step() -> None:
 
     rng = random.Random(1307)
     for trial in range(40):
-        cols, rows = _random_flat_events(rng, rng.randint(1, 30), False)
+        cols, rows = _random_flat_events(rng, rng.randint(1, 30))
         nb = rng.randint(1, 4)
         batches = (
             [rows]
@@ -277,42 +272,111 @@ def test_resolve_batch_matches_resolve_step() -> None:
         assert vec_buffered == ref_state.buffered
 
 
-def test_rekey_batch_matches_rekey_step() -> None:
+def test_resolve_rekey_batch_matches_resolve_then_rekey_step() -> None:
+    """Hop A's step (pipeline._resolve_rekey_batch) equals sm.resolve_step
+    followed by a per-instance sm.rekey_step in _event_sort_key order:
+    the same emitted rows and the same carried state (resolution,
+    buffered rows, live links), across randomized multi-batch sequences
+    of one definition key."""
     import random
 
     import pandas as pd
 
     from ph_ee_nats_importer_rdbms_spark.streaming import pipeline as sp
-    from ph_ee_nats_importer_rdbms_spark.streaming import state as sm
 
     rng = random.Random(4113)
-    fast_hits = 0
-    for trial in range(40):
-        cols, rows = _random_flat_events(rng, rng.randint(1, 30), True)
+    held = popped = 0
+    for trial in range(60):
+        cols, rows = _random_flat_events(rng, rng.randint(1, 40))
+        # the rows enter hop A's operator with the unlinked C4 values
+        cols += ["effective_key", "child_start"]
+        for r in rows:
+            r.update(effective_key=r["process_instance_key"], child_start=False)
         nb = rng.randint(1, 4)
         batches = (
             [rows]
             if nb == 1 or len(rows) < 2
             else _batches(rng, rows, min(nb, len(rows)))
         )
-        ref_state = sm.RekeyState()
-        vec_parent = None
+        ref, links, blob = sm.ResolveState(), {}, None
         for batch in batches:
-            pdf = pd.DataFrame(batch, columns=cols)
             srt = sorted(batch, key=lambda e: (e["timestamp"], e["position"]))
-            ref_state, ref_out = sm.rekey_step(
-                ref_state, [dict(e) for e in srt]
-            )
-            if vec_parent is None:
-                fast_hits += 1  # counts candidates; the path itself decides
-            vec_parent, vec_pdf = sp._rekey_batch(vec_parent, pdf)
-            got = sp._records(vec_pdf)
+            ref, resolved = sm.resolve_step(ref, [dict(e) for e in srt])
+            by_instance: dict = {}
+            for e in sorted(resolved, key=sp._event_sort_key):
+                by_instance.setdefault(e["process_instance_key"], []).append(e)
+            want = []
+            for k, events in by_instance.items():
+                prior = links.pop(k, None)
+                st, out = sm.rekey_step(sm.RekeyState(parent_key=prior), events)
+                if st.parent_key is not None:
+                    links[k] = st.parent_key
+                elif prior is not None or any(e["child_start"] for e in out):
+                    popped += 1
+                want += out
+            held += bool(links)
+            got, blob = sp._resolve_rekey_batch(blob, pd.DataFrame(batch, columns=cols))
             key = lambda e: (e["timestamp"], e["position"])  # noqa: E731
-            assert sorted(got, key=key) == sorted(ref_out, key=key), (
+            assert sorted(sp._records(got), key=key) == sorted(want, key=key), (
                 f"trial {trial}: emitted rows diverge"
             )
-        assert vec_parent == ref_state.parent_key
-    assert fast_hits > 0
+            state = json.loads(blob)
+            assert state["resolved_bpmn"] == ref.resolved_bpmn
+            assert state["buffered"] == ref.buffered
+            assert dict(state["links"]) == links
+    assert held and popped
+
+
+def test_resolve_rekey_state_drops_a_completed_childs_link() -> None:
+    """A call-activity child's link sits in its definition's hop-A state
+    while the child runs, and leaves it with the child's COMPLETED."""
+    import pandas as pd
+
+    from ph_ee_nats_importer_rdbms_spark.streaming import pipeline as sp
+
+    cols = [f.name for f in sp._KEYED_SCHEMA.fields]
+
+    def child(ts, value_type, intent, element="PROCESS"):
+        return {
+            **{c: None for c in cols},
+            "effective_key": 101, "child_start": False,
+            "partition_id": 1, "position": ts, "timestamp": ts,
+            "value_type": value_type, "intent": intent,
+            "bpmn_process_id": "flow-tn01", "process_instance_key": 101,
+            "process_definition_key": 5002,
+            "parent_process_instance_key": 100, "bpmn_element_type": element,
+        }
+
+    out, blob = sp._resolve_rekey_batch(
+        None,
+        pd.DataFrame([child(1, "PROCESS_INSTANCE", "ELEMENT_ACTIVATING")], columns=cols),
+    )
+    assert json.loads(blob)["links"] == [[101, 100]]
+    assert out[["effective_key", "child_start"]].values.tolist() == [[100, True]]
+    out, blob = sp._resolve_rekey_batch(
+        blob,
+        pd.DataFrame(
+            [
+                child(2, "VARIABLE", "CREATED", element=None),
+                child(3, "PROCESS_INSTANCE", "ELEMENT_COMPLETED"),
+            ],
+            columns=cols,
+        ),
+    )
+    assert out["effective_key"].tolist() == [100, 100]
+    assert json.loads(blob)["links"] == []
+
+
+def test_corpus_positions_are_per_corpus() -> None:
+    """Two _corpus() calls, with other fixture events made in between,
+    give the same events, and the D1 duplicate tr-2 still sorts after
+    tr-1."""
+    first = _corpus()
+    for _ in range(20):
+        flat_event()
+    assert _corpus() == first
+    pos = {e["value"]: e["position"] for e in first if e.get("name") == "transactionId"}
+    assert pos['"tr-1"'] < pos['"tr-2"']
 
 
 # ---------------------------------------------------------------------------
@@ -322,7 +386,13 @@ def test_rekey_batch_matches_rekey_step() -> None:
 
 def _corpus() -> list[dict]:
     """A corpus exercising C4 (call activity), C5 (unresolved bpmn), D1-D4,
-    and all three entity types."""
+    and all three entity types. Its positions are numbered per corpus, so
+    every call returns the same events."""
+    with fresh_positions():
+        return _corpus_events()
+
+
+def _corpus_events() -> list[dict]:
     ev = []
     # transfer with call-activity child (parent 100, child 101)
     child_start = process_event(
@@ -513,6 +583,62 @@ def test_multi_hop_matches_batch_replay(spark, three_batch_changes):
         assert g == w, f"{name} diverges"
 
 
+def test_linked_child_row_without_definition_key_stays_on_the_child(spark, tmp_path):
+    """Hop A's C4 contract, pinned against ``batch_replay.replay_tables``.
+    The stream re-keys a call-activity child's rows through the links its
+    DEFINITION's state holds, so it needs every row of the child to carry
+    the child's definition key, as Zeebe writes them on process-instance,
+    variable and job records. A child VARIABLE that arrives with a
+    bpmnProcessId but no definition key falls in the null-definition
+    group, which does not hold the link: the stream keeps it on the
+    child's own key (a transfer row of its own, and the parent misses
+    its amount), where the batch replay, linked per instance like the
+    reference's inflightCallActivities map, moves it to the parent. The
+    other tables agree row for row."""
+    from ph_ee_nats_importer_rdbms_spark.operators.classify import parse_envelope
+    from ph_ee_nats_importer_rdbms_spark.streaming import batch_replay as br
+    from ph_ee_nats_importer_rdbms_spark.streaming import pipeline as sp
+    from ph_ee_nats_importer_rdbms_spark.streaming.replay import (
+        _ENTITY_SCHEMAS,
+        TABLES,
+    )
+
+    with fresh_positions():
+        events = [
+            process_event(100, "ELEMENT_ACTIVATING", 1_000),
+            variable_event(100, "transactionId", '"tx-A"', 2_000),
+            process_event(101, "ELEMENT_ACTIVATING", 3_000, parent=100, definition=5002),
+            variable_event(101, "amount", '"20.00"', 3_500, definition=5002),
+            variable_event(101, "amount", '"30.00"', 3_600, definition=None),
+            process_event(101, "ELEMENT_COMPLETED", 4_000, parent=100, definition=5002),
+            process_event(100, "ELEMENT_COMPLETED", 5_000),
+        ]
+    src = tmp_path / "events"
+    src.mkdir()
+    (src / "all.jsonl").write_text("\n".join(_raw_json(e) for e in events) + "\n")
+    paths = sp.run_multi_hop(spark, sp.read_raw_stream(spark, str(src)), str(tmp_path / "w"))
+    got = sp.materialize_tables(spark, paths["changes"])
+    for name, schema in _ENTITY_SCHEMAS.items():
+        got[name] = br._typed_entity(got[name], schema)
+    raw = spark.createDataFrame([(_raw_json(e),) for e in events], "value string")
+    want = br.replay_tables(spark, parse_envelope(raw))
+    for name in TABLES:
+        cols = want[name].columns
+        w = sorted(map(tuple, want[name].collect()), key=repr)
+        g = sorted(map(tuple, got[name].select(*cols).collect()), key=repr)
+        if name != "transfers":
+            assert g == w, f"{name} diverges"
+    amounts = lambda df: {  # noqa: E731
+        r["workflow_instance_key"]: (r["status"], float(r["amount"]))
+        for r in df.collect()
+    }
+    assert amounts(want["transfers"]) == {100: ("COMPLETED", 30.0)}
+    assert amounts(got["transfers"]) == {
+        100: ("COMPLETED", 20.0),
+        101: ("IN_PROGRESS", 30.0),
+    }
+
+
 def test_resolve_partition_tie_breaks_on_partition_id(spark):
     """Two truthy events for one definition key share (timestamp,
     position) on partitions 2 and 1 and arrive in that order; the
@@ -593,20 +719,21 @@ def test_multi_hop_restart_resumes_state(spark, tmp_path):
     from ph_ee_nats_importer_rdbms_spark.operators.pipeline import run_import_pipeline
     from ph_ee_nats_importer_rdbms_spark.streaming import pipeline as sp
 
-    batch_a = [
-        process_event(100, "ELEMENT_ACTIVATING", 1_000),
-        variable_event(100, "transactionId", '"tx-A"', 2_000),
-        # child activates in run 1 -> parent link must survive the restart
-        process_event(101, "ELEMENT_ACTIVATING", 3_000, parent=100, definition=5002),
-    ]
-    batch_b = [
-        # child variable in run 2 re-keys to parent via the run-1 link (C4)
-        variable_event(101, "amount", '"12.34"', 3_500, definition=5002),
-        # D1: same (instance, name, ts) as run 1 -> must be suppressed
-        variable_event(100, "transactionId", '"tx-DUP"', 2_000, position=888_888),
-        # completion in run 2 for the instance started in run 1 (C3)
-        process_event(100, "ELEMENT_COMPLETED", 5_000),
-    ]
+    with fresh_positions():
+        batch_a = [
+            process_event(100, "ELEMENT_ACTIVATING", 1_000),
+            variable_event(100, "transactionId", '"tx-A"', 2_000),
+            # child activates in run 1 -> parent link must survive the restart
+            process_event(101, "ELEMENT_ACTIVATING", 3_000, parent=100, definition=5002),
+        ]
+        batch_b = [
+            # child variable in run 2 re-keys to parent via the run-1 link (C4)
+            variable_event(101, "amount", '"12.34"', 3_500, definition=5002),
+            # D1: same (instance, name, ts) as run 1 -> must be suppressed
+            variable_event(100, "transactionId", '"tx-DUP"', 2_000, position=888_888),
+            # completion in run 2 for the instance started in run 1 (C3)
+            process_event(100, "ELEMENT_COMPLETED", 5_000),
+        ]
 
     src = tmp_path / "events"
     src.mkdir()
@@ -823,6 +950,78 @@ def test_run_deployment_requires_a_source(spark, tmp_path):
         sp.run_deployment(
             spark, str(tmp_path / "w"), lambda t: None, lambda u, s: None
         )
+
+
+def test_run_deployment_refuses_four_query_checkpoints(spark, tmp_path):
+    """A work_dir drained by the older four-query topology holds state
+    and a change log the two-query one cannot resume; it is refused with
+    an error naming the old checkpoints."""
+    from ph_ee_nats_importer_rdbms_spark.streaming import pipeline as sp
+
+    work = tmp_path / "old_work"
+    for name in ("ckpt_resolved", "ckpt_rekeyed", "ckpt_changes", "ckpt_jdbc"):
+        (work / name).mkdir(parents=True)
+    (tmp_path / "src").mkdir()
+    with pytest.raises(ValueError, match="four-query topology.*ckpt_rekeyed, ckpt_jdbc"):
+        sp.run_deployment(
+            spark, str(work), lambda t: None, lambda u, s: None,
+            source_dir=str(tmp_path / "src"), distributed=False,
+        )
+
+
+def test_run_deployment_drain_starts_two_queries(spark, tmp_path):
+    """One run_deployment drain starts exactly two streaming queries
+    (hop A and hop B with the sink in its foreachBatch): hop A writes
+    resolved/, and there is no rekeyed/ handoff and no separate sink
+    checkpoint."""
+    import os
+    import threading
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from ph_ee_nats_importer_rdbms_spark.streaming import pipeline as sp
+
+    class Count(StreamingQueryListener):
+        def __init__(self):
+            self.started, self.terminated = 0, 0
+            self.cv = threading.Condition()
+
+        def onQueryStarted(self, event):
+            with self.cv:
+                self.started += 1
+
+        def onQueryProgress(self, event):
+            pass
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            with self.cv:
+                self.terminated += 1
+                self.cv.notify_all()
+
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "all.jsonl").write_text("\n".join(_raw_json(e) for e in _corpus()) + "\n")
+    work = tmp_path / "work"
+    listener = Count()
+    spark.streams.addListener(listener)
+    try:
+        sp.run_deployment(
+            spark, str(work), lambda t: None, lambda u, s: None,
+            source_dir=str(src), distributed=False,
+        )
+        with listener.cv:
+            listener.cv.wait_for(lambda: listener.terminated >= listener.started, 30)
+    finally:
+        spark.streams.removeListener(listener)
+    assert listener.started == 2
+    assert sorted(n for n in os.listdir(work) if n.startswith("ckpt_")) == [
+        "ckpt_changes",
+        "ckpt_resolved",
+    ]
+    assert (work / "resolved").is_dir() and not (work / "rekeyed").exists()
 
 
 def test_run_deployment_end_to_end_jdbc(spark, tmp_path):

@@ -10,7 +10,8 @@ original synthetic data.
 from __future__ import annotations
 
 import json
-from typing import Any
+from contextlib import contextmanager
+from typing import Any, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -22,6 +23,18 @@ _POS = [0]
 def _next_pos() -> int:
     _POS[0] += 100
     return _POS[0]
+
+
+@contextmanager
+def fresh_positions() -> Iterator[None]:
+    """Number the events made inside the block 100, 200, ... whatever
+    the session made before, so a corpus built in it is the same on
+    every call and its explicit positions keep their order."""
+    saved, _POS[0] = _POS[0], 0
+    try:
+        yield
+    finally:
+        _POS[0] = saved
 
 
 def flat_event(**kw: Any) -> dict[str, Any]:

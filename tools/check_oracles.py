@@ -4,6 +4,11 @@ columns + order-insensitive values. Usage:
 
     python tools/check_oracles.py [sf_dir] [query ...]
 
+An entry whose oracle embeds artifacts trained on one corpus (ANN
+codebooks, BPE merges, the quality classifier) prints as ``ONLY`` (not
+counted as a failure) on a corpus of any other scale. The scale is read
+from the corpus (its ``orders`` row count), not its directory name.
+
 The comparison core (``open_oracle_connection`` / ``compare_query``) is
 shared with tests/test_full_registry.py, the pytest gate that runs the
 FULL registry at sf0.001 on every test run.
@@ -91,6 +96,58 @@ def compare_query(spark, con, name: str, sf_dir: str) -> tuple[bool, str]:
     return True, f"{len(got)} rows"
 
 
+def oracle_scale(oracle: str | None) -> str | None:
+    """The one corpus an oracle is value-exact on, or None if it holds at
+    every scale. Oracles that embed the ANN codebooks, the BPE merges or
+    the quality classifier trained on ``ORACLE_SF_BASE`` are found by one
+    literal of each of those artifacts in their SQL."""
+    from ph_ee_nats_importer_rdbms_spark.analytics import bpe, classifier, similarity
+
+    base = similarity.ORACLE_SF_BASE
+    assert bpe.ORACLE_SF_BASE == classifier.ORACLE_SF_BASE == base
+
+    def q(x: str) -> str:  # a SQL string literal's body, as the oracles write it
+        return x.replace("'", "''")
+
+    a, b = map(q, bpe.BPE_MERGES[base][0])
+    weights = classifier.NB_MODELS[base]["weights"]
+    token = min(weights)
+    probes = (
+        repr(float(similarity.IVF_CODEBOOKS[base][0][0])),
+        repr(float(similarity.PQ_CODEBOOKS[base][0][0][0])),
+        f"' {a}  {b} ', ' {a}{b} '",
+        f"('{q(token)}', {int(weights[token])})",
+    )
+    if oracle and any(p in oracle for p in probes):
+        return base
+    return None
+
+
+def corpus_scale(sf_dir: str) -> str:
+    """The TPC-H scale of the corpus in ``sf_dir`` (``sf0.001`` ...),
+    from its ``orders`` row count (1.5M rows per unit of scale)."""
+    import pyarrow.dataset as ds
+
+    rows = ds.dataset(os.path.join(sf_dir, "orders.parquet")).count_rows()
+    return f"sf{rows / 1_500_000:g}"
+
+
+def label(name: str, ok: bool, msg: str, here: str) -> tuple[str, bool]:
+    """(printed line, counts as a failure) for one compared entry on a
+    corpus of scale ``here`` (:func:`corpus_scale`). An entry whose
+    oracle is only valid at another scale is labelled as such rather
+    than passed or failed, unless either side raised; at its own scale
+    it is compared like any other."""
+    scale = oracle_scale(QUERIES[name][1])
+    errored = msg.startswith(("spark error", "duckdb error"))
+    if scale not in (None, here) and not errored:
+        return f"ONLY {name}: oracle valid only at {scale}, corpus is {here} ({msg})", False
+    if ok:
+        tag = "SKIP" if msg.startswith("no oracle") else "OK  "
+        return f"{tag} {name}: {msg}", False
+    return f"FAIL {name}: {msg}", True
+
+
 def main() -> int:
     from ph_ee_nats_importer_rdbms_spark.session import build_session
 
@@ -98,17 +155,14 @@ def main() -> int:
     only = set(sys.argv[2:])
     spark = build_session(shuffle_partitions=8)
     con = open_oracle_connection(sf_dir)
+    here = corpus_scale(sf_dir)
     failures = 0
     for name in QUERIES:
         if only and name not in only:
             continue
-        ok, msg = compare_query(spark, con, name, sf_dir)
-        if ok:
-            tag = "SKIP" if msg.startswith("no oracle") else "OK  "
-            print(f"{tag} {name}: {msg}")
-        else:
-            print(f"FAIL {name}: {msg}")
-            failures += 1
+        line, failed = label(name, *compare_query(spark, con, name, sf_dir), here)
+        print(line)
+        failures += failed
     return 1 if failures else 0
 
 
